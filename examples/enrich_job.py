@@ -19,7 +19,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 
 def main() -> None:
@@ -37,7 +37,10 @@ def main() -> None:
 
     from tiff_enrichment_pipeline_spark import geotables
     from tiff_enrichment_pipeline_spark.fixtures import dem_tiles_df
-    from tiff_enrichment_pipeline_spark.operators.lineage import RunRecorder
+    from tiff_enrichment_pipeline_spark.operators.lineage import (
+        RunRecorder,
+        observe_run,
+    )
     from tiff_enrichment_pipeline_spark.plans.enrich import enrich
 
     spark = SparkSession.builder.getOrCreate()
@@ -63,12 +66,17 @@ def main() -> None:
             else None
         ),
     )
-    result.write.mode("overwrite").parquet(f"{out_dir}/enriched")
+    # run counters observed in the write's own pass — no re-count
+    run_counters = Observation("run_counters")
+    observe_run(result, run_counters).write.mode("overwrite").parquet(
+        f"{out_dir}/enriched"
+    )
+    counters = run_counters.get
     out = spark.read.parquet(f"{out_dir}/enriched")
-    lineage, metrics = rec.finish(out)
+    lineage, metrics = rec.finish(out, counters)
     lineage.write.mode("overwrite").parquet(f"{out_dir}/lineage")
     metrics.write.mode("overwrite").parquet(f"{out_dir}/metrics")
-    print(f"ENRICHED_ROWS={out.count()}")
+    print(f"ENRICHED_ROWS={counters['rows_written']}")
 
     # S6 proper: emit real GeoTIFF files (stdlib baseline encoder, EPSG:4326
     # tags from the engine's camera model) for the payload-bearing band rows

@@ -99,6 +99,32 @@ def test_preflight_ok_and_failures(spark, tmp_path):
     assert msg.count("input ") == 2
 
 
+def test_preflight_output_is_a_regular_file(spark, tmp_path):
+    """The Hadoop-FS writability probe (create + delete of a marker file,
+    no Spark job) fails loudly when output_dir is an existing regular file,
+    and leaves no marker behind when the location is writable."""
+    import os
+
+    from conftest import SF_SMALL
+
+    from tiff_enrichment_pipeline_spark.health import (
+        HealthCheckError,
+        preflight,
+    )
+
+    ok = tmp_path / "ok"
+    assert preflight(spark, SF_SMALL, str(ok))[
+        "output_writable"
+    ] == "ok"
+    assert os.listdir(ok) == []
+
+    f = tmp_path / "a_file"
+    f.write_text("keep")
+    with pytest.raises(HealthCheckError, match=r"output .* not writable"):
+        preflight(spark, SF_SMALL, str(f))
+    assert f.read_text() == "keep"
+
+
 def test_cli_config_file_paths_not_clobbered(spark, tmp_path):
     """--config file sf_dir/output_dir must win over argparse DEFAULTS (only
     explicit positionals override the file)."""

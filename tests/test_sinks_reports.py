@@ -353,6 +353,22 @@ def test_percentiles_approx_close_to_exact(spark):
             assert abs(a - b) <= max(0.5, 0.01 * abs(a)), (et, exact[et], approx[et])
 
 
+def test_percentiles_udaf_kind_inferred_without_warning(spark):
+    """The grouped-agg pandas UDF kind comes from its type hints, not the
+    deprecated PandasUDFType argument (which warns at plan build)."""
+    import warnings
+
+    from conftest import SF_SMALL
+
+    from tiff_enrichment_pipeline_spark.queries import q_percentiles_udaf
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        df = q_percentiles_udaf(spark, SF_SMALL)
+    # grouped-agg kind: Arrow partial aggregation, not a scalar projection
+    assert "ArrowAggregatePython" in df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_upsert_preserves_partition_layout(spark, tmp_path):
     """Upserting into a partitioned image table must keep the p_* layout
     (a flattening rewrite would silently kill partition pruning)."""

@@ -9,9 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from tiff_enrichment_pipeline_spark.operators.lineage import (
+    NULL_REASON_METRICS,
     RunRecorder,
     partition_lineage,
     resume_filter,
+    run_metrics,
     surrogate_key,
 )
 from tiff_enrichment_pipeline_spark.streaming.watcher import watch_images
@@ -82,12 +84,121 @@ def test_lineage_checksum_order_insensitive(spark):
 def test_run_recorder_metrics(spark):
     rec = RunRecorder("RUN_TEST")
     out = _mini_images(spark, range(7))
-    lineage, metrics = rec.finish(out)
+    counters = {"rows_written": 7, "errors": 1, "no_gps": 2,
+                "no_station": 0, "outside_dem": 3, "outside_obs_span": 4}
+    lineage, metrics = rec.finish(out, counters)
     m = {r["metric_name"]: r["metric_value"] for r in metrics.collect()}
     assert m["pipeline_processed_files_total"] == 7.0
-    assert m["pipeline_errors_total"] == 0.0
+    assert m["pipeline_errors_total"] == 1.0
     assert m["pipeline_processing_duration_seconds"] >= 0.0
+    for k, name in NULL_REASON_METRICS.items():
+        assert m[name] == counters[k], name
     assert lineage.agg(F.sum("rows_out")).collect()[0][0] == 7
+
+
+@pytest.mark.parametrize("cluster", [None, "zorder", "hilbert"])
+def test_cli_run_counters_match_written_table(spark, tmp_path, cluster):
+    """The CLI's run counters are observed in the enrichment write itself;
+    every summary counter must equal a DuckDB recount of the written
+    table, and the metrics table must carry them. Hand-written inputs
+    cover each NULL reason: world-wide keys (key % 10 >= 8, outside the
+    DEM), capture dates outside the 1995–2001 observation history, and a
+    NULL key (no GPS). A clustered write range-partitions the rows, whose
+    bounds sampling re-runs the plan below the exchange: the counters must
+    still see each written row once."""
+    import contextlib
+    import io
+    import json
+    from datetime import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tiff_enrichment_pipeline_spark.__main__ import main
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    rows = [
+        (1, "1994-12-31"), (5, "1995-01-01"), (8, "2001-12-31"),
+        (9, "2002-01-01"), (18, "1999-03-04"), (29, "1970-01-01"),
+        (32, "2010-10-10"), (42, "1996-02-29"), (77, "2001-06-30"),
+        (None, "1998-01-01"),
+    ]
+    keys, dates = zip(*rows)
+    pq.write_table(
+        pa.table({
+            "o_orderkey": pa.array(keys, pa.int64()),
+            "o_orderdate": pa.array(
+                [datetime.fromisoformat(d) for d in dates], pa.timestamp("us")
+            ),
+        }),
+        sf / "orders.parquet",
+    )
+    pq.write_table(
+        pa.table({"s_suppkey": pa.array(range(1, 6), pa.int64())}),
+        sf / "supplier.parquet",
+    )
+    out = tmp_path / "out"
+    conf = tmp_path / "conf.json"
+    conf.write_text(json.dumps({"cluster": cluster}))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        assert main([str(sf), str(out), "--config", str(conf)]) == 0
+    summary = json.loads(buf.getvalue().strip().splitlines()[-1])
+    got = summary["counters"]
+
+    con = duckdb.connect()
+    try:
+        want = con.execute(f"""
+            SELECT count(*) AS rows_written,
+              count(*) FILTER (WHERE enrich_status IS NULL OR enrich_status
+                NOT IN ('enriched', 'no_gps')) AS errors,
+              count(*) FILTER (WHERE enrich_status = 'no_gps') AS no_gps,
+              count(*) FILTER (WHERE enrich_status = 'enriched'
+                AND weather_station_id IS NULL) AS no_station,
+              count(*) FILTER (WHERE enrich_status = 'enriched'
+                AND elevation IS NULL) AS outside_dem,
+              count(*) FILTER (WHERE enrich_status = 'enriched'
+                AND weather_station_id IS NOT NULL
+                AND weather.temp_c IS NULL) AS outside_obs_span
+            FROM read_parquet('{out}/enriched/p_bucket=*/*/*.parquet',
+                              hive_partitioning = false)
+        """).df().iloc[0].to_dict()
+    finally:
+        con.close()
+    assert got == {k: int(v) for k, v in want.items()}
+    assert summary["enriched_rows"] == got["rows_written"] == len(rows)
+    # each NULL reason is exercised, independently of the recount
+    assert got["no_gps"] == 1 and got["errors"] == 0
+    assert got["outside_dem"] >= 4  # keys 8, 9, 18, 29 are world-wide
+    assert got["outside_obs_span"] == sum(
+        k is not None and not "1995-01-01" <= d <= "2001-12-31"
+        for k, d in rows
+    )
+
+    m = {
+        r["metric_name"]: r["metric_value"]
+        for r in spark.read.parquet(str(out / "metrics")).collect()
+    }
+    assert m["pipeline_processed_files_total"] == len(rows)
+    assert m["pipeline_errors_total"] == got["errors"]
+    for k, name in NULL_REASON_METRICS.items():
+        assert m[name] == got[k], name
+    lineage = spark.read.parquet(str(out / "lineage"))
+    assert lineage.agg(F.sum("rows_out")).first()[0] == len(rows)
+
+
+def test_run_metrics_is_a_local_relation(spark):
+    """The metrics table is built from Arrow, planned as a LocalTableScan:
+    no Python RDD scan (and no Python worker) for a handful of rows."""
+    counters = dict.fromkeys(NULL_REASON_METRICS, 0)
+    counters.update(rows_written=3, errors=0)
+    plan = run_metrics(
+        "RUN_TEST", counters, 0.5, spark=spark
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
 
 
 def test_surrogate_key_deterministic(spark):

@@ -3,9 +3,17 @@
 The reference's second entry point (`python -m pipeline.micasense
 <input_dir>`, src/pipeline/micasense/__main__.py:48-62: argparse →
 load/validate config → process_all → summary JSON). Spark shape: validate
-config BEFORE building any plan, run the flagship enrichment DAG once
-(batch) or as the streaming watcher (--watch), write enriched + lineage +
-metrics tables, print a one-line JSON summary.
+config BEFORE building any plan, run the preflight health gate, then run
+the flagship enrichment DAG once (batch) or as the streaming watcher
+(--watch); ``--compact TABLE`` instead compacts an image table and exits.
+
+Batch mode spends its Spark jobs on the enrichment write: the run counters
+(rows written, errors, and why enrichment came back NULL — no GPS, no
+station, outside the DEM, outside the observation span) are an Observation
+on the written DataFrame, collected by the write itself. The lineage
+table checksums the enriched table as read back, one row per partition;
+the metrics table and the one-line JSON summary (``enriched_rows`` plus
+``counters``) carry the observed counts — the output is never re-counted.
 
 Grouping semantics follow main.py's regex classification (P1-P3), not this
 entry point's positional-band variant — the documented divergence
@@ -52,9 +60,14 @@ def main(argv: list[str] | None = None) -> int:
         overrides["output_dir"] = args.output_dir
     cfg = EnrichConfig.from_dict(overrides)
 
+    from pyspark.sql import Observation
+
     from tiff_enrichment_pipeline_spark import geotables
     from tiff_enrichment_pipeline_spark.fixtures import dem_tiles_df
-    from tiff_enrichment_pipeline_spark.operators.lineage import RunRecorder
+    from tiff_enrichment_pipeline_spark.operators.lineage import (
+        RunRecorder,
+        observe_run,
+    )
     from tiff_enrichment_pipeline_spark.plans.enrich import enrich
     from tiff_enrichment_pipeline_spark.session import get_spark
 
@@ -96,6 +109,7 @@ def main(argv: list[str] | None = None) -> int:
         else None
     )
 
+    counters = None  # batch mode: observed in the enrichment write
     if args.watch:
         from tiff_enrichment_pipeline_spark.streaming.watcher import watch_images
 
@@ -140,28 +154,33 @@ def main(argv: list[str] | None = None) -> int:
 
         # partitioned layout (id-hash bucket + coarse cell) so later reads
         # of the enriched table prune — partition_buckets from config;
-        # the weather struct is kept (parquet nests structs fine)
+        # the weather struct is kept (parquet nests structs fine). The run
+        # counters ride on the write itself (one Observation), so the
+        # written table is never re-counted.
+        run_counters = Observation("run_counters")
         write_images(
             result, f"{cfg.output_dir}/enriched",
             mode="overwrite", buckets=cfg.partition_buckets,
             cluster=cfg.cluster,
+            observe=lambda d: observe_run(d, run_counters),
         )
+        counters = run_counters.get
+        # lineage checksums the table as written, per read-back partition
         out = read_images(spark, f"{cfg.output_dir}/enriched")
-        lineage, metrics = rec.finish(out)
+        lineage, metrics = rec.finish(out, counters)
         lineage.write.mode("overwrite").parquet(f"{cfg.output_dir}/lineage")
         metrics.write.mode("overwrite").parquet(f"{cfg.output_dir}/metrics")
-        n = out.count()
+        n = counters["rows_written"]
 
-    print(
-        json.dumps(
-            {
-                "enriched_rows": n,
-                "output_dir": cfg.output_dir,
-                "wall_s": round(time.time() - t0, 2),
-                "mode": "watch" if args.watch else "batch",
-            }
-        )
-    )
+    summary = {
+        "enriched_rows": n,
+        "output_dir": cfg.output_dir,
+        "wall_s": round(time.time() - t0, 2),
+        "mode": "watch" if args.watch else "batch",
+    }
+    if counters is not None:
+        summary["counters"] = counters
+    print(json.dumps(summary))
     return 0
 
 

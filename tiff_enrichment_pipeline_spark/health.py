@@ -4,13 +4,14 @@ The reference probes Postgres, Redis, and the filesystem before any work
 (src/pipeline/main.py:411-413, src/pipeline/health.py:92-107) so a dead
 dependency fails in seconds, not mid-run. This engine has no services to
 probe — its dependencies are the Spark session, the input tables, and the
-output location — so the preflight checks exactly those, in one driver
-round-trip each:
+output location — so the preflight checks exactly those:
 
-- session alive + required configs (ANSI/UTC/AQE as session.py sets them);
+- session alive (a ``SELECT 1`` collect) and the session timezone is UTC
+  (as session.py sets it);
 - every input table present, readable, and schema-bearing (a
   ``spark.read.parquet(...).schema`` touch — metadata only, no data scan);
-- output location writable (touch + delete of a marker directory).
+- output location writable: create + delete of a ``_preflight`` marker
+  file through the Hadoop FileSystem API (any scheme, no Spark job).
 
 Returns a dict of check → 'ok' (for the summary JSON); raises
 ``HealthCheckError`` listing every failure at once, like config validation.
@@ -66,15 +67,12 @@ def preflight(
             errs.append(f"input {path}: {type(e).__name__}: {e}")
 
     if output_dir is not None:
-        marker = f"{output_dir}/_preflight"
-        try:
-            spark.range(1).write.mode("overwrite").parquet(marker)
-            from tiff_enrichment_pipeline_spark.sources.images import (
-                _hadoop_delete,
-            )
+        from tiff_enrichment_pipeline_spark.sources.images import hadoop_fs
 
-            # Hadoop FS delete, not shutil: works on hdfs/s3a/… too
-            _hadoop_delete(spark, marker)
+        try:
+            fs, marker = hadoop_fs(spark, f"{output_dir}/_preflight")
+            fs.create(marker, True).close()
+            fs.delete(marker, False)
             checks["output_writable"] = "ok"
         except Exception as e:
             errs.append(f"output {output_dir}: not writable: {e}")

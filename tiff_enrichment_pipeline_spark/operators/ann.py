@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
@@ -481,12 +482,18 @@ def write_ivf_index(
     assigned.write.mode("overwrite").partitionBy("ivf_list").parquet(
         f"{path}/index"
     )
-    spark = corpus.sparkSession
-    cent_rows = [
-        (int(i), [float(x) for x in cents[i]]) for i in range(len(cents))
-    ]
-    spark.createDataFrame(
-        cent_rows, "ivf_list int, centroid array<double>"
+    # an Arrow table plans as a LocalTableScan (a Python list would be a
+    # Python RDD scan, one Python worker for n_lists rows)
+    cent_table = pa.table(
+        {
+            "ivf_list": pa.array(range(len(cents)), pa.int32()),
+            "centroid": pa.array(
+                np.asarray(cents, np.float64).tolist(), pa.list_(pa.float64())
+            ),
+        }
+    )
+    corpus.sparkSession.createDataFrame(
+        cent_table, "ivf_list int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     return cents
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -803,18 +804,14 @@ def q_percentiles_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolated percentile — same oracle as `percentiles` (numpy's
     'linear' interpolation ≡ quantile_cont ≡ Spark percentile())."""
     import numpy as np
-    import pandas as pd  # noqa: F401
     from pyspark.sql.types import DoubleType
 
     def _p(q: float):
-        # explicit GROUPED_AGG: `from __future__ import annotations` makes
-        # hints strings, which defeats the signature-based kind inference
-        def inner(v):
+        # Series → float hints: pandas_udf infers the grouped-agg kind
+        def inner(v: pd.Series) -> float:
             return float(np.percentile(v.to_numpy(np.float64), q))
 
-        from pyspark.sql.functions import PandasUDFType
-
-        return F.pandas_udf(inner, DoubleType(), PandasUDFType.GROUPED_AGG)
+        return F.pandas_udf(inner, DoubleType())
 
     e = _t(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(

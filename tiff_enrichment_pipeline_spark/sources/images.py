@@ -21,6 +21,8 @@ Arrow batch ≤ executor-memory budget.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 IMAGE_SCHEMA = (
@@ -61,31 +63,31 @@ _PART_CELL_RES = 4
 _LAYOUT_COLS = ("p_bucket", "p_cell")  # physical columns write_images adds
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` via the Hadoop FileSystem API —
+    works on ANY configured scheme (local, hdfs, s3a, …), unlike shutil."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _hadoop_delete(spark: SparkSession, path: str) -> None:
-    """Recursive delete via the Hadoop FileSystem API — works on ANY
-    configured scheme (local, hdfs, s3a, …), unlike shutil."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).delete(p, True)
+    """Recursive delete via the Hadoop FileSystem API (any scheme)."""
+    fs, p = hadoop_fs(spark, path)
+    fs.delete(p, True)
 
 
 def hadoop_exists(spark: SparkSession, path: str) -> bool:
     """Path existence via the Hadoop FileSystem API (any scheme)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return bool(p.getFileSystem(conf).exists(p))
+    fs, p = hadoop_fs(spark, path)
+    return bool(fs.exists(p))
 
 
 def _hadoop_rename(spark: SparkSession, src: str, dst: str) -> bool:
     """Directory rename via the Hadoop FileSystem API (metadata op on
     local/HDFS) — scheme-agnostic, unlike shutil.move which treats a
     ``file:/x`` URI as a relative OS path."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    s = jvm.org.apache.hadoop.fs.Path(src)
-    return s.getFileSystem(conf).rename(s, jvm.org.apache.hadoop.fs.Path(dst))
+    fs, s = hadoop_fs(spark, src)
+    return fs.rename(s, spark._jvm.org.apache.hadoop.fs.Path(dst))
 
 
 def _scheme_of(location: str) -> str | None:
@@ -104,10 +106,17 @@ def _write_layout_meta(spark: SparkSession, location: str, buckets: int) -> None
     Underscore-prefixed paths are invisible to Spark's table file index, so
     reads of ``location`` never see it; upserts read it back to re-derive
     p_bucket with the ORIGINAL modulus (a different modulus would scatter a
-    key's rows across bucket directories over successive merges)."""
-    spark.createDataFrame([(int(buckets),)], "buckets int").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{location}/_layout")
+    key's rows across bucket directories over successive merges).
+
+    Built from an Arrow table, so Spark plans it as a LocalTableScan; a
+    Python list would plan a Python RDD scan that starts a Python worker
+    to write one row."""
+    import pyarrow as pa
+
+    layout = pa.table({"buckets": pa.array([int(buckets)], pa.int32())})
+    spark.createDataFrame(layout, "buckets int").write.mode(
+        "overwrite"
+    ).parquet(f"{location}/_layout")
 
 
 def _read_layout_meta(spark: SparkSession, location: str) -> int | None:
@@ -126,6 +135,7 @@ def write_images(
     cluster: str | None = None,
     cluster_partitions: int | None = None,
     coalesce_per_dir: bool = False,
+    observe: Callable[[DataFrame], DataFrame] | None = None,
 ) -> None:
     """Write the image table with the layout the reads depend on at 100 TB:
     ``bucket(N, image_id)`` for uniform write distribution + a coarse cell
@@ -147,10 +157,19 @@ def write_images(
     Hilbert index (grid.with_hilbert) — consecutive curve positions are
     always grid-adjacent, so file envelopes are tighter than the
     z-curve's at its row-boundary jumps (what S2/DataBricks liquid
-    clustering exploit). Orthogonal to the directory layout."""
+    clustering exploit). Orthogonal to the directory layout.
+
+    ``observe``: applied to the rows exactly as written — above the
+    clustering exchange, whose range sampling re-runs its input — so a
+    ``DataFrame.observe`` it attaches (operators.lineage.observe_run)
+    counts each written row once."""
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
+
+    def _as_written(d: DataFrame) -> DataFrame:
+        d = _clustered(d)
+        return observe(d) if observe is not None else d
 
     def _clustered(d: DataFrame) -> DataFrame:
         if cluster is None:
@@ -175,7 +194,7 @@ def write_images(
         return ranged.sortWithinPartitions("_z").drop("_z")
 
     if "/" not in location and iceberg_available(spark):
-        writer = _clustered(df).writeTo(location)
+        writer = _as_written(df).writeTo(location)
         if mode == "append":
             writer.append()
         else:
@@ -184,7 +203,7 @@ def write_images(
             writer.createOrReplace()
         return
     if not partition:
-        _clustered(df).write.mode(mode).parquet(location)
+        _as_written(df).write.mode(mode).parquet(location)
         return
     from tiff_enrichment_pipeline_spark import grid
 
@@ -202,7 +221,7 @@ def write_images(
             stacklevel=2,
         )
         buckets = recorded
-    out = _clustered(df).withColumn(
+    out = _as_written(df).withColumn(
         "p_bucket", F.pmod(F.xxhash64(F.col("image_id")), F.lit(buckets))
     )
     part_cols = ["p_bucket"]
@@ -308,10 +327,7 @@ def _swap_rewrite(
 
 def _count_data_files(spark: SparkSession, location: str) -> int:
     """Recursive parquet data-file count via the Hadoop FS API."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(location)
-    fs = p.getFileSystem(conf)
+    fs, p = hadoop_fs(spark, location)
     n = 0
     it = fs.listFiles(p, True)
     while it.hasNext():
