@@ -72,14 +72,20 @@ def test_pip_concave_even_odd(spark):
 
 def test_knn_exact_vs_bruteforce(spark):
     """kNN join must equal brute-force for every image, including images far
-    outside station coverage (fallback path)."""
+    outside station coverage (fallback path); null/NaN-GPS rows must yield
+    NO fabricated matches."""
     sf = "/root/testdata/sf0.001"
     img = geotables.images_geo(spark, sf).select("image_id", "lon", "lat").limit(200)
+    bad = spark.createDataFrame(
+        [(-1, None, None), (-2, float("nan"), 52.0), (-3, 4.9, None)],
+        "image_id long, lon double, lat double",
+    )
     st = geotables.stations(spark, sf)
     got = {
         (r["image_id"], r["rank"]): r["station_id"]
-        for r in knn_station_join(img, st, k=3).collect()
+        for r in knn_station_join(img.unionByName(bad), st, k=3).collect()
     }
+    assert not any(iid < 0 for iid, _ in got)  # no-GPS rows emit no rows
     stations = st.collect()
     for r in img.collect():
         dists = sorted(
@@ -419,8 +425,8 @@ def test_dated_weather_prune_preserves_left_join(spark):
     """Obs-date pruning (VERDICT r3 #5) must be exact-preserving in the
     hardest case: every probe date OUTSIDE the observation history. The
     pruned build side becomes empty, and the LEFT join must still emit
-    every probe row with NULL obs columns — identical to the unpruned
-    result."""
+    every probe row with NULL obs columns — on both the packed broadcast
+    and the row-level shuffle path."""
     from tiff_enrichment_pipeline_spark.operators.knn_join import (
         nearest_station_dated,
     )
@@ -444,13 +450,13 @@ def test_dated_weather_prune_preserves_left_join(spark):
         "station_id", F.col("obs_date").cast("date").alias("obs_date"),
         "obs_temp_c",
     )
-    for prune in (True, False):
+    for broadcast_obs in (True, False):
         out = nearest_station_dated(
-            img, st, obs, prune_obs_dates=prune
+            img, st, obs, broadcast_obs=broadcast_obs
         ).orderBy("image_id").collect()
-        assert [r["image_id"] for r in out] == [1, 2], prune
-        assert all(r["obs_temp_c"] is None for r in out), prune
-        assert all(r["station_id"] == 10 for r in out), prune
+        assert [r["image_id"] for r in out] == [1, 2], broadcast_obs
+        assert all(r["obs_temp_c"] is None for r in out), broadcast_obs
+        assert all(r["station_id"] == 10 for r in out), broadcast_obs
 
     # and an empty probe side: the min/max aggregate returns NULLs — the
     # pruning must degrade to a no-op, not raise
@@ -459,10 +465,11 @@ def test_dated_weather_prune_preserves_left_join(spark):
 
 
 def test_dated_weather_packed_equals_row_join_on_sparse_obs(spark):
-    """pack_obs=True (the r5 default broadcast strategy) must be
-    value-identical to the row-level (station_id, date) join even when a
-    station's history has GAPS — the dense O(1) index does not apply and
-    the per-station linear fallback must carry exactness. Covers: dense
+    """The packed broadcast lookup (broadcast_obs=True) must be
+    value-identical to the row-level (station_id, date) shuffle join
+    (broadcast_obs=False) even when a station's history has GAPS — the
+    dense O(1) index does not apply and the per-station date-offset
+    lookup must carry exactness. Covers: dense
     station, gapped station, station with no obs at all, probe date
     inside a gap, probe date outside the history."""
     from tiff_enrichment_pipeline_spark.operators.knn_join import (
@@ -497,8 +504,8 @@ def test_dated_weather_packed_equals_row_join_on_sparse_obs(spark):
     )
     cols = ["image_id", "station_id", "obs_temp_c"]
 
-    def rows(pack):
-        got = nearest_station_dated(img, st, obs, pack_obs=pack)
+    def rows(broadcast_obs):
+        got = nearest_station_dated(img, st, obs, broadcast_obs=broadcast_obs)
         return {
             r["image_id"]: (r["station_id"], r["obs_temp_c"])
             for r in got.select(cols).collect()
@@ -551,7 +558,7 @@ def test_dated_weather_packed_duplicates_and_null_dates(spark):
     )
     got = {
         r["image_id"]: r["obs_temp_c"]
-        for r in nearest_station_dated(img, st, obs, pack_obs=True).collect()
+        for r in nearest_station_dated(img, st, obs).collect()
     }
     assert got[1] is None    # in-gap: was 1.5 (wrong dup payload) pre-fix
     assert got[2] == 3.0     # real date still resolves (linear fallback)
@@ -561,7 +568,7 @@ def test_dated_weather_packed_duplicates_and_null_dates(spark):
     dup_probe = img.filter(F.col("image_id") == 1).withColumn(
         "captured_at", F.lit("1999-01-01 10:00:00").cast("timestamp")
     )
-    rows = nearest_station_dated(dup_probe, st, obs, pack_obs=True).collect()
+    rows = nearest_station_dated(dup_probe, st, obs).collect()
     assert len(rows) == 1 and rows[0]["obs_temp_c"] == 1.0
 
 
@@ -595,15 +602,17 @@ def test_packed_obs_generator_equals_pack_build(spark):
         assert d[sid]["_obs_dense"] is True
 
 
-def test_packed_obs_columnar_lookup_equals_v1(spark):
-    """The columnar (v2) packed layout + lookup must reproduce the v1
-    array-of-structs results exactly — including SPARSE stations (every
-    3rd day only → non-dense path), duplicate dates (first-in-sorted-
-    order contract) and out-of-span probe dates (NULL payloads)."""
+def test_packed_obs_lookup_matches_duckdb_reference(spark):
+    """pack_observations_columnar + packed_obs_lookup must reproduce the
+    packed contract, computed independently in DuckDB: per (station,
+    date) the first entry in (date, payload) sort order; NULL payloads on
+    a gap, outside the span, or for a station without observations.
+    Covers SPARSE stations (every 3rd day → non-dense path) and duplicate
+    keys whose extra entry sorts first or last."""
+    import duckdb
     from pyspark.sql import functions as F
 
     from tiff_enrichment_pipeline_spark.operators.knn_join import (
-        pack_observations,
         pack_observations_columnar,
         packed_obs_lookup,
     )
@@ -612,17 +621,20 @@ def test_packed_obs_columnar_lookup_equals_v1(spark):
     obs = geotables.weather_observations(spark, sf).withColumnRenamed(
         "obs_date", "weather_historical_date"
     )
-    # sparse: keep every 3rd day; duplicate one (station, date) key with a
-    # different payload so the first-in-sorted-order contract is exercised
+    day0 = F.lit(geotables.OBS_START).cast("date")
     sparse = obs.filter(
-        F.datediff(
-            F.col("weather_historical_date"),
-            F.lit(geotables.OBS_START).cast("date"),
-        )
-        % 3
-        == 0
+        F.datediff(F.col("weather_historical_date"), day0) % 3 == 0
     )
-    dup = sparse.limit(1).withColumn("obs_temp_c", F.lit(99.0))
+    # duplicate two keys: station 1's extra entry sorts FIRST (-99 <
+    # anything), station 2's sorts LAST (99 > anything)
+    first_day = F.col("weather_historical_date") == day0
+    dup = sparse.filter((F.col("station_id") == 1) & first_day).withColumn(
+        "obs_temp_c", F.lit(-99.0)
+    ).unionByName(
+        sparse.filter((F.col("station_id") == 2) & first_day).withColumn(
+            "obs_temp_c", F.lit(99.0)
+        )
+    )
     sparse = sparse.unionByName(dup)
     probe = (
         geotables.images_geo(spark, sf)
@@ -635,17 +647,77 @@ def test_packed_obs_columnar_lookup_equals_v1(spark):
             (F.col("image_id") % 100 + 1).cast("long"),
         )
     )
-    v1 = packed_obs_lookup(probe, pack_observations(sparse))
-    v2 = packed_obs_lookup(probe, pack_observations_columnar(sparse))
-    a = {r["image_id"]: tuple(r) for r in v1.collect()}
-    b = {r["image_id"]: tuple(r) for r in v2.collect()}
-    assert a == b and len(a) > 0
-    # sanity: the sparse fixture really took the non-dense path
-    dense_flags = [
-        r["_obs_dense"]
-        for r in pack_observations_columnar(sparse).collect()
+    # station 1 and 2 probes on the duplicated day
+    probe = probe.unionByName(
+        spark.createDataFrame(
+            [(-1, 1), (-2, 2)], "image_id long, station_id long"
+        ).withColumn("weather_historical_date", day0)
+    )
+    pack = pack_observations_columnar(sparse)
+    payload = ["obs_temp_c", "obs_wind_ms", "obs_precip_mm"]
+    cols = ["image_id", "station_id", "weather_historical_date", *payload]
+    got = {
+        r["image_id"]: tuple(r)
+        for r in packed_obs_lookup(probe, pack).select(cols).collect()
+    }
+
+    con = duckdb.connect()
+    con.register("obs", sparse.toPandas())
+    con.register("probe", probe.toPandas())
+    ref_rows = con.execute(
+        f"""
+        WITH first_entry AS (
+          SELECT * FROM obs
+          QUALIFY ROW_NUMBER() OVER (
+            PARTITION BY station_id, weather_historical_date
+            ORDER BY {", ".join(payload)}) = 1
+        )
+        SELECT p.image_id, p.station_id, p.weather_historical_date,
+               {", ".join("o." + c for c in payload)}
+        FROM probe p LEFT JOIN first_entry o
+          ON o.station_id = p.station_id
+         AND o.weather_historical_date = p.weather_historical_date
+        """
+    ).fetchall()
+    ref = {r[0]: tuple(r) for r in ref_rows}
+    assert got == ref and len(got) > 0
+    assert got[-1][3] == -99.0 and got[-2][3] != 99.0  # sort-order rule
+    # the fixture really exercises every miss kind and the sparse path
+    assert any(v[3] is None and v[1] <= 10 for v in got.values())  # gap
+    assert any(v[1] > 10 for v in got.values())  # station without obs
+    assert any(v[3] is not None for v in got.values())
+    assert not any(r["_obs_dense"] for r in pack.collect())
+
+
+def test_packed_obs_lookup_projects_away_extra_columns(spark):
+    """A persisted pack may carry columns beyond the packed schema; the
+    lookup must project them away before the broadcast instead of leaking
+    them into the output."""
+    from tiff_enrichment_pipeline_spark.operators.knn_join import (
+        pack_observations_columnar,
+        packed_obs_lookup,
+    )
+
+    obs = spark.createDataFrame(
+        [(10, "1999-01-01", 1.0), (10, "1999-01-02", 2.0)],
+        "station_id long, weather_historical_date string, obs_temp_c double",
+    ).withColumn(
+        "weather_historical_date", F.col("weather_historical_date").cast("date")
+    )
+    probe = spark.createDataFrame(
+        [(1, 10, "1999-01-02")],
+        "image_id long, station_id long, weather_historical_date string",
+    ).withColumn(
+        "weather_historical_date", F.col("weather_historical_date").cast("date")
+    )
+    pack = pack_observations_columnar(obs).withColumn("note", F.lit("x"))
+    out = packed_obs_lookup(probe, pack)
+    assert out.columns == [
+        "station_id", "image_id", "weather_historical_date", "obs_temp_c"
     ]
-    assert not any(dense_flags)
+    assert [tuple(r) for r in out.collect()] == [
+        (10, 1, probe.first()["weather_historical_date"], 2.0)
+    ]
 
 
 def test_dated_weather_packed_obs_param(spark):
@@ -654,7 +726,7 @@ def test_dated_weather_packed_obs_param(spark):
     ambiguous or scale-unsafe combinations."""
     from tiff_enrichment_pipeline_spark.operators.knn_join import (
         nearest_station_dated,
-        pack_observations,
+        pack_observations_columnar,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -682,10 +754,10 @@ def test_dated_weather_packed_obs_param(spark):
         nearest_station_dated(
             img, st, packed_obs=packed, broadcast_obs=False
         )
-    with pytest.raises(ValueError, match="pack_observations"):
+    with pytest.raises(ValueError, match="pack_observations_columnar"):
         nearest_station_dated(img, st, packed_obs=obs)  # wrong schema
     with pytest.raises(ValueError, match="'d'"):
-        pack_observations(
+        pack_observations_columnar(
             obs.withColumnRenamed("obs_temp_c", "d"),
             date_col="obs_date",
         )
@@ -729,20 +801,20 @@ def test_enrich_packed_obs_equals_row_obs(spark):
     assert a == b and len(a) > 0
 
 def test_knn_kernel_exact_ties_and_f32_fallback():
-    """Kernel-level pins for the r7 selection rewrite (knn_join.py):
+    """Kernel-level pins for build_knn_index + topk_indexed_np against an
+    fp64 lexicographic brute force (winners and chord² values):
 
     1. Exact-tie ordering: co-located stations (identical coordinates,
        distinct ids) must be returned in ascending-id order with NO id
-       skipped — the pre-r7 argpartition selection could drop a tied id
-       at the partition boundary (top-5 of ten exact ties came back
+       skipped — an argpartition selection can drop a tied id at the
+       partition boundary (top-5 of ten exact ties came back
        800,802,803,804,805).
-    2. The fp32-prefilter fallback (_fallback_f32, far-from-coverage
-       probes) must equal a pure-fp64 lexicographic brute force on both
-       winners and (to 1 ulp) chord² values.
+    2. Probes inside index coverage (pruned per-cell lists) and far from
+       it (the fp32-prefilter full scan, _fallback_f32_scan) alike.
     """
     from tiff_enrichment_pipeline_spark.operators.knn_join import (
-        build_cell_candidates,
-        topk_bucketed_np,
+        build_knn_index,
+        topk_indexed_np,
     )
 
     rng = np.random.default_rng(7)
@@ -756,9 +828,8 @@ def test_knn_kernel_exact_ties_and_f32_fallback():
         [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)],
         axis=1,
     )
-    cand = build_cell_candidates(s_lat, s_lon, res=10, ring=2)
 
-    # probes: half inside coverage (bucketed path), half far away (fp32
+    # probes: half inside coverage (indexed path), half far away (fp32
     # fallback path)
     lat_v = np.concatenate(
         [50.8 + rng.random(300) * 1.0, -30 + rng.random(300) * 40]
@@ -767,9 +838,17 @@ def test_knn_kernel_exact_ties_and_f32_fallback():
         [3.5 + rng.random(300) * 1.0, -170 + rng.random(300) * 100]
     )
     for k in (1, 3, 5):
-        idx, d2 = topk_bucketed_np(
-            lat_v, lon_v, s_xyz, s_ids, cand, k, res=10, ring=2
+        index, res_f = build_knn_index(s_lat, s_lon, s_xyz, k, 10, 2)
+        # the near half really lands in indexed cells, the far half not
+        w = 360.0 / 2**res_f
+        cells = (
+            res_f * 2**56
+            + ((lon_v + 180.0) / w).astype(np.int64) * 2**28
+            + ((lat_v + 90.0) / w).astype(np.int64)
         )
+        covered = np.array([int(c) in index for c in cells])
+        assert covered[:300].all() and not covered[300:].any()
+        idx, d2 = topk_indexed_np(lat_v, lon_v, s_xyz, s_ids, index, k, res_f)
         p = np.stack(
             [
                 np.cos(np.radians(lat_v)) * np.cos(np.radians(lon_v)),
@@ -792,3 +871,32 @@ def test_knn_kernel_exact_ties_and_f32_fallback():
             far = slice(300, 600)
             got = idx[far].astype(np.int64)
             assert np.array_equal(got % 10, np.tile(np.arange(5), (300, 1)))
+
+
+def test_topk_indexed_rejects_unsorted_station_ids():
+    """The kernel's tie rule (argmin first occurrence) is the oracle's
+    ``ORDER BY dist, station_id`` only for id-ascending stations; two
+    co-located stations with ids [7, 3] would otherwise silently return 7
+    where the oracle wants 3. Unsorted ids must raise."""
+    from tiff_enrichment_pipeline_spark.operators.knn_join import (
+        build_knn_index,
+        topk_indexed_np,
+    )
+
+    s_lat = np.array([52.0, 52.0])
+    s_lon = np.array([5.0, 5.0])
+    rp, rl = np.radians(s_lat), np.radians(s_lon)
+    s_xyz = np.stack(
+        [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)],
+        axis=1,
+    )
+    index, res_f = build_knn_index(s_lat, s_lon, s_xyz, 1, 10, 2)
+    probe_lat, probe_lon = np.array([52.01]), np.array([5.01])
+    with pytest.raises(ValueError, match="ascending"):
+        topk_indexed_np(
+            probe_lat, probe_lon, s_xyz, np.array([7, 3]), index, 1, res_f
+        )
+    idx, _ = topk_indexed_np(
+        probe_lat, probe_lon, s_xyz, np.array([3, 7]), index, 1, res_f
+    )
+    assert idx[0, 0] == 0  # position of id 3, the oracle's tie winner

@@ -67,38 +67,23 @@ def test_pip_join_is_broadcast_with_pruned_columns(spark):
         assert "captured_at" not in scan_lines[0]
 
 
-def test_knn_hof_strategy_matches_arrow(spark):
-    """The pure-DataFrame 'hof' strategy must agree with the Arrow GEMM
-    strategy rank-for-rank (both exact by construction); null/NaN-GPS rows
-    must yield NO fabricated matches in either strategy."""
-    img = geotables.images_geo(spark, SF).select("image_id", "lon", "lat").limit(60)
-    bad = spark.createDataFrame(
-        [(-1, None, None), (-2, float("nan"), 52.0), (-3, 4.9, None)],
-        "image_id long, lon double, lat double",
-    )
-    img = img.unionByName(bad)
-    st = geotables.stations(spark, SF)
-    a = {
-        (r["image_id"], r["rank"]): r["station_id"]
-        for r in knn_station_join(img, st, k=2, strategy="arrow").collect()
-    }
-    b = {
-        (r["image_id"], r["rank"]): r["station_id"]
-        for r in knn_station_join(img, st, k=2, strategy="hof").collect()
-    }
-    assert a == b
-    assert not any(iid < 0 for iid, _ in a)  # no-GPS rows emit no rows
-
-
 def test_knn_plan_size_independent_of_station_count(spark):
-    """No literal whose expression size grows with |stations|: the hof
-    fallback and the arrow payload form must keep plan size O(1)/O(k)."""
-    import tiff_enrichment_pipeline_spark.operators.knn_join as kj
-
+    """No literal whose expression size grows with |stations|: the station
+    index rides a broadcast variable and the payloads a broadcast join, so
+    plan size stays O(k)."""
     img = geotables.images_geo(spark, SF).select("image_id", "lon", "lat").limit(5)
     st = geotables.stations(spark, SF)
-    small = kj._knn_hof(img, st.limit(10), k=2)
-    big = kj._knn_hof(img, st, k=2)
+    small = knn_station_join(img, st.limit(2), k=2)
+    # 500× the stations: a 25 × 40 grid over the fixture's NL box
+    many = spark.range(1000).select(
+        F.col("id").alias("station_id"),
+        (F.lit(3.0) + (F.col("id") % 40) * 0.1).alias("st_lon"),
+        (F.lit(50.7) + F.floor(F.col("id") / 40) * 0.1).alias("st_lat"),
+        F.lit(10.0).alias("temp_c"),
+        F.lit(1.0).alias("wind_ms"),
+        F.lit(0.0).alias("precip_mm"),
+    )
+    big = knn_station_join(img, many, k=2)
     # logical plan string length must not scale with station count
     ls, lb = len(str(small._jdf.queryExecution().logical())), len(
         str(big._jdf.queryExecution().logical())
@@ -124,22 +109,6 @@ def test_within_distance_broadcast_no_probe_shuffle(spark):
         ls = line.strip()
         if "Exchange" in ls and "BroadcastExchange" not in ls:
             assert "RoundRobinPartitioning" in ls, f"unexpected shuffle: {ls}"
-
-
-def test_knn_hof_single_probe_scan(spark):
-    """The hof strategy must scan the probe ONCE: the certified /
-    uncertified branches are a CASE inside one projection, not a
-    filter/filter/union that re-reads the source (round-2 audit item)."""
-    import tiff_enrichment_pipeline_spark.operators.knn_join as kj
-
-    img = geotables.images_geo(spark, SF).select("image_id", "lon", "lat")
-    st = geotables.stations(spark, SF)
-    df = kj._knn_hof(img, st, k=2)
-    plan = str(df._jdf.queryExecution().optimizedPlan())
-    # the probe (orders-derived) relation must appear exactly once; the
-    # tiny station dim (supplier-derived) may appear in both the ring and
-    # fallback builds
-    assert plan.count("Relation [o_orderkey") == 1, plan
 
 
 def test_streaming_reuses_real_enrich(spark, tmp_path):
@@ -245,7 +214,7 @@ def test_zonal_elevation_plan_quality(spark):
 def test_dated_weather_obs_dim_is_date_pruned(spark):
     """The obs build side must carry the probe-span date filter BEFORE its
     broadcast (VERDICT r3 #5): the plan's obs-side subtree contains a
-    filter on the composite date key; disabling the knob removes it."""
+    filter on the composite date key."""
     from tiff_enrichment_pipeline_spark.operators.knn_join import (
         nearest_station_dated,
     )
@@ -256,25 +225,21 @@ def test_dated_weather_obs_dim_is_date_pruned(spark):
     st = geotables.stations(spark, SF)
     obs = geotables.weather_observations(spark, SF)
 
-    def has_date_filter(prune: bool) -> bool:
-        df = nearest_station_dated(img, st, obs, prune_obs_dates=prune)
-        opt = df._jdf.queryExecution().optimizedPlan().toString()
-        # the span bounds may surface as a standalone Filter or be folded
-        # into the broadcast cross-join's condition (Catalyst rewrites
-        # filter-above-crossJoin into a join condition)
-        return any(
-            ("Filter" in line or "Join" in line)
-            and (">=" in line and "<=" in line)
-            and ("obs_date" in line or "weather_historical_date" in line)
-            for line in opt.splitlines()
-        )
-
-    assert has_date_filter(True)
-    assert not has_date_filter(False)
+    df = nearest_station_dated(img, st, obs)
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    # the span bounds may surface as a standalone Filter or be folded
+    # into the broadcast cross-join's condition (Catalyst rewrites
+    # filter-above-crossJoin into a join condition)
+    assert any(
+        ("Filter" in line or "Join" in line)
+        and (">=" in line and "<=" in line)
+        and ("obs_date" in line or "weather_historical_date" in line)
+        for line in opt.splitlines()
+    )
 
 
 def test_dated_weather_packed_plan_shape(spark):
-    """pack_obs=True (the r5 default): the probe side must never
+    """The packed broadcast lookup (the default): the probe side must never
     hash-shuffle — its only exchanges are broadcasts — and the ONE hash
     exchange in the whole plan is the obs-side station groupBy that
     builds the packed dim (that shuffle carries the small dim, not the

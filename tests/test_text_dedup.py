@@ -598,12 +598,15 @@ def test_tokens_whitespace_edges_match_sql_twin(spark):
 
 def test_pack_observations_empty_payload_and_enrich_arg_guard(spark):
     """r6 review findings: payload_cols=[] must mean 'no payload packed'
-    (not 'default to everything'), and enrich() must reject
-    observations= + packed_obs= together like nearest_station_dated."""
+    (not 'default to everything') and still be a pack the lookup accepts,
+    and enrich() must reject observations= + packed_obs= together like
+    nearest_station_dated."""
     from tiff_enrichment_pipeline_spark import geotables
     from tiff_enrichment_pipeline_spark.fixtures import dem_tiles_df
     from tiff_enrichment_pipeline_spark.operators.knn_join import (
-        pack_observations,
+        PACKED_OBS_V2_COLS,
+        pack_observations_columnar,
+        packed_obs_lookup,
     )
     from tiff_enrichment_pipeline_spark.plans.enrich import enrich
 
@@ -611,9 +614,22 @@ def test_pack_observations_empty_payload_and_enrich_arg_guard(spark):
     obs = geotables.weather_observations(spark, sf).withColumnRenamed(
         "obs_date", "weather_historical_date"
     )
-    packed = pack_observations(obs, payload_cols=[])
-    entry_t = packed.schema["_obs_entries"].dataType.elementType
-    assert entry_t.names == ["d"]  # date only, nothing else packed
+    packed = pack_observations_columnar(obs, payload_cols=[])
+    # date presence only: no _obsv_ payload array packed
+    assert tuple(packed.columns) == PACKED_OBS_V2_COLS
+    probe = (
+        geotables.images_geo(spark, sf)
+        .select(
+            (F.col("image_id") % 10 + 1).cast("long").alias("station_id"),
+            "image_id",
+            F.to_date("captured_at").alias("weather_historical_date"),
+        )
+    )
+    out = packed_obs_lookup(probe, packed)
+    assert out.columns == probe.columns
+    assert sorted(map(tuple, out.collect())) == sorted(
+        map(tuple, probe.collect())
+    )
 
     with pytest.raises(ValueError, match="at most one"):
         enrich(

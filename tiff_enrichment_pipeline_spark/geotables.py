@@ -251,8 +251,9 @@ def weather_observations_packed(
 
     ``span_of`` (r8): clamp the packed history to the LAZY
     [min, max] of ``to_date(span_of[span_ts])`` — the exact-preserving
-    prune of nearest_station_dated's ``prune_obs_dates``, applied at
-    generation time so out-of-span entries are never even built (the
+    date-span cut nearest_station_dated applies to a row-level
+    ``observations`` dim, applied at generation time so out-of-span
+    entries are never even built (the
     probe's span covers every date the LEFT join can match; clamped-out
     dates resolve to NULL payloads either way). The span aggregate rides
     a broadcast 1-row crossJoin, so it runs inside the consuming query's

@@ -45,7 +45,7 @@ def fused_station_dem_lookup(
     results are exact for ANY setting; they only trade candidate-set size
     against fallback frequency."""
     st_rows = stations.collect()
-    # id-ascending layout → kernel argmin fast path (see knn_join.py)
+    # id-ascending layout: the kernel's tie rule requires it (knn_join.py)
     st_rows.sort(key=lambda r: r["station_id"])
     s_lat = np.array([r["st_lat"] for r in st_rows], dtype=np.float64)
     s_lon = np.array([r["st_lon"] for r in st_rows], dtype=np.float64)

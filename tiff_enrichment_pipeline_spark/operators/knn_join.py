@@ -1,34 +1,41 @@
-"""kNN weather-station join — shuffle-free, trig-free inner loop.
+"""kNN weather-station join — exact nearest stations in one Arrow map stage.
 
 Re-creates the reference's declared nearest-station weather enrichment
 (open_meteo source, JSONB weather payload keyed to the image point;
 reference: scripts/create-tables.sql:128-132, scripts/init-db.sql:60) as a
-provably-exact kNN join (SURVEY.md J6, W5). Design for the 100 TB side:
+provably-exact kNN join (SURVEY.md J6, W5). Design:
 
-- **No shuffle of the probe.** Build side (stations) is expanded into every
-  cell of a Chebyshev k-ring, grouped to ``cell → array<station>`` and
-  broadcast; the probe equi-joins on its own cell (broadcast hash join) and
-  everything after is a projection inside whole-stage codegen.
-- **No trig per candidate.** Both sides precompute unit-sphere coordinates
-  (x, y, z); the ranking key is the squared 3-D chord, which is strictly
-  monotonic in great-circle distance — so ordering (and hence kNN) is
-  exact. arcsin runs once per *selected* neighbor, not per candidate.
-- **Cheap sort.** Candidates are keyed as 3-field structs
-  (d2, station_id, array index); the payload struct is only rebuilt for the
-  k winners. station_id is the deterministic tie-break (matches the SQL
-  oracle's ``ORDER BY dist, station_id``).
-- **Exactness guarantee + fallback.** Ring answers are certified iff the
-  k-th chord ≤ chord(ring-boundary distance); uncertified rows (sparse
-  regions) split off and rescan the full station table, attached as a
-  single broadcast row (1-row crossJoin of a collect_list aggregate) —
-  plan size O(1) in |stations|, array materialized only for the
-  uncertified split. Wrong answers are impossible; sparseness only costs
-  comparisons.
-- **Null-GPS gated.** Missing/NaN coordinates yield NULL knn (array form)
-  or no rows (exploded form) — never a fabricated match.
+- **Build-certified per-cell index** (:func:`build_knn_index`). The
+  station dimension is collected once, sorted by station_id and indexed
+  on a fine lat/lon grid: every cell near a station maps to the station
+  positions whose list provably contains the exact top-k for EVERY point
+  of the cell (triangle-inequality prune from the cell center). Index,
+  unit-sphere station coordinates and ids ride one broadcast.
+- **Trig-free GEMM kernel** (:func:`topk_indexed_np`, inside a pandas
+  UDF). The ranking key is the squared 3-D chord ``2 − 2·p·s`` of unit
+  vectors, strictly monotonic in great-circle distance, so ordering is
+  exact; a batch is one pooled GEMM over its cells' lists plus k masked
+  argmin passes. Stations are id-ascending, so argmin's first-occurrence
+  rule IS the SQL oracle's ``ORDER BY dist, station_id`` tie-break.
+  arcsin runs once per winner, not per candidate.
+- **fp32-prefilter full scan for probes outside coverage**
+  (:func:`_fallback_f32_scan`): an fp32 GEMM against every station keeps
+  the candidates within a margin of the fp32 k-th best, re-ranked in fp64
+  — exact, at half the memory traffic of an fp64 scan.
+- **Winner payloads re-attached by a broadcast join on ``_st_idx``**: the
+  UDF returns only (station position, chord²) per rank; the station
+  columns come back from a broadcast ``(_st_idx, station cols…)`` table.
+  No exchange is keyed by anything geographic, so hot cells cannot skew a
+  stage, and plan size is independent of |stations|.
+- **Null-GPS gated.** Missing/NaN coordinates yield NULL payloads
+  (:func:`knn_nearest`) or no rows (:func:`knn_station_join`) — never a
+  fabricated match.
 
-Geographic hot-cell skew cannot concentrate work here: there is no
-exchange keyed by anything geographic (it is a pure map stage).
+Dated weather (:func:`nearest_station_dated`) adds the capture date: the
+(station_id, date) observation dimension is packed into one row per
+station with one primitive array per payload column
+(:func:`pack_observations_columnar`), broadcast, and read by day offset
+(:func:`packed_obs_lookup`).
 """
 
 from __future__ import annotations
@@ -38,22 +45,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tiff_enrichment_pipeline_spark import grid
-
-M_PER_DEG = 2.0 * 3.141592653589793 * 6371000.0 / 360.0
 EARTH_R = 6371000.0  # reference: core/validation.py:88
 
-#: fp32-prefilter exclusion margin (see _fallback_f32): worst-case
+#: fp32-prefilter exclusion margin (see _fallback_f32_scan): worst-case
 #: |fp32−fp64| of 2−2·dot3 on unit vectors is < 2e-6; 1e-4 is a 50×
 #: safety factor, still excluding everything not within ~10 m-equivalent
 #: chord² of the k-th best.
 _F32_MARGIN = np.float32(1e-4)
-
-
-def _xyz(lat: Column, lon: Column) -> tuple[Column, Column, Column]:
-    """Unit-sphere coordinates of a (lat, lon) point."""
-    rl, rp = F.radians(lon), F.radians(lat)
-    return F.cos(rp) * F.cos(rl), F.cos(rp) * F.sin(rl), F.sin(rp)
 
 
 def _chord2_to_m(d2: Column) -> Column:
@@ -71,274 +69,6 @@ def _chord2_to_m(d2: Column) -> Column:
     )
 
 
-def _m_to_chord2(meters: Column) -> Column:
-    import math
-
-    half = meters / F.lit(2.0 * EARTH_R)
-    s = F.sin(F.least(half, F.lit(math.pi / 2)))
-    return F.lit(4.0) * s * s
-
-
-def build_cell_candidates(
-    s_lat: "np.ndarray", s_lon: "np.ndarray", res: int, ring: int
-) -> dict[int, "np.ndarray"]:
-    """cell id → int32 station indices within the Chebyshev ring (numpy
-    twin of stations_by_cell, used inside Arrow UDFs).
-
-    Fully vectorized (r7): the (station × ring²) cell matrix is built by
-    broadcasting and split into per-cell index arrays via one lexsort —
-    the per-station Python loop cost 0.39 s at 10k stations (it runs
-    driver-side on EVERY kNN query build). Candidate order within a cell
-    stays ascending-si (the lexsort minor key), which the kernel's
-    argmin tie rule relies on when station ids are sorted."""
-    nx, ny = 2**res, 2 ** (res - 1)
-    w = 360.0 / nx
-    ix = np.clip(((s_lon + 180.0) / w).astype(np.int64), 0, nx - 1)
-    iy = np.clip(((s_lat + 90.0) / w).astype(np.int64), 0, ny - 1)
-    base = np.int64(res) * np.int64(2**56)
-    d = np.arange(-ring, ring + 1, dtype=np.int64)
-    nix = (ix[:, None] + d[None, :]) % nx
-    niy = iy[:, None] + d[None, :]
-    cells = base + nix[:, :, None] * np.int64(2**28) + niy[:, None, :]
-    vmask = np.broadcast_to(((niy >= 0) & (niy < ny))[:, None, :],
-                            cells.shape)
-    si = np.broadcast_to(
-        np.arange(len(s_lat), dtype=np.int32)[:, None, None], cells.shape
-    )
-    c = cells[vmask]
-    s = si[vmask]
-    order = np.lexsort((s, c))
-    c, s = c[order], s[order]
-    starts = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
-    bounds = np.r_[starts, len(c)]
-    return {
-        int(c[starts[i]]): s[bounds[i]:bounds[i + 1]].copy()
-        for i in range(len(starts))
-    }
-
-
-def topk_bucketed_np(
-    lat_v: "np.ndarray",
-    lon_v: "np.ndarray",
-    S_xyz: "np.ndarray",
-    s_ids: "np.ndarray",
-    cand_by_cell: dict[int, "np.ndarray"],
-    k: int,
-    res: int,
-    ring: int,
-):
-    """Exact kNN for a batch: cell-bucketed GEMM + certified fallback.
-
-    Returns (idx, d2) arrays of shape (n, k), NaN where no GPS. The
-    bucketed pass touches only ~|ring candidates| stations per row (memory
-    traffic ∝ candidates, not |stations| — the property that keeps Arrow
-    workers bandwidth-scalable); rows whose k-th candidate cannot be
-    certified closer than the ring boundary rescan all stations, exactly.
-    Ordering ties break on station id (matches the SQL oracle).
-
-    Selection is POOLED across cells (r7): the per-cell BLAS GEMMs are
-    unchanged (so every d2 is bit-identical to the per-cell formulation
-    and the ordering the oracle checks can't move), but their results land
-    in one inf-padded ``(batch, max_cand)`` buffer and a single
-    argpartition + lexsort ranks the whole batch. The per-cell version
-    spent 47% of kernel time in ~100 tiny argpartition calls per 10k
-    batch (cProfile, sf0.1 shapes); pooling is ~2× end-to-end and
-    per-batch cost no longer depends on how many cells a batch spans.
-    """
-    import math
-
-    n = len(lat_v)
-    out_idx = np.full((n, k), np.nan)
-    out_d2 = np.full((n, k), np.nan)
-    valid = ~np.isnan(lat_v) & ~np.isnan(lon_v)
-    if not valid.any():
-        return out_idx, out_d2
-
-    rp = np.radians(lat_v)
-    rl = np.radians(lon_v)
-    P = np.stack(
-        [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)], axis=1
-    )
-    nx = 2**res
-    ny = 2 ** (res - 1)
-    w = 360.0 / nx
-    ix = np.clip(((lon_v + 180.0) / w), 0, nx - 1)
-    iy = np.clip(((lat_v + 90.0) / w), 0, ny - 1)
-    key = np.where(
-        valid,
-        np.int64(res) * np.int64(2**56)
-        + np.nan_to_num(ix).astype(np.int64) * np.int64(2**28)
-        + np.nan_to_num(iy).astype(np.int64),
-        np.int64(-1),
-    )
-    # guard chord² per row: ring-boundary distance in chord space
-    m_per_deg = 2.0 * math.pi * EARTH_R / 360.0
-    g_m = (
-        ring * w * m_per_deg
-        * np.cos(np.radians(np.minimum(np.abs(np.nan_to_num(lat_v)) + ring * w, 89.9)))
-    )
-    g_half = np.minimum(g_m / (2.0 * EARTH_R), math.pi / 2)
-    guard_c2 = (2.0 * np.sin(g_half)) ** 2
-
-    kk = min(k, S_xyz.shape[0])
-    # id-ascending station layout ⇒ np.argmin's first-occurrence tie rule
-    # IS the (d2, station_id) lexicographic order the oracle uses, so
-    # selection can be kk masked argmin passes (one vectorized min-reduce
-    # each) instead of argpartition+lexsort — argpartition was 47% of
-    # kernel time (r7 cProfile). _knn_arrow_idx and the fused lookup sort
-    # their collected stations to hit this path; unsorted callers get the
-    # original lexsort path, value-identical either way.
-    ids_ascending = bool(np.all(s_ids[:-1] <= s_ids[1:]))
-    S32 = S_xyz.T.astype(np.float32) if ids_ascending else None
-
-    def _argmin_topk(d2: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
-        """(columns, d2) of the kk smallest per row, ascending (d2, col).
-        Mutates d2 (selected entries → +inf)."""
-        bn = d2.shape[0]
-        ar = np.arange(bn)
-        sel = np.empty((bn, kk), dtype=np.int64)
-        seld = np.empty((bn, kk))
-        for j in range(kk):
-            jj = np.argmin(d2, axis=1)
-            sel[:, j] = jj
-            seld[:, j] = d2[ar, jj]
-            if j + 1 < kk:
-                d2[ar, jj] = np.inf
-        return sel, seld
-
-    def _fallback_f32(rows: "np.ndarray") -> None:
-        """Full-table scan via fp32 prefilter + fp64 recheck — EXACT.
-
-        The fp32 GEMM halves the dominant memory traffic of the
-        all-stations pass (world-region probes: ~half of kernel time at
-        sf0.1 shapes). Exactness: a station is excluded only if its fp32
-        d2 exceeds the fp32 k-th best by _F32_MARGIN, and the worst-case
-        |fp32−fp64| error of 2−2·dot3 on unit vectors is < 2e-6 ≪ the
-        1e-4 margin, so every possible fp64 top-k member survives the
-        prefilter; survivors are re-ranked in fp64. Rows where the margin
-        test can't certify (≥ mm near-ties — pathological co-located
-        stations) rerun the plain fp64 path."""
-        width = S_xyz.shape[0]
-        d2f = np.float32(2.0) - np.float32(2.0) * (
-            P[rows].astype(np.float32) @ S32
-        )
-        mm = min(kk + 8, width)
-        part = np.argpartition(d2f, mm - 1, axis=1)[:, :mm]
-        pd2f = np.take_along_axis(d2f, part, axis=1)
-        kth32 = np.partition(pd2f, kk - 1, axis=1)[:, kk - 1]
-        risky = (
-            np.count_nonzero(
-                d2f <= (kth32 + _F32_MARGIN)[:, None], axis=1
-            )
-            > mm
-        )
-        part.sort(axis=1)  # ascending column == ascending station id
-        d2e = 2.0 - 2.0 * np.einsum("rd,rmd->rm", P[rows], S_xyz[part])
-        ar = np.arange(len(rows))
-        for j in range(kk):
-            jj = np.argmin(d2e, axis=1)
-            out_idx[rows, j] = part[ar, jj].astype(np.float64)
-            out_d2[rows, j] = np.maximum(d2e[ar, jj], 0.0)
-            if j + 1 < kk:
-                d2e[ar, jj] = np.inf
-        if risky.any():
-            assign(rows[risky], None)
-
-    def assign(rows: "np.ndarray", cand: "np.ndarray | None") -> "np.ndarray":
-        """top-k for rows against cand (None = all); returns certified mask."""
-        Sc = S_xyz if cand is None else S_xyz[cand]
-        ids = s_ids if cand is None else s_ids[cand]
-        d2 = 2.0 - 2.0 * (P[rows] @ Sc.T)
-        if ids_ascending:
-            # cand arrays are built in station order (build_cell_candidates
-            # appends ascending si), so columns are id-ascending too
-            sel, seld = _argmin_topk(d2)
-            sd2 = np.maximum(seld, 0.0)
-        elif kk < d2.shape[1]:
-            part = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-            pd2 = np.take_along_axis(d2, part, axis=1)
-            # ascending d2, then station id — the oracle's tie-break
-            order = np.lexsort((ids[part], pd2), axis=1)[:, :kk]
-            sel = np.take_along_axis(part, order, axis=1)
-            sd2 = np.maximum(np.take_along_axis(pd2, order, axis=1), 0.0)
-        else:
-            order = np.lexsort(
-                (np.broadcast_to(ids, d2.shape), d2), axis=1
-            )[:, :kk]
-            sel = order
-            sd2 = np.maximum(np.take_along_axis(d2, order, axis=1), 0.0)
-        gi = sel if cand is None else cand[sel]
-        out_idx[rows] = gi.astype(np.float64)
-        out_d2[rows] = sd2
-        if cand is None:
-            return np.ones(len(rows), dtype=bool)
-        return (d2.shape[1] >= kk) & (sd2[:, kk - 1] <= guard_c2[rows])
-
-    order = np.argsort(key, kind="stable")
-    sk = key[order]
-    starts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
-    bounds = np.r_[starts, len(sk)]
-    fallback: list[np.ndarray] = []
-    seg_rows: list[np.ndarray] = []
-    seg_cand: list[np.ndarray] = []
-    for gi in range(len(starts)):
-        if sk[starts[gi]] == -1:
-            continue
-        rows = order[bounds[gi]:bounds[gi + 1]]
-        cand = cand_by_cell.get(int(sk[starts[gi]]))
-        if cand is None or len(cand) < kk:
-            fallback.append(rows)
-            continue
-        seg_rows.append(rows)
-        seg_cand.append(cand)
-    if seg_rows:
-        mb = max(len(c) for c in seg_cand)
-        bn = sum(len(r) for r in seg_rows)
-        rix = np.concatenate(seg_rows)
-        d2buf = np.empty((bn, mb))
-        gidx = np.empty(bn, dtype=np.int64)
-        gc = np.zeros((len(seg_cand), mb), dtype=np.int64)
-        pos = 0
-        for g, (rows, cand) in enumerate(zip(seg_rows, seg_cand)):
-            cw = len(cand)
-            # identical float ops to the per-cell formulation: BLAS
-            # (rows,3)@(3,cw) on the un-padded candidate slice
-            d2buf[pos:pos + len(rows), :cw] = (
-                2.0 - 2.0 * (P[rows] @ S_xyz[cand].T)
-            )
-            d2buf[pos:pos + len(rows), cw:] = np.inf
-            gc[g, :cw] = cand
-            gidx[pos:pos + len(rows)] = g
-            pos += len(rows)
-        if ids_ascending:
-            sel, seld = _argmin_topk(d2buf)
-            sd2 = np.maximum(seld, 0.0)
-            out_idx[rix] = gc[gidx[:, None], sel].astype(np.float64)
-        else:
-            if kk < mb:
-                part = np.argpartition(d2buf, kk - 1, axis=1)[:, :kk]
-            else:
-                part = np.broadcast_to(np.arange(mb), (bn, mb)).copy()
-            pd2 = np.take_along_axis(d2buf, part, axis=1)
-            pci = gc[gidx[:, None], part]  # (bn, kk) global candidate idx
-            o2 = np.lexsort((s_ids[pci], pd2), axis=1)[:, :kk]
-            sd2 = np.maximum(np.take_along_axis(pd2, o2, axis=1), 0.0)
-            out_idx[rix] = np.take_along_axis(pci, o2, axis=1).astype(
-                np.float64
-            )
-        out_d2[rix] = sd2
-        cert = sd2[:, kk - 1] <= guard_c2[rix]
-        if not cert.all():
-            fallback.append(rix[~cert])
-    if fallback:
-        fb = np.concatenate(fallback)
-        if ids_ascending and S_xyz.shape[0] > 4 * kk + 16:
-            _fallback_f32(fb)
-        else:
-            assign(fb, None)
-    return out_idx, out_d2
-
-
 def build_knn_index(
     s_lat: "np.ndarray",
     s_lon: "np.ndarray",
@@ -350,16 +80,13 @@ def build_knn_index(
     """Build-certified kNN index: cell id → int32 station indices whose
     list provably contains the exact top-k for EVERY probe in the cell.
 
-    Round-8 replacement for the runtime-certified ring lists: the ring
-    candidate set at (res=10, ring=2) grows linearly with station density
-    (median 1031 / max 2752 stations per cell at the 10k-station scale —
-    measured), so the bucketed GEMM + selection was O(|probes| × density)
-    and the sf1.0 bench spent ~40 s in it. This index prunes by geometry
-    instead:
+    The lists are pruned by geometry, so their size tracks the k-th
+    neighbour distance rather than a fixed search area:
 
     - fine grid at ``res_f = res + 2``; built cells = station-occupied
-      cells dilated by a ``4*ring`` Chebyshev ring (same geographic
-      coverage as the old (res, ring) lists — probes outside fall back).
+      cells dilated by a ``4*ring`` Chebyshev ring (the coverage of a
+      ``ring``-cell neighbourhood at ``res``) — probes outside take the
+      full-scan fallback.
     - candidates of cell c = all stations with chord(c,s) ≤ kth(c) + 2·D(c)
       where kth(c) is (an fp32 upper bound on) the k-th nearest-station
       chord from the cell CENTER and D(c) bounds the max chord from the
@@ -375,9 +102,9 @@ def build_knn_index(
     (worst-case |fp32−fp64| of 2−2·dot3 on unit vectors < 2e-6 ≪ 1e-5),
     which can only ADD candidates, never drop a true top-k member.
 
-    Median list size at the 10k-station fixture: 344 (vs 1031), and —
-    the property that matters — list size tracks k-th-neighbor density,
-    not ring area. Returns (index, res_f)."""
+    Median list size at the 10k-station fixture: 344 stations (a plain
+    (res=10, ring=2) neighbourhood holds a median 1031). Returns
+    (index, res_f)."""
     import math
 
     res_f = res + 2
@@ -485,13 +212,22 @@ def topk_indexed_np(
 ):
     """Exact kNN for a batch against a :func:`build_knn_index` index.
 
-    Same contract as :func:`topk_bucketed_np` — (idx, d2) of shape (n, k),
-    NaN where no GPS — but the per-cell lists are complete by construction,
-    so there is no runtime certification: probes in covered cells run one
-    pooled GEMM + kk argmin passes over the (much smaller) pruned lists;
-    probes outside coverage take the fp32-prefiltered full scan
-    (:func:`_fallback_f32_scan`). Requires ascending ``s_ids`` (the argmin
-    first-occurrence tie rule is the (d2, station_id) oracle order)."""
+    Returns (idx, d2) of shape (n, k): winner positions into ``S_xyz``
+    (as float64) and their chord², ascending by (d2, station_id); NaN in
+    rows without GPS. The per-cell lists are complete by construction, so
+    there is no runtime certification: probes in covered cells run one
+    pooled GEMM + kk argmin passes over the pruned lists; probes outside
+    coverage take the fp32-prefiltered full scan
+    (:func:`_fallback_f32_scan`).
+
+    ``s_ids`` must be ascending — only then is argmin's first-occurrence
+    tie rule the (d2, station_id) oracle order — and a ValueError is
+    raised when it is not."""
+    if np.any(s_ids[1:] < s_ids[:-1]):
+        raise ValueError(
+            "topk_indexed_np needs s_ids in ascending order (the tie-break "
+            "is the lowest station position); sort the stations by id first"
+        )
     n = len(lat_v)
     kk = min(k, S_xyz.shape[0])
     out_idx = np.full((n, k), np.nan)
@@ -534,9 +270,8 @@ def topk_indexed_np(
         seg_cand.append(cand)
     # pooled pass in ROW CHUNKS of ~4096: bounds the padded (rows × mb)
     # buffer (pool first-touch cost — see _SCRATCH) and pads each chunk
-    # only to ITS widest segment instead of the batch-wide maximum
-    # (the r7-ADVICE padding concern: one dense cell no longer inflates
-    # every row's padding)
+    # only to ITS widest segment instead of the batch-wide maximum (one
+    # dense cell does not inflate every row's padding)
     chunk_target = 4096
     g0 = 0
     while g0 < len(seg_rows):
@@ -557,8 +292,8 @@ def topk_indexed_np(
         pos = 0
         for g, (rows, cand) in enumerate(zip(c_rows, c_cand)):
             cw = len(cand)
-            # identical float ops to the ring formulation: BLAS (rows,3)
-            # @ (3,cw) on the un-padded candidate slice
+            # BLAS (rows,3) @ (3,cw) on the un-padded candidate slice:
+            # the same float ops as an unpooled per-cell GEMM
             d2buf[pos : pos + len(rows), :cw] = (
                 2.0 - 2.0 * (P[rows] @ S_xyz[cand].T)
             )
@@ -582,17 +317,15 @@ def _fallback_f32_scan(rows, P, S_xyz, kk, out_idx, out_d2):
     """Full-scan fallback for probes outside index coverage: fp32 GEMM
     prefilter + exact fp64 re-rank of the survivors.
 
-    Replaces the argpartition(mm=k+8) + risky-row full-fp64-rescan shape:
-    with clustered build sides (e.g. tens of co-located stations per grid
-    slot) a far probe sees MORE than mm near-ties, so the old risky path
-    re-ran the whole fp64 scan for nearly every fallback row — 69% of
-    kernel time at the sf1.0 shape (cProfile). Here kth32 comes from kk
-    destructive argmin passes (no full-matrix partition), survivors
-    (d2f ≤ kth32 + margin — the same exactness argument: every true fp64
-    top-k member survives because |fp32−fp64| < 2e-6 ≪ margin) are
-    re-ranked in fp64 as ONE flat ragged list with a single lexsort.
-    Tie-break: lexsort minor key is the ascending station position ==
-    ascending id. No per-row Python, no second full scan."""
+    kth32 (the fp32 k-th best per row) comes from kk destructive argmin
+    passes (no full-matrix partition). Every station with d2f ≤ kth32 +
+    ``_F32_MARGIN`` survives — exact, because |fp32−fp64| < 2e-6 ≪ the
+    margin, so no true fp64 top-k member can be excluded — and the
+    survivors are re-ranked in fp64 as ONE flat ragged list with a single
+    lexsort. The survivor set has no fixed width, so clustered build sides
+    (tens of co-located stations) never force a second full scan.
+    Tie-break: the lexsort minor key is the ascending station position ==
+    ascending id. Results are written into ``out_idx``/``out_d2``."""
     S32 = S_xyz.T.astype(np.float32)
     # chunk rows: bounds the pooled fp32 matrices to (1024 × |S|) ≈ 40 MB
     # at 10k stations — the pool's one-time first-touch cost per worker
@@ -642,87 +375,10 @@ def _fallback_f32_scan(rows, P, S_xyz, kk, out_idx, out_d2):
         out_d2[r[mr[keep]], rank[keep]] = np.maximum(d2e[order][keep], 0.0)
 
 
-def _station_struct(stations: DataFrame) -> Column:
-    """station struct with precomputed unit-sphere coords appended."""
-    x, y, z = _xyz(F.col("st_lat"), F.col("st_lon"))
-    return F.struct(
-        *[F.col(c) for c in stations.columns],
-        x.alias("_sx"), y.alias("_sy"), z.alias("_sz"),
-    )
-
-
-def stations_by_cell(stations: DataFrame, res: int, ring: int) -> DataFrame:
-    """cell → array<struct<station…, _sx,_sy,_sz>> lookup (broadcast side)."""
-    cell = grid.cell_of(F.col("st_lon"), F.col("st_lat"), res)
-    return (
-        stations.select(
-            F.explode(grid.kring_cells(cell, res, ring)).alias("_cell"),
-            _station_struct(stations).alias("_s"),
-        )
-        .groupBy("_cell")
-        .agg(F.collect_list("_s").alias("_ring_stations"))
-    )
-
-
-def _gps_ok(lat: Column, lon: Column) -> Column:
-    """True iff both coordinates are present and non-NaN — the gate every
-    kNN output passes through so GPS-less rows get NULL enrichment instead
-    of a fabricated antipodal match (reference's no-GPS routing,
-    src/pipeline/utils/gps_utils.py:87-94)."""
-    return (
-        lat.isNotNull()
-        & lon.isNotNull()
-        & ~F.isnan(lat.cast("double"))
-        & ~F.isnan(lon.cast("double"))
-    )
-
 
 def _safe_idx(i: Column) -> Column:
     """NaN-safe winner-index cast: NaN (no GPS) → NULL int (ANSI-proof)."""
     return F.when(~F.isnan(i), i).cast("int")
-
-
-def all_stations_array(stations: DataFrame) -> DataFrame:
-    """ONE-row DataFrame holding every station (with unit-sphere coords) as
-    an array — the HOF fallback's candidate set, attached via a single-row
-    broadcast crossJoin. Plan size is O(1) regardless of |stations|
-    (replaces a constant-folded literal whose expression tree grew ∝
-    |stations| and blew up Catalyst analysis past ~10⁴ stations)."""
-    return stations.agg(
-        F.collect_list(_station_struct(stations)).alias("_all_st")
-    )
-
-
-def knn_station_array(
-    images: DataFrame,
-    stations: DataFrame,
-    k: int = 3,
-    res: int = 10,
-    ring: int = 2,
-    lon: str = "lon",
-    lat: str = "lat",
-    strategy: str = "arrow",
-) -> DataFrame:
-    """images + ``knn`` array column (k nearest stations, ascending dist).
-
-    Each element: struct<dist_m double, station cols…>. Exact for every row.
-    Pure map stages — the probe side never shuffles.
-
-    strategy='arrow' (default): exact kNN via GEMM in an Arrow-batched
-    pandas UDF — for unit vectors ``|p-s|² = 2-2·p·s``, so a batch of B
-    probes × S stations is one (B,3)×(3,S) matmul + argpartition. At
-    S ≤ ~10⁵ this beats interpreted higher-order functions by ~20×
-    locally and is a pure map stage at any probe scale. (For planetary
-    station counts, use strategy='hof' whose ring prefilter bounds the
-    candidate set, or shard stations regionally first.)
-
-    strategy='hof': pure-DataFrame ring-candidate path (no Python at all)
-    — broadcast cell→array lookup + codegen'd transform/sort, with
-    certified exactness + literal-array fallback.
-    """
-    if strategy == "arrow":
-        return _knn_arrow(images, stations, k=k, lon=lon, lat=lat)
-    return _knn_hof(images, stations, k=k, res=res, ring=ring, lon=lon, lat=lat)
 
 
 def _knn_arrow_idx(
@@ -733,15 +389,16 @@ def _knn_arrow_idx(
     lat: str,
     res: int = 10,
     ring: int = 2,
-) -> tuple[DataFrame, DataFrame]:
-    """images + ``_knn_i`` array<struct<idx,d2>> (winner positions), plus the
-    index→station payload table (broadcastable, same ordering as idx)."""
+) -> tuple[DataFrame, DataFrame, int]:
+    """(images + ``_knn_i`` struct<i0,d0,i1,d1,…> of winner positions and
+    chord², the ``_st_idx``→station payload table (broadcastable, same
+    ordering as the positions), kk = min(k, |stations|))."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     st_rows = stations.collect()  # dim-table collect == broadcast data motion
-    # id-ascending layout unlocks the kernel's argmin fast path (tie rule
-    # == first occurrence == smallest id); st_indexed enumerates the same
-    # sorted list so _st_idx stays consistent
+    # id-ascending layout: the kernel's argmin tie rule (first occurrence
+    # == smallest id) requires it; st_indexed enumerates the same sorted
+    # list so _st_idx stays consistent
     st_rows.sort(key=lambda r: r["station_id"])
     s_lat = np.array([r["st_lat"] for r in st_rows], dtype=np.float64)
     s_lon = np.array([r["st_lon"] for r in st_rows], dtype=np.float64)
@@ -815,8 +472,8 @@ def knn_nearest(
 ) -> DataFrame:
     """images + nearest station payload columns + ``dist_m`` — the 1-NN
     shape the enrichment plan consumes. One Arrow map stage + one broadcast
-    equi-join (codegen); nothing shuffles. ``res``/``ring``: candidate
-    buckets (exact for any setting)."""
+    equi-join (codegen); nothing shuffles. ``res``/``ring``: index
+    coverage (see :func:`build_knn_index`; exact for any setting)."""
     with_idx, st_indexed, _ = _knn_arrow_idx(
         images, stations, k=1, lon=lon, lat=lat, res=res, ring=ring
     )
@@ -830,30 +487,10 @@ def knn_nearest(
     return out
 
 
-#: columns a packed observation dimension must carry (see pack_observations)
-PACKED_OBS_COLS = ("station_id", "_obs_lo", "_obs_hi", "_obs_entries",
-                   "_obs_dense")
-
-#: fixed columns of the columnar (struct-of-arrays) packed layout (r8);
+#: fixed columns of the packed observation dimension (struct-of-arrays);
 #: payload columns ride as ``_obsv_<name>`` arrays alongside these
 PACKED_OBS_V2_COLS = ("station_id", "_obs_lo", "_obs_hi", "_obs_dense",
                       "_obs_days")
-
-
-def _packed_layout(packed: DataFrame) -> str:
-    """'v1' (array-of-structs), 'v2' (struct-of-arrays) or raises."""
-    cols = set(packed.columns)
-    if set(PACKED_OBS_COLS) <= cols:
-        return "v1"
-    if set(PACKED_OBS_V2_COLS) <= cols and any(
-        c.startswith("_obsv_") for c in packed.columns
-    ):
-        return "v2"
-    raise ValueError(
-        "packed dim has neither the pack_observations (v1) nor the "
-        "pack_observations_columnar (v2) schema — build it with one of "
-        "those"
-    )
 
 
 def pack_observations_columnar(
@@ -861,25 +498,34 @@ def pack_observations_columnar(
     date_col: str = "weather_historical_date",
     payload_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Columnar (struct-of-arrays) twin of :func:`pack_observations` — the
-    same per-station aggregation, but the payload lands in ONE primitive
-    array per column (``_obsv_<name>``) instead of an array of structs.
+    """Aggregate a (station_id, date)-keyed observation dimension into ONE
+    row per station, the packed build side :func:`packed_obs_lookup`
+    broadcasts. A production pipeline can build it once (persist / write
+    as a materialized dim table) and hand it to every dated consumer via
+    ``packed_obs=`` instead of re-aggregating per query.
 
-    Why (r8): the broadcast hash relation for the array-of-structs layout
-    carries ~48 B per observation (8 B offset/size + an UnsafeRow per
-    element) — 1.2 GB at the 10k-station × 2557-day shape, and repeated
-    cold builds of it GC-thrashed the local-mode JVM (measured: the dated
-    query's reps RISING 34→48→56 s as relations accumulated). Primitive
-    double arrays are 8 B/element with one header per station: the same
-    dimension packs ~3× smaller and builds ~3× faster, values identical.
+    Schema: ``PACKED_OBS_V2_COLS`` + one ``_obsv_<col>`` primitive array
+    per payload column, all date-sorted. Primitive arrays cost 8 B per
+    double with one header per station; an array of payload structs costs
+    ~48 B per observation in the broadcast hash relation (1.2 GB at the
+    10k-station × 2557-day shape), so this layout broadcasts ~3× smaller.
 
-    Schema: ``PACKED_OBS_V2_COLS`` + one ``_obsv_<col>`` array per payload
-    column. ``_obs_days`` (int day offsets from ``_obs_lo``, date-sorted)
-    is NULL for dense stations — the dense lookup indexes by
-    ``datediff(date, _obs_lo)`` directly; sparse/duplicate-date stations
-    use array_position over ``_obs_days`` (first occurrence == first in
-    date-sorted order, the same duplicate-key contract as v1).
-    NULL-dated rows are dropped exactly as in v1."""
+    - ``_obs_dense`` ⇔ one entry per consecutive day AND no duplicate
+      dates (a duplicated date would satisfy the size == span test alone
+      while shifting indexes). The distinct count is computed on the
+      packed array in the same projection rather than countDistinct in
+      the agg, whose distinct-rewrite would add a second exchange.
+    - ``_obs_days`` (int day offsets from ``_obs_lo``) is NULL for dense
+      stations — the lookup indexes by ``datediff(date, _obs_lo)``
+      directly; other stations use array_position over ``_obs_days``.
+    - NULL-dated rows are dropped (they can never match the equi-join
+      key, and a NULL inside the arrays would shift every dense index).
+
+    ``payload_cols``: the payload columns to pack (default: every non-key
+    column). Broadcast bytes scale with |payload|, and a wide observation
+    table (the reference's JSONB rows carry full METAR records) packs 10×
+    smaller when the query needs 3 fields. ``[]`` packs only the
+    date-presence dimension (no ``_obsv_`` columns)."""
     payload = (
         payload_cols
         if payload_cols is not None
@@ -891,8 +537,8 @@ def pack_observations_columnar(
     )
     if "d" in payload:
         raise ValueError(
-            "pack_observations reserves the struct field name 'd' for the "
-            "observation date; rename the payload column 'd' first"
+            "pack_observations_columnar reserves the struct field name 'd' "
+            "for the observation date; rename the payload column 'd' first"
         )
     missing = [c for c in payload if c not in observations.columns]
     if missing:
@@ -944,84 +590,6 @@ def _field_array(cname: str):
     )
 
 
-def pack_observations(
-    observations: DataFrame,
-    date_col: str = "weather_historical_date",
-    payload_cols: list[str] | None = None,
-) -> DataFrame:
-    """Aggregate a (station_id, date)-keyed observation dimension into ONE
-    row per station: ``(station_id, _obs_lo, _obs_hi, _obs_entries,
-    _obs_dense)`` where ``_obs_entries`` is the date-sorted array of
-    ``struct(d, *payload)``. This is the packed build side
-    ``nearest_station_dated(pack_obs=True)`` broadcasts — extracted so a
-    production pipeline can build it ONCE (persist / write as a
-    materialized dim table) and hand it to every dated consumer via
-    ``packed_obs=`` instead of re-aggregating per query (VERDICT r5 #3).
-
-    ``payload_cols``: prune the packed payload to the columns the
-    consumer actually extracts — the broadcast bytes scale with
-    |payload|, and a wide observation table (the reference's JSONB rows
-    carry full METAR records) packs 10× smaller when the query needs 3
-    fields. Default: every non-key column.
-
-    NULL-dated rows are dropped (they can never match the equi-join key,
-    and a NULL inside the array would shift every dense index).
-    ``_obs_dense`` ⇔ one entry per consecutive day AND no duplicate
-    dates — a duplicated date would satisfy the size==span test alone
-    while shifting indexes. The distinct count is computed on the packed
-    array in the same projection rather than countDistinct in the agg,
-    whose distinct-rewrite would add a second exchange."""
-    # `is not None`, not `or`: an explicit payload_cols=[] means "pack
-    # only the date-presence dimension" (the wide-table pruning use-case
-    # this parameter exists for), not "default to everything" (r6 review)
-    payload = (
-        payload_cols
-        if payload_cols is not None
-        else [
-            c
-            for c in observations.columns
-            if c not in ("station_id", date_col)
-        ]
-    )
-    if "d" in payload:
-        # 'd' is the struct's date field; a payload column of the same
-        # name would make _obs_hit['d'] extraction ambiguous (ADVICE r5)
-        raise ValueError(
-            "pack_observations reserves the struct field name 'd' for the "
-            "observation date; rename the payload column 'd' first"
-        )
-    missing = [c for c in payload if c not in observations.columns]
-    if missing:
-        raise ValueError(f"payload_cols not in observations: {missing}")
-    packed = (
-        observations.filter(F.col(date_col).isNotNull())
-        .groupBy("station_id")
-        .agg(
-            F.min(date_col).alias("_obs_lo"),
-            F.max(date_col).alias("_obs_hi"),
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(date_col).alias("d"),
-                        *[F.col(c) for c in payload],
-                    )
-                )
-            ).alias("_obs_entries"),
-        )
-    )
-    n_dates = F.size(
-        F.array_distinct(
-            F.transform(F.col("_obs_entries"), lambda e: e["d"])
-        )
-    )
-    return packed.withColumn(
-        "_obs_dense",
-        (F.size("_obs_entries")
-         == F.datediff("_obs_hi", "_obs_lo") + F.lit(1))
-        & (n_dates == F.size("_obs_entries")),
-    )
-
-
 def nearest_station_dated(
     images: DataFrame,
     stations: DataFrame,
@@ -1030,91 +598,56 @@ def nearest_station_dated(
     lat: str = "lat",
     ts: str = "captured_at",
     broadcast_obs: bool = True,
-    prune_obs_dates: bool = True,
-    pack_obs: bool = True,
     res: int = 10,
     ring: int = 2,
     packed_obs: DataFrame | None = None,
 ) -> DataFrame:
     """Composite spatio-temporal weather join: nearest station *spatially*,
-    then equi-join the station's observation for the capture date
-    (reference's `weather_historical_date DATE` + JSONB payload,
+    then the station's observation for the capture date (reference's
+    `weather_historical_date DATE` + JSONB payload,
     scripts/create-tables.sql:129-132).
 
     images + nearest-station payload + dist_m + weather_historical_date +
-    obs_* columns. Plan: one Arrow 1-NN map stage, then an equi-join on the
-    uniform composite key (station_id, date) — broadcast when the
-    observation dimension fits (``broadcast_obs=True``); otherwise a
-    skew-free shuffle (dates and station ids are both uniform, geographic
-    hot cells never reach the key). ``res``/``ring``: 1-NN candidate
-    buckets, forwarded to knn_nearest (exact for any setting).
+    obs_* columns. Plan: one Arrow 1-NN map stage (:func:`knn_nearest`;
+    ``res``/``ring`` set its index coverage, results are exact for any
+    setting), then the observation lookup. Give exactly one of:
 
-    ``prune_obs_dates``: shrink the observation dimension to the probe's
-    [min, max] capture-date range before broadcasting. The obs dim is
-    |stations| × |history days|, but any one corpus spans a fraction of
-    the history — dates outside the probe span can never match the LEFT
-    join key, so the filter is exact-preserving while cutting the
-    broadcast build side by the temporal-span ratio. At 100× scale this is
-    the difference between broadcasting the full station-day history and
-    only the corpus's own epoch. The span is attached LAZILY — a
-    crossJoin with the broadcast 1-row (min, max) aggregate of the
-    probe's ts column, filtered per obs row — so constructing the
-    DataFrame runs NO job and the pruning cost stays inside the query's
-    own execution (an eager .first() here would re-run the whole probe
-    plan at build time and hide work from benchmarks). An empty probe
-    yields NULL bounds → BETWEEN is never true → empty build side, which
-    the LEFT join semantics absorb. Measured on the sf0.1 fixture
-    (r6 profile): the prune costs ~0.5 s — the span aggregate re-runs
-    the probe scan — while cutting only 6% of obs days (the fixture's
-    corpus spans 94% of the history), so the bench query runs
-    ``prune_obs_dates=False``; the lever pays for itself exactly when a
-    corpus spans a narrow epoch of a long history, which is the
-    planetary-scale shape it exists for.
+    - ``observations``: the row-level (station_id, obs_date) dimension.
+      It is first cut to the probe's [min, max] capture-date span — dates
+      outside it can never match the LEFT join key, so the cut is exact
+      while shrinking the build side by the temporal-span ratio. The span
+      is attached LAZILY (a broadcast 1-row (min, max) aggregate of the
+      probe's ts column, crossJoined and filtered per obs row), so
+      building the DataFrame runs NO job and the cost stays inside the
+      query's own execution. An empty probe yields NULL bounds → an empty
+      build side, which the LEFT join absorbs.
+    - ``packed_obs``: a pre-built :func:`pack_observations_columnar` dim.
+      The pack build is a full shuffle + agg of the observation table; a
+      pipeline running several dated consumers (flagship enrich, this
+      join, any rollup) builds it once, persists it and passes it here,
+      so each consumer starts at the broadcast.
 
-    ``packed_obs``: a pre-built packed dimension from
-    :func:`pack_observations` (schema ``PACKED_OBS_COLS``). The pack
-    build is a full shuffle+agg of the observation table; a pipeline
-    running several dated consumers (flagship enrich + the standalone
-    dated join + any rollup) should build it once, persist it, and pass
-    it here — each consumer then starts at the broadcast, skipping the
-    per-query re-aggregation (VERDICT r5 #3). Mutually exclusive with
-    ``observations``/``prune_obs_dates`` pruning (prune happens at or
-    before pack time; ``payload_cols`` pruning likewise).
+    ``broadcast_obs=True`` (default): the observations are packed into
+    one row per station (inline from ``observations`` when no
+    ``packed_obs`` is given) and read by :func:`packed_obs_lookup` — a
+    broadcast hash relation of |stations| keys instead of |stations| ×
+    |days|. Exact: dense stations index directly; stations with gaps or
+    duplicate dates take an exact lookup of their own date offsets. The
+    one divergence from a row-level join is duplicate (station_id, date)
+    keys: the row join emits one output row per duplicate, the pack the
+    first in (date, payload) sort order — a violation of the reference's
+    PK either way.
 
-    ``pack_obs`` (broadcast path only): aggregate the observation rows
-    into ONE row per station carrying a date-sorted array of payload
-    structs, broadcast that, and look the capture date up with an O(1)
-    array index. The r4 row-level broadcast keyed (station_id, date)
-    built a |stations|×|days| hash relation (2.4M entries at sf0.1) —
-    per-row UnsafeRow overhead plus the hash build dominated the query;
-    packing shrinks the relation to |stations| keys for the same bytes
-    of payload and measured ~1.8× faster end-to-end (BENCH.md r5).
-    Two pruning levers VERDICT r4 suggested were measured and declined
-    for this fixture: winning-station semi-join (979/1000 stations win
-    at sf0.1 — no cut, and it costs an extra probe pass) and the date
-    span covers 94% of obs days (prune kept — it is the lever that
-    matters when a corpus spans a narrow epoch, it just can't help this
-    fixture). Exactness: stations whose dates are dense (one row per
-    consecutive day, no duplicate dates — the station-day history
-    contract, reference PK semantics create-tables.sql:129-132) index
-    directly; stations with gaps or duplicate dates fall back to an
-    exact linear probe of their own date-sorted array, and NULL-dated
-    rows are dropped pre-pack (they can never match the equi-join key).
-    The one divergence from the row-level join is duplicate
-    (station_id, date) keys: the plain join would emit one output row
-    per duplicate, the packed lookup emits the first in date-sorted
-    order — a violation of the reference's PK either way. ``pack_obs``
-    is ignored
-    on the shuffle path (``broadcast_obs=False``): a station-keyed
-    shuffle would co-locate ALL of a hot station's probes on one task,
-    while the (station_id, date) composite key keeps the shuffle
-    skew-free — at planetary dims the composite key is the right
-    partitioning."""
+    ``broadcast_obs=False`` (planetary observation dims): a row-level
+    equi-join on the composite (station_id, date) key, left to AQE. Dates
+    and station ids are both uniform, so that shuffle is skew-free; a
+    station-keyed packed shuffle would co-locate all of a hot station's
+    probes on one task, hence ``packed_obs`` requires the broadcast."""
     if (observations is None) == (packed_obs is None):
         raise ValueError(
             "nearest_station_dated needs exactly one of observations= "
-            "(row-level dim) or packed_obs= (pre-built pack_observations "
-            "output)"
+            "(row-level dim) or packed_obs= (pre-built "
+            "pack_observations_columnar output)"
         )
     if packed_obs is not None and not broadcast_obs:
         raise ValueError(
@@ -1124,35 +657,24 @@ def nearest_station_dated(
         )
     nn = knn_nearest(images, stations, lon=lon, lat=lat, res=res, ring=ring)
     probe = nn.withColumn("weather_historical_date", F.to_date(F.col(ts)))
-    if observations is not None:
-        obs = observations.withColumnRenamed(
-            "obs_date", "weather_historical_date"
-        )
-        if prune_obs_dates:
-            span = images.select(
-                F.min(F.to_date(F.col(ts))).alias("_span_lo"),
-                F.max(F.to_date(F.col(ts))).alias("_span_hi"),
+    if packed_obs is not None:
+        return packed_obs_lookup(probe, packed_obs)
+    span = images.select(
+        F.min(F.to_date(F.col(ts))).alias("_span_lo"),
+        F.max(F.to_date(F.col(ts))).alias("_span_hi"),
+    )
+    obs = (
+        observations.withColumnRenamed("obs_date", "weather_historical_date")
+        .crossJoin(F.broadcast(span))
+        .filter(
+            F.col("weather_historical_date").between(
+                F.col("_span_lo"), F.col("_span_hi")
             )
-            obs = (
-                obs.crossJoin(F.broadcast(span))
-                .filter(
-                    F.col("weather_historical_date").between(
-                        F.col("_span_lo"), F.col("_span_hi")
-                    )
-                )
-                .drop("_span_lo", "_span_hi")
-            )
-    if broadcast_obs and (pack_obs or packed_obs is not None):
-        # inline pack: the columnar layout (r8) — ~3× smaller broadcast,
-        # same values; a pre-built packed_obs may be either layout
-        packed = (
-            packed_obs
-            if packed_obs is not None
-            else pack_observations_columnar(obs)
         )
-        return packed_obs_lookup(probe, packed)
+        .drop("_span_lo", "_span_hi")
+    )
     if broadcast_obs:
-        obs = F.broadcast(obs)
+        return packed_obs_lookup(probe, pack_observations_columnar(obs))
     return probe.join(obs, ["station_id", "weather_historical_date"], "left")
 
 
@@ -1164,17 +686,29 @@ def packed_obs_lookup(
     """LEFT-attach the packed per-station observation payload for
     ``probe[date_col]``: a broadcast hash join on station_id (|stations|
     keys — NOT |stations|×|days|) followed by an O(1) array-index lookup
-    when the station's dates are dense, or an exact linear probe of its
-    date-sorted array otherwise. Shared by ``nearest_station_dated`` and
-    ``plans.enrich`` so one persisted :func:`pack_observations` dim
-    serves every dated consumer (VERDICT r5 #3). Returns probe columns +
-    the packed payload columns; probes whose date misses resolve to NULL
-    payloads exactly like a row-level LEFT equi-join."""
-    layout = _packed_layout(packed)
-    reserved = {"_obs_lo", "_obs_hi", "_obs_entries", "_obs_dense",
-                "_obs_hit", "_obs_days"} | {
-        c for c in packed.columns if c.startswith("_obsv_")
-    } | ({"_obs_pos"} if layout == "v2" else set())
+    when the station's dates are dense, or an array_position over its
+    date offsets otherwise. Shared by ``nearest_station_dated`` and
+    ``plans.enrich`` so one persisted :func:`pack_observations_columnar`
+    dim serves every dated consumer.
+
+    Returns probe columns + one column per ``_obsv_<name>`` array, named
+    ``<name>``; any other column of ``packed`` is projected away before
+    the broadcast. Per (station, date) the value is the first entry in
+    (date, payload) sort order; probes whose date misses (a gap, outside
+    the span, a station without observations) get NULL payloads exactly
+    like a row-level LEFT equi-join."""
+    missing = [c for c in PACKED_OBS_V2_COLS if c not in packed.columns]
+    if missing:
+        raise ValueError(
+            f"packed dim lacks {missing} — build it with "
+            "pack_observations_columnar"
+        )
+    payload = [c[len("_obsv_"):] for c in packed.columns
+               if c.startswith("_obsv_")]
+    packed = packed.select(
+        *PACKED_OBS_V2_COLS, *[f"_obsv_{c}" for c in payload]
+    )
+    reserved = (set(packed.columns) - {"station_id"}) | {"_obs_pos"}
     clash = reserved & set(probe.columns)
     if clash:
         raise ValueError(
@@ -1182,179 +716,25 @@ def packed_obs_lookup(
             f"{sorted(reserved)}; probe already has {sorted(clash)} — "
             "rename them first"
         )
-    whd = F.col(date_col)
-    if layout == "v2":
-        payload = [c[len("_obsv_"):] for c in packed.columns
-                   if c.startswith("_obsv_")]
-        out = probe.join(F.broadcast(packed), "station_id", "left")
-        idx = F.datediff(whd, F.col("_obs_lo"))
-        # F.get returns NULL out-of-bounds/negative (never throws under
-        # ANSI) → out-of-span dates resolve to NULL payloads exactly like
-        # the row-level LEFT join. Sparse stations: array_position's
-        # FIRST-occurrence rule == first in date-sorted order, the v1
-        # duplicate-key contract.
-        pos = F.when(
-            F.col("_obs_dense"), idx
-        ).otherwise(
-            F.array_position(F.col("_obs_days"), idx).cast("int") - F.lit(1)
-        )
-        keep = [c for c in out.columns if c not in reserved]
-        out = out.withColumn("_obs_pos", pos)
-        return out.select(
-            *keep,
-            *[
-                F.get(F.col(f"_obsv_{c}"), F.col("_obs_pos")).alias(c)
-                for c in payload
-            ],
-        )
-    payload = [
-        f
-        for f in packed.schema["_obs_entries"].dataType.elementType.names
-        if f != "d"
-    ]
-    out = probe.join(
-        F.broadcast(packed.select(*PACKED_OBS_COLS)), "station_id", "left"
-    )
-    # F.get returns NULL out-of-bounds (never throws under ANSI),
-    # so out-of-span dates resolve to NULL payloads exactly like
-    # the row-level LEFT join
-    hit = F.when(
-        F.col("_obs_dense"),
-        F.get(F.col("_obs_entries"), F.datediff(whd, F.col("_obs_lo"))),
+    out = probe.join(F.broadcast(packed), "station_id", "left")
+    idx = F.datediff(F.col(date_col), F.col("_obs_lo"))
+    # F.get returns NULL out-of-bounds/negative (never throws under ANSI)
+    # → out-of-span dates resolve to NULL payloads exactly like the
+    # row-level LEFT join. Sparse stations: array_position's
+    # FIRST-occurrence rule == first in date-sorted order.
+    pos = F.when(
+        F.col("_obs_dense"), idx
     ).otherwise(
-        F.get(
-            F.filter(F.col("_obs_entries"), lambda e: e["d"] == whd),
-            F.lit(0),
-        )
+        F.array_position(F.col("_obs_days"), idx).cast("int") - F.lit(1)
     )
     keep = [c for c in out.columns if c not in reserved]
-    return out.withColumn("_obs_hit", hit).select(
-        *keep, *[F.col("_obs_hit")[c].alias(c) for c in payload]
-    )
-
-
-def _knn_arrow(
-    images: DataFrame,
-    stations: DataFrame,
-    k: int,
-    lon: str,
-    lat: str,
-) -> DataFrame:
-    # array-of-payload form: winner payloads re-attached via k broadcast
-    # hash joins against the indexed station table (plan size O(k·|cols|),
-    # independent of |stations|); GPS-less rows get a NULL array
-    st_cols = stations.columns
-    with_idx, st_indexed, kk = _knn_arrow_idx(images, stations, k=k, lon=lon, lat=lat)
-    out = with_idx
-    for j in range(kk):
-        st_j = st_indexed.select(
-            F.col("_st_idx").alias(f"_si{j}"),
-            *[F.col(c).alias(f"_{c}__{j}") for c in st_cols],
-        )
-        out = out.withColumn(f"_si{j}", _safe_idx(F.col("_knn_i")[f"i{j}"])).join(
-            F.broadcast(st_j), f"_si{j}", "left"
-        )
-    knn = F.array(
+    out = out.withColumn("_obs_pos", pos)
+    return out.select(
+        *keep,
         *[
-            F.struct(
-                _chord2_to_m(F.col("_knn_i")[f"d{j}"]).alias("dist_m"),
-                *[F.col(f"_{c}__{j}").alias(c) for c in st_cols],
-            )
-            for j in range(kk)
-        ]
-    )
-    drop = (
-        ["_knn_i"]
-        + [f"_si{j}" for j in range(kk)]
-        + [f"_{c}__{j}" for j in range(kk) for c in st_cols]
-    )
-    return out.withColumn(
-        "knn", F.when(_gps_ok(F.col(lat), F.col(lon)), knn)
-    ).drop(*drop)
-
-
-def _knn_hof(
-    images: DataFrame,
-    stations: DataFrame,
-    k: int = 3,
-    res: int = 10,
-    ring: int = 2,
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    st_cols = stations.columns
-    by_cell = stations_by_cell(stations, res, ring)
-    fallback_df = all_stations_array(stations)
-
-    def keyed(cands: Column) -> Column:
-        """array<struct<d2, station_id, idx>> — the cheap sort keys."""
-        return F.transform(
-            cands,
-            lambda s, i: F.struct(
-                (
-                    (s["_sx"] - F.col("_px")) * (s["_sx"] - F.col("_px"))
-                    + (s["_sy"] - F.col("_py")) * (s["_sy"] - F.col("_py"))
-                    + (s["_sz"] - F.col("_pz")) * (s["_sz"] - F.col("_pz"))
-                ).alias("d2"),
-                s["station_id"].alias("station_id"),
-                i.alias("idx"),
-            ),
-        )
-
-    def topk(cands: Column) -> Column:
-        """k nearest as full payload structs with dist_m first."""
-        top = F.slice(F.array_sort(keyed(cands)), 1, k)
-        return F.transform(
-            top,
-            lambda t: F.struct(
-                _chord2_to_m(t["d2"]).alias("dist_m"),
-                *[
-                    F.element_at(cands, t["idx"] + 1)[c].alias(c)
-                    for c in st_cols
-                ],
-            ),
-        )
-
-    px, py, pz = _xyz(F.col(lat), F.col(lon))
-    probe = (
-        images.withColumn("_cell", grid.cell_of(F.col(lon), F.col(lat), res))
-        .withColumn("_px", px).withColumn("_py", py).withColumn("_pz", pz)
-    )
-    joined = probe.join(F.broadcast(by_cell), "_cell", "left")
-
-    # certification: k-th ring candidate closer than the un-scanned region
-    wdeg = grid.cell_width_deg(res)
-    guard_m = (
-        F.lit(ring * wdeg * M_PER_DEG)
-        * F.cos(F.radians(F.least(F.abs(F.col(lat)) + F.lit(ring * wdeg), F.lit(89.9))))
-    )
-    ring_keys = F.slice(F.array_sort(keyed(F.col("_ring_stations"))), 1, k)
-    certified = _gps_ok(F.col(lat), F.col(lon)) & F.coalesce(
-        (F.size(ring_keys) >= k)
-        & (F.element_at(ring_keys, k)["d2"] <= _m_to_chord2(guard_m)),
-        F.lit(False),
-    )
-
-    # SINGLE-SCAN plan: one projection with a CASE over both candidate
-    # sets (certified → ring candidates; uncertified-with-GPS → full-set
-    # rescan; no GPS → NULL). The full station array arrives as ONE
-    # broadcast row (crossJoin of a 1-row aggregate — plan stays O(1) in
-    # |stations|) and is dropped in the same projection, so it is only
-    # *evaluated* on the uncertified branch (codegen CASE short-circuits)
-    # and never survives into downstream rows. Replaces the former
-    # filter/filter/union shape that scanned the probe + ring join twice.
-    helper = ["_cell", "_ring_stations", "_px", "_py", "_pz"]
-    return (
-        joined.crossJoin(F.broadcast(fallback_df))
-        .withColumn(
-            "knn",
-            F.when(certified, topk(F.col("_ring_stations"))).otherwise(
-                F.when(
-                    _gps_ok(F.col(lat), F.col(lon)), topk(F.col("_all_st"))
-                )
-            ),
-        )
-        .drop("_all_st", *helper)
+            F.get(F.col(f"_obsv_{c}"), F.col("_obs_pos")).alias(c)
+            for c in payload
+        ],
     )
 
 
@@ -1362,31 +742,13 @@ def knn_station_join(
     images: DataFrame,
     stations: DataFrame,
     k: int = 3,
-    res: int = 10,
-    ring: int = 2,
     lon: str = "lon",
     lat: str = "lat",
-    id_col: str = "image_id",
-    strategy: str = "arrow",
 ) -> DataFrame:
     """Exploded row shape: one row per (image, rank≤k) with station columns
-    + dist_m + rank. Arrow top-k → posexplode → broadcast payload join —
-    all map stages, no probe shuffle."""
-    if strategy == "hof":
-        arr = _knn_hof(images, stations, k=k, res=res, ring=ring, lon=lon, lat=lat)
-        exploded = arr.select(
-            *[c for c in images.columns],
-            F.posexplode("knn").alias("_pos", "_s"),
-        )
-        st_payload = [c for c in stations.columns if c != "station_id"]
-        return exploded.select(
-            *[c for c in images.columns],
-            (F.col("_pos") + 1).alias("rank"),
-            F.col("_s")["station_id"].alias("station_id"),
-            *[F.col("_s")[c].alias(c) for c in st_payload],
-            F.col("_s")["dist_m"].alias("dist_m"),
-        )
-
+    + dist_m + rank; probes without GPS emit no rows. Arrow top-k →
+    explode → broadcast payload join on ``_st_idx`` — all map stages, no
+    probe shuffle."""
     with_idx, st_indexed, kk = _knn_arrow_idx(images, stations, k=k, lon=lon, lat=lat)
     # fixed-width struct → one row per rank (JVM-side unpack, pure codegen)
     pairs = F.array(
@@ -1408,8 +770,7 @@ def knn_station_join(
         _safe_idx(F.col("_p")["i"]).alias("_st_idx"),
         _chord2_to_m(F.col("_p")["d"]).alias("dist_m"),
     ).filter(
-        # GPS-less probes have no winners — drop them (matches the hof
-        # strategy, whose posexplode of the NULL knn array emits no rows)
+        # GPS-less probes have no winners — they emit no rows
         F.col("_st_idx").isNotNull()
     )
     joined = exploded.join(F.broadcast(st_indexed), "_st_idx", "left").drop("_st_idx")

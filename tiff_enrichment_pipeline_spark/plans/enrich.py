@@ -75,13 +75,14 @@ def enrich(
     shuffle is skew-free.
 
     ``packed_obs``: pre-built per-station packed observation dimension
-    (operators.knn_join.pack_observations schema). On the broadcast path
-    the obs lookup then broadcasts |stations| fat rows instead of a
-    |stations|×|days| row-keyed hash relation (the r5 pack_obs win,
-    ~1.8×) — and a pipeline running this flagship alongside the
-    standalone dated join reuses ONE persisted pack for both. When
-    ``observations`` is given instead, the pack is built inline from it
-    (same plan, plus the pack's one dim-side shuffle). Requires
+    (operators.knn_join.pack_observations_columnar schema). On the
+    broadcast path the obs lookup (knn_join.packed_obs_lookup) broadcasts
+    |stations| rows of per-column payload arrays instead of a
+    |stations|×|days| row-keyed hash relation — and a pipeline running
+    this flagship alongside the standalone dated join reuses ONE
+    persisted pack for both. When ``observations`` is given instead, the
+    pack is built inline from it (same plan, plus the pack's one
+    dim-side shuffle). Requires
     ``broadcast_obs=True``; the shuffle path keeps the row-level
     composite-key join (a station-keyed packed shuffle would co-locate a
     hot station's probes).
@@ -129,7 +130,7 @@ def enrich(
         # caller noticing (r6 review)
         raise ValueError(
             "enrich() needs at most one of observations= (row-level dim) "
-            "or packed_obs= (pre-built pack_observations output)"
+            "or packed_obs= (pre-built pack_observations_columnar output)"
         )
     if observations is not None or packed_obs is not None:
         geo = geo.withColumn("weather_historical_date", F.to_date(F.col(ts)))
