@@ -131,42 +131,78 @@ def test_elevation_bilinear_golden(spark):
     assert out[3]["elevation"] is None  # off-DEM
 
 
-def test_elevation_partitioned_matches_broadcast(spark):
-    """broadcast_dem=False (co-partitioned cogroup, planetary-DEM path) must
-    agree with the broadcast strategy value-for-value — including off-DEM
-    NULLs and null-GPS rows — and shuffle the probe exactly once on the
-    uniform (tile, salt) key."""
+def _plan_node(df, name):
+    """The first node called ``name`` in ``df``'s physical plan."""
+    todo = [df._jdf.queryExecution().executedPlan().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == name:
+            return node
+        kids = node.children()
+        todo += [kids.apply(n) for n in range(kids.size())]
+    raise AssertionError(f"no {name} node")
+
+
+def _dem_probes(spark):
+    """sf0.001 images plus the probes where the DEM strategies could part:
+    exact tile edges, cells whose i0/j0 clamp to 0 or DEM_N-2, a one-point
+    pileup, and NULL/NaN GPS."""
     img = geotables.images_geo(spark, "/root/testdata/sf0.001").select(
         "image_id", "lon", "lat"
     )
-    bad = spark.createDataFrame(
-        [(-1, None, None)], "image_id long, lon double, lat double"
-    )
-    img = img.unionByName(bad)
+    step, nan = geotables.DEM_STEP, float("nan")
+    offsets = (0.0, 1e-9, 0.4 * step, 0.5 * step, 31.5 * step, 31.9 * step)
+    pts = [
+        (tx * 0.1 + dx, ty * 0.1 + dy)
+        for tx, ty in ((51, 520), (52, 521), (30, 535))
+        for dx in offsets
+        for dy in offsets
+    ]
+    pts += [(5.123456, 52.345678)] * 40
+    # last, so their ids are the five smallest
+    pts += [(None, None), (nan, 52.0), (5.0, nan), (None, 52.0), (nan, nan)]
+    rows = [(-1 - k, lon, lat) for k, (lon, lat) in enumerate(pts)]
+    extra = spark.createDataFrame(rows, "image_id long, lon double, lat double")
+    return img.unionByName(extra)
+
+
+def test_elevation_partitioned_matches_broadcast(spark):
+    """broadcast_dem=False (sort-merge join, corner words cut in the JVM —
+    the planetary-DEM path) must agree with the broadcast strategy
+    value-for-value on every probe of _dem_probes, salted or not. Its plan
+    has no cogroup and no broadcast, and the grid never reaches the
+    Python node: only the 16-byte corner words do."""
+    img = _dem_probes(spark)
     dem = dem_tiles_df(spark)
     cols = ["image_id", "elevation", "elevation_source", "elevation_accuracy_m"]
-    a = {r["image_id"]: tuple(r[c] for c in cols[1:])
-         for r in elevation_join(img, dem, broadcast_dem=True).select(cols).collect()}
-    b = {r["image_id"]: tuple(r[c] for c in cols[1:])
-         for r in elevation_join(img, dem, broadcast_dem=False).select(cols).collect()}
-    assert a == b
-    assert b[-1] == (None, None, None)
+
+    def vals(df):
+        return {r["image_id"]: tuple(r[c] for c in cols[1:])
+                for r in df.select(cols).collect()}
+
+    a = vals(elevation_join(img, dem, broadcast_dem=True))
+    assert a == vals(elevation_join(img, dem, broadcast_dem=False))
+    assert a == vals(elevation_join(img, dem, broadcast_dem=False, salt=4))
+    assert sum(v[0] is not None for v in a.values()) > 100
+    gps_less = sorted(a)[:5]  # the NULL/NaN GPS probes
+    assert all(a[iid] == (None, None, None) for iid in gps_less)
     plan = (
         elevation_join(img, dem, broadcast_dem=False)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    probe_shuffles = [
-        l for l in plan.splitlines()
-        if "Exchange hashpartitioning" in l and "_bucket" in l
-    ]
-    assert len(probe_shuffles) == 2  # probe + (small) DEM side, nothing else
-    assert "_salt" in probe_shuffles[0]  # skew salt is in the shuffle key
-    # r6: the cogroup key is the COARSE (bucket, salt) pair — the raw
-    # per-tile key would cost |tiles|x salt Arrow calls (VERDICT r5 #4)
-    assert not any(
-        "Exchange hashpartitioning" in l and "tile_x" in l
-        for l in plan.splitlines()
-    )
+    lines = plan.splitlines()
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "Broadcast" not in plan
+    assert "SortMergeJoin" in plan
+    shuffles = [l for l in lines if "Exchange hashpartitioning" in l]
+    assert len(shuffles) == 2 and all("tile_x" in l for l in shuffles)
+    # the Python node's input rows: no grid, one binary column (16 bytes)
+    inp = _plan_node(
+        elevation_join(img, dem, broadcast_dem=False), "ArrowEvalPython"
+    ).children().apply(0).output()
+    attrs = [inp.apply(n) for n in range(inp.size())]
+    binary = [a.name() for a in attrs if a.dataType().typeName() == "binary"]
+    assert binary == ["_corners"]
 
 
 def test_polygon_cover_is_superset(spark):
@@ -400,25 +436,77 @@ def test_terrain_matches_analytic_gradient(spark):
 
 
 def test_terrain_partitioned_matches_broadcast(spark):
-    """terrain_join(broadcast_dem=False) — the planetary-DEM cogroup
-    strategy — must be value-identical to the broadcast strategy on
-    on-DEM, off-DEM, and no-GPS rows (shared _terrain_vec)."""
+    """terrain_join(broadcast_dem=False) must be value-identical to the
+    broadcast strategy on every probe of _dem_probes (shared _terrain
+    corner kernel)."""
     from tiff_enrichment_pipeline_spark.operators.elevation import terrain_join
 
-    img = geotables.images_geo(spark, "/root/testdata/sf0.001")
-    a = {
-        r["image_id"]: (r["slope_deg"], r["aspect_deg"], r["hillshade"])
-        for r in terrain_join(img, dem_tiles_df(spark)).collect()
-    }
-    b = {
-        r["image_id"]: (r["slope_deg"], r["aspect_deg"], r["hillshade"])
-        for r in terrain_join(
-            img, dem_tiles_df(spark), broadcast_dem=False
-        ).collect()
-    }
-    assert a == b
+    img = _dem_probes(spark)
+
+    def vals(**kw):
+        return {
+            r["image_id"]: (r["slope_deg"], r["aspect_deg"], r["hillshade"])
+            for r in terrain_join(img, dem_tiles_df(spark), **kw).collect()
+        }
+
+    a = vals()
+    assert a == vals(broadcast_dem=False)
+    assert a == vals(broadcast_dem=False, salt=4)
     assert any(v[0] is not None for v in a.values())
     assert any(v[0] is None for v in a.values())
+
+
+def test_partitioned_dem_salt_scatters_a_one_point_pileup(spark):
+    """salt > 1 hashes the whole probe row: probes piled on ONE exact
+    point (the --skew-joins "hot" shape) spread over several join
+    partitions instead of sharing one salt value."""
+    pile = spark.range(400).select(
+        F.col("id").alias("image_id"),
+        F.lit(5.123456).alias("lon"),
+        F.lit(52.345678).alias("lat"),
+    )
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try:
+        out = elevation_join(pile, dem_tiles_df(spark), broadcast_dem=False, salt=8)
+        parts = out.select(F.spark_partition_id().alias("p")).distinct().count()
+    finally:
+        spark.conf.set(key, "true")
+    assert parts >= 3
+
+
+def test_partitioned_dem_hot_tile_split_by_aqe(spark):
+    """Unsalted, a hot tile is AQE's to split: once its probe partition
+    passes the skew thresholds (lowered here — Spark's defaults are 256 MB
+    and 5× the median), the final plan of the partitioned DEM join is a
+    skew-split sort-merge join, and the values still match the broadcast
+    strategy."""
+    pile = spark.range(10**9, 10**9 + 4000, numPartitions=8).select(
+        F.col("id").alias("image_id"),
+        (F.lit(5.12) + F.col("id") % 7 * 1e-4).alias("lon"),
+        F.lit(52.34).alias("lat"),
+    )
+    img = pile.unionByName(_dem_probes(spark))
+    dem = dem_tiles_df(spark)
+    conf = {
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "4k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        out = elevation_join(img, dem, broadcast_dem=False)
+        got = {r["image_id"]: r["elevation"] for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert "SortMergeJoin(skew=true)" in plan
+    want = elevation_join(img, dem, broadcast_dem=True).select(
+        "image_id", "elevation"
+    )
+    assert got == {r["image_id"]: r["elevation"] for r in want.collect()}
 
 
 def test_dated_weather_prune_preserves_left_join(spark):

@@ -127,11 +127,15 @@ def test_tiff_roundtrip_property(w, h, seed, comp, rps, pred, with_geo):
 @settings(max_examples=30, deadline=None)
 @given(w=_dims, h=_dims, seed=st.integers(0, 2**31 - 1))
 def test_terrain_gradient_consistency_property(w, h, seed):
-    """_terrain_vec invariants on random grids: slope ≥ 0 and < 90,
-    aspect ∈ [0, 360) or NaN exactly when the local gradient vanishes,
-    hillshade ∈ [0, 255]."""
+    """_terrain corner-kernel invariants on random grids: slope ≥ 0 and
+    < 90, aspect ∈ [0, 360) or NaN exactly when the local gradient
+    vanishes, hillshade ∈ [0, 255]."""
     from tiff_enrichment_pipeline_spark.geotables import DEM_N, DEM_TILE_DEG
-    from tiff_enrichment_pipeline_spark.operators.elevation import _terrain_vec
+    from tiff_enrichment_pipeline_spark.operators.elevation import (
+        _cell,
+        _gather_corners,
+        _terrain,
+    )
 
     rng = np.random.default_rng(seed)
     g = rng.uniform(0.0, 500.0, (DEM_N, DEM_N))
@@ -139,7 +143,9 @@ def test_terrain_gradient_consistency_property(w, h, seed):
     n = 25
     lon_v = (tx + rng.uniform(0.02, 0.98, n)) * DEM_TILE_DEG
     lat_v = (ty + rng.uniform(0.02, 0.98, n)) * DEM_TILE_DEG
-    s, a, hs = _terrain_vec(g, lon_v, lat_v, tx, ty)
+    i0, j0, wx, wy = _cell(lon_v, lat_v, tx, ty)
+    corners = _gather_corners(g[None], np.zeros(n, np.int64), i0, j0)
+    s, a, hs = _terrain(*corners, wx, wy, lat_v)
     assert ((s >= 0.0) & (s < 90.0)).all()
     ok = ~np.isnan(a)
     assert ((a[ok] >= 0.0) & (a[ok] < 360.0)).all()

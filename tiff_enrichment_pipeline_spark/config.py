@@ -48,10 +48,12 @@ class EnrichConfig:
     # enrich(knn_res/knn_ring)
     knn_ring: int = 2
     knn_res: int = 10
-    # DEM strategy: broadcast grids vs salted co-partitioned cogroup —
+    # DEM strategy: broadcast grids vs a sort-merge join on the tile key;
+    # dem_salt > 1 adds explicit salting to the latter (1: AQE's skew-join
+    # split alone, past Spark's skew thresholds) —
     # enrich(broadcast_dem/dem_salt)
     broadcast_dem: bool = True
-    dem_salt: int = 8
+    dem_salt: int = 1
     # dated weather dimension — enrich(observations=...); broadcast_obs
     # False = planetary |stations|×|days| dim too big to broadcast — let
     # AQE plan the (station_id, date) equi-join — enrich(broadcast_obs=...)

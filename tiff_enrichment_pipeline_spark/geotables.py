@@ -450,8 +450,8 @@ _M_PER_DEG_LAT_SQL = "(2.0*CAST(3.141592653589793 AS DOUBLE)*6371000.0/360.0)"
 def terrain_sql(lon: str, lat: str) -> dict[str, str]:
     """Closed-form SQL for slope/aspect/hillshade — the analytic gradient
     of the SAME bilinear surface elevation_bilinear_sql samples (identical
-    corner values, clamps and weights; the engine twin is
-    operators/elevation._terrain_vec):
+    corner values, clamps and weights; the engine twin is the corner
+    kernel operators/elevation._terrain, fed by elevation._cell):
 
       dz/dlon(grid) = (1-wy)(v10-v00) + wy(v11-v01)
       dz/dlat(grid) = (1-wx)(v01-v00) + wx(v11-v10)

@@ -8,28 +8,33 @@ scripts/init-db.sql:59,62) as a grid equi-join (SURVEY.md J7):
 1. Image point → integer tile key ``(floor(lon/T), floor(lat/T))`` — pure
    column math, pushes down to partition pruning when the DEM table is
    written partitioned by tile key.
-2. Equi-join against the DEM tile table (broadcast when the region's DEM
-   fits; sort-merge over tile keys for planetary DEMs — tile keys are
-   uniformly sized, so no skew).
-3. Bilinear sample inside an Arrow-batched pandas UDF over the float32 grid
-   payload (the only place Python touches data — per-batch numpy, never
-   per-row interpretation of pixels; edge samples clamp to the grid border).
+2. Left equi-join against the DEM tile table on that key, one of two ways:
+   - ``broadcast_dem=True`` (a region's DEM): the grids ship to Python once,
+     as one broadcast float32 stack, and the UDF gathers each probe's 4
+     corner samples from it;
+   - ``broadcast_dem=False`` (a planetary DEM): a sort-merge join moves
+     each grid through the shuffle once, the JVM cuts the probe's 4 float32
+     corner words out of it, and only those 16 bytes cross to Python.
+3. Both strategies finish in the same numpy corner kernels (``_bilinear``,
+   ``_terrain``: per-batch numpy, never per-row interpretation of pixels;
+   edge samples clamp to the grid border), so their values are
+   bit-identical.
 
-The grid payload is a raw little-endian float32 N×N buffer in its own binary
-column, so Catalyst prunes it away for any query not sampling elevation.
+The grid payload is a raw little-endian float32 N×N buffer (row-major
+``grid[j, i]``, i = lon axis) in its own binary column, so Catalyst prunes
+it away for any query not sampling elevation.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from tiff_enrichment_pipeline_spark.geotables import DEM_N, DEM_STEP, DEM_TILE_DEG
+from tiff_enrichment_pipeline_spark.operators.skew import replicate_build, with_salt
 
 
 def bilinear_sample_np(
@@ -63,48 +68,85 @@ def tile_key(lon, lat):
     return tx, ty
 
 
-def _bilinear_vec(
-    g: np.ndarray, lon_v: np.ndarray, lat_v: np.ndarray, tx: int, ty: int
-) -> np.ndarray:
-    """Vectorized bilinear sample of one tile grid — the single source of
-    the math shared by the broadcast and partitioned strategies (and the
-    fused flagship UDF), so the strategies agree bit-for-bit."""
-    fx = (lon_v - tx * DEM_TILE_DEG) / DEM_STEP - 0.5
-    fy = (lat_v - ty * DEM_TILE_DEG) / DEM_STEP - 0.5
+# ---------------------------------------------------------------------------
+# Corner kernels — the one copy of the sampling math every DEM path calls
+# ---------------------------------------------------------------------------
+
+# sun position defaults shared with geotables.terrain_sql (GDAL defaults)
+_HS_AZ_DEG = 315.0
+_HS_ALT_DEG = 45.0
+_M_PER_DEG_LAT = 2.0 * 3.141592653589793 * 6371000.0 / 360.0
+
+
+def _cell(lon_v, lat_v, tx_v, ty_v):
+    """Each probe's grid cell (i0, j0) inside its tile and its bilinear
+    weights (wx, wy), in double precision. The SQL twins —
+    geotables._bilinear_pieces_sql and ``_corner_words`` — run the same
+    IEEE ops in the same order, so all three pick the same corners."""
+    fx = (lon_v - tx_v * DEM_TILE_DEG) / DEM_STEP - 0.5
+    fy = (lat_v - ty_v * DEM_TILE_DEG) / DEM_STEP - 0.5
     i0 = np.clip(np.floor(fx), 0, DEM_N - 2).astype(np.int64)
     j0 = np.clip(np.floor(fy), 0, DEM_N - 2).astype(np.int64)
-    wx = np.clip(fx - i0, 0.0, 1.0)
-    wy = np.clip(fy - j0, 0.0, 1.0)
-    v00, v10 = g[j0, i0], g[j0, i0 + 1]
-    v01, v11 = g[j0 + 1, i0], g[j0 + 1, i0 + 1]
+    return i0, j0, np.clip(fx - i0, 0.0, 1.0), np.clip(fy - j0, 0.0, 1.0)
+
+
+def _bilinear(v00, v10, v01, v11, wx, wy):
+    """Bilinear sample from the 4 (float64) corner values."""
     return (1.0 - wy) * ((1.0 - wx) * v00 + wx * v10) + wy * (
         (1.0 - wx) * v01 + wx * v11
     )
 
 
-def _broadcast_grid_stack(dem_tiles: DataFrame):
-    """Broadcast the DEM as ONE stacked ndarray + dense (tx, ty)→index map.
+def _terrain(v00, v10, v01, v11, wx, wy, lat_v):
+    """(slope_deg, aspect_deg, hillshade) — the analytic gradient of the
+    SAME bilinear surface ``_bilinear`` samples (SQL twin:
+    geotables.terrain_sql). Aspect is the azimuth of the downslope
+    direction, clockwise from north, NaN when flat."""
+    gxg = (1.0 - wy) * (v10 - v00) + wy * (v11 - v01)
+    gyg = (1.0 - wx) * (v01 - v00) + wx * (v11 - v10)
+    m_lon = _M_PER_DEG_LAT * np.cos(np.radians(lat_v))
+    gx = gxg / (DEM_STEP * m_lon)
+    gy = gyg / (DEM_STEP * _M_PER_DEG_LAT)
+    slope_r = np.arctan(np.sqrt(gx * gx + gy * gy))  # NOT hypot: SQL twin is SQRT
+    ar = np.arctan2(-gx, -gy)
+    aspect = np.degrees(ar)
+    aspect = np.where(aspect < 0.0, aspect + 360.0, aspect)
+    # an infinitesimally-negative azimuth + 360.0 rounds to EXACTLY 360.0
+    # (float spacing at 360 ≈ 5.7e-14) — the final mod closes the [0, 360)
+    # boundary; inputs are ≥ 0 here so numpy/floored and SQL/fmod agree
+    aspect = np.mod(aspect, 360.0)
+    aspect = np.where((gxg == 0.0) & (gyg == 0.0), np.nan, aspect)
+    zen = np.radians(90.0 - _HS_ALT_DEG)
+    azr = np.radians(_HS_AZ_DEG)
+    hs = 255.0 * (
+        np.cos(zen) * np.cos(slope_r)
+        + np.sin(zen) * np.sin(slope_r) * np.cos(azr - ar)
+    )
+    return np.degrees(slope_r), aspect, np.maximum(hs, 0.0)
 
-    Round-8: the per-batch tile-group loop (dict lookup + fancy index +
-    a ~13-row `_bilinear_vec` call per tile at fixture tile counts) spent
-    its time in per-group Python overhead, not math — ~1.2 µs/row at the
-    1247-tile / 16384-row-batch shape. With a (T, N, N) stack and a dense
-    int32 map, a whole batch resolves tile indices and gathers the 4
-    corner values in a handful of vectorized ops — no per-tile loop.
+
+# ---------------------------------------------------------------------------
+# Broadcast strategy: one float32 stack, corners gathered in Python
+# ---------------------------------------------------------------------------
+
+def _broadcast_grid_stack(dem_tiles: DataFrame):
+    """Broadcast the DEM as ONE stacked float32 ndarray + dense (tx, ty)→index
+    map, so a whole batch resolves tile indices and gathers its corner
+    values in a handful of vectorized ops — no per-tile loop. float32 is
+    the grid's own precision: the gather upcasts the 4 corners, so values
+    match a float64 stack at half the broadcast bytes.
     Returns a broadcast of (stack, map2d, tx0, ty0); probes off the map
-    (world points) resolve to index -1 → NaN, same as the dict-miss path.
+    (world points) resolve to index -1.
     """
     tile_rows = dem_tiles.select("tile_x", "tile_y", "grid").collect()
     txs = np.array([r["tile_x"] for r in tile_rows], dtype=np.int64)
     tys = np.array([r["tile_y"] for r in tile_rows], dtype=np.int64)
     stack = np.stack(
         [
-            np.frombuffer(r["grid"], dtype="<f4")
-            .reshape(DEM_N, DEM_N)
-            .astype(np.float64)
+            np.frombuffer(r["grid"], dtype="<f4").reshape(DEM_N, DEM_N)
             for r in tile_rows
         ]
-    ) if tile_rows else np.zeros((0, DEM_N, DEM_N))
+    ) if tile_rows else np.zeros((0, DEM_N, DEM_N), dtype=np.float32)
     if len(tile_rows):
         tx0, ty0 = int(txs.min()), int(tys.min())
         map2d = np.full(
@@ -137,86 +179,149 @@ def _tile_indices(map2d, tx0, ty0, tx_v, ty_v, valid):
     return tidx
 
 
-def _batch_tile_resolve(lon_s, lat_s, tx_s, ty_s, map2d, tx0, ty0):
-    """Decode one Arrow batch's (lon, lat, tile key) columns and resolve
-    stack indices — the shared prelude of the stacked-gather UDFs.
-    Returns (lon_v, lat_v, tx_v, ty_v, rows, tidx_rows) where ``rows``
-    selects the on-DEM probes of the batch."""
-    lon_v = lon_s.to_numpy(np.float64, na_value=np.nan)
-    lat_v = lat_s.to_numpy(np.float64, na_value=np.nan)
-    valid = ~np.isnan(lon_v) & ~np.isnan(lat_v)
-    tx_v = np.where(
-        valid, tx_s.to_numpy(np.float64, na_value=np.nan), 0
-    ).astype(np.int64)
-    ty_v = np.where(
-        valid, ty_s.to_numpy(np.float64, na_value=np.nan), 0
-    ).astype(np.int64)
-    tidx = _tile_indices(map2d, tx0, ty0, tx_v, ty_v, valid)
-    rows = np.flatnonzero(tidx >= 0)
-    return lon_v, lat_v, tx_v, ty_v, rows, tidx[rows]
+def _gather_corners(stack, tidx, i0, j0):
+    """(v00, v10, v01, v11) of each probe's cell, upcast to float64."""
+    return [
+        stack[tidx, j, i].astype(np.float64)
+        for j, i in ((j0, i0), (j0, i0 + 1), (j0 + 1, i0), (j0 + 1, i0 + 1))
+    ]
 
 
-def _bilinear_gather(
-    stack: np.ndarray,
-    tidx: np.ndarray,
-    lon_v: np.ndarray,
-    lat_v: np.ndarray,
-    tx_v: np.ndarray,
-    ty_v: np.ndarray,
-) -> np.ndarray:
-    """Whole-batch bilinear sample via stacked-grid gather. Element-wise
-    arithmetic is IDENTICAL to `_bilinear_vec` (same ops, same order, only
-    the tile scalar became a per-row array), so values are bit-identical
-    to the per-tile loop — pinned by test_operators_geo."""
-    fx = (lon_v - tx_v * DEM_TILE_DEG) / DEM_STEP - 0.5
-    fy = (lat_v - ty_v * DEM_TILE_DEG) / DEM_STEP - 0.5
-    i0 = np.clip(np.floor(fx), 0, DEM_N - 2).astype(np.int64)
-    j0 = np.clip(np.floor(fy), 0, DEM_N - 2).astype(np.int64)
-    wx = np.clip(fx - i0, 0.0, 1.0)
-    wy = np.clip(fy - j0, 0.0, 1.0)
-    v00, v10 = stack[tidx, j0, i0], stack[tidx, j0, i0 + 1]
-    v01, v11 = stack[tidx, j0 + 1, i0], stack[tidx, j0 + 1, i0 + 1]
-    return (1.0 - wy) * ((1.0 - wx) * v00 + wx * v10) + wy * (
-        (1.0 - wx) * v01 + wx * v11
+def _bilinear_gather(stack, tidx, lon_v, lat_v, tx_v, ty_v) -> np.ndarray:
+    """Whole-batch bilinear sample of the stacked grids (the fused
+    flagship UDF in geo_arrow calls this too)."""
+    i0, j0, wx, wy = _cell(lon_v, lat_v, tx_v, ty_v)
+    return _bilinear(*_gather_corners(stack, tidx, i0, j0), wx, wy)
+
+
+def _stack_resolver(dem_tiles: DataFrame):
+    """Per-batch (rows, corners, wx, wy, lat) from the broadcast stack,
+    for the on-DEM rows of a (lon, lat, tile_x, tile_y) batch."""
+    bc = _broadcast_grid_stack(dem_tiles)
+
+    def resolve(lon_s, lat_s, tx_s, ty_s):
+        stack, map2d, tx0, ty0 = bc.value
+        lon_v, lat_v, tx_v, ty_v = (
+            s.to_numpy(np.float64, na_value=np.nan)
+            for s in (lon_s, lat_s, tx_s, ty_s)
+        )
+        valid = ~np.isnan(lon_v) & ~np.isnan(lat_v) & ~np.isnan(tx_v)
+        tx_i = np.where(valid, tx_v, 0).astype(np.int64)
+        ty_i = np.where(valid, ty_v, 0).astype(np.int64)
+        tidx = _tile_indices(map2d, tx0, ty0, tx_i, ty_i, valid)
+        rows = np.flatnonzero(tidx >= 0)
+        lat_r = lat_v[rows]
+        i0, j0, wx, wy = _cell(lon_v[rows], lat_r, tx_i[rows], ty_i[rows])
+        return rows, _gather_corners(stack, tidx[rows], i0, j0), wx, wy, lat_r
+
+    return resolve
+
+
+# ---------------------------------------------------------------------------
+# Partitioned strategy: sort-merge join, corners cut out in the JVM
+# ---------------------------------------------------------------------------
+
+def _corner_words(lon: str, lat: str):
+    """(v00, v10, v01, v11) as 16 bytes of little-endian float32, cut out
+    of ``grid`` in the JVM: two 8-byte runs, grid[j0, i0:i0+2] and
+    grid[j0+1, i0:i0+2]. i0/j0 are ``_cell``'s, op for op."""
+
+    def lo(coord, tile):
+        f = (F.col(coord) - F.col(tile) * F.lit(DEM_TILE_DEG)) / F.lit(
+            DEM_STEP
+        ) - F.lit(0.5)
+        return F.least(F.greatest(F.floor(f), F.lit(0)), F.lit(DEM_N - 2))
+
+    i0, j0 = lo(lon, "tile_x"), lo(lat, "tile_y")
+
+    def run(j):  # substr positions are 1-based
+        pos = (F.lit(4) * (j * F.lit(DEM_N) + i0) + F.lit(1)).cast("int")
+        return F.col("grid").substr(pos, F.lit(8))
+
+    return F.concat(run(j0), run(j0 + F.lit(1)))
+
+
+def _resolve_corners(lon_s, lat_s, tx_s, ty_s, c_s):
+    """Per-batch (rows, corners, wx, wy, lat) from the joined corner words;
+    rows without them (off-DEM, no GPS) are left out."""
+    rows = np.flatnonzero(c_s.notna().to_numpy())
+    words = np.frombuffer(b"".join(c_s.iloc[rows]), dtype="<f4")
+    corners = list(words.reshape(-1, 4).astype(np.float64).T)
+    lon_v, lat_v, tx_v, ty_v = (
+        s.to_numpy(np.float64, na_value=np.nan)[rows]
+        for s in (lon_s, lat_s, tx_s, ty_s)
     )
+    _, _, wx, wy = _cell(lon_v, lat_v, tx_v, ty_v)
+    return rows, corners, wx, wy, lat_v
 
 
-def _terrain_gather(
-    stack: np.ndarray,
-    tidx: np.ndarray,
-    lon_v: np.ndarray,
-    lat_v: np.ndarray,
-    tx_v: np.ndarray,
-    ty_v: np.ndarray,
-):
-    """Whole-batch `_terrain_vec` twin over the stacked grids (same
-    element-wise ops/order — value-identity pinned by tests)."""
-    fx = (lon_v - tx_v * DEM_TILE_DEG) / DEM_STEP - 0.5
-    fy = (lat_v - ty_v * DEM_TILE_DEG) / DEM_STEP - 0.5
-    i0 = np.clip(np.floor(fx), 0, DEM_N - 2).astype(np.int64)
-    j0 = np.clip(np.floor(fy), 0, DEM_N - 2).astype(np.int64)
-    wx = np.clip(fx - i0, 0.0, 1.0)
-    wy = np.clip(fy - j0, 0.0, 1.0)
-    v00, v10 = stack[tidx, j0, i0], stack[tidx, j0, i0 + 1]
-    v01, v11 = stack[tidx, j0 + 1, i0], stack[tidx, j0 + 1, i0 + 1]
-    gxg = (1.0 - wy) * (v10 - v00) + wy * (v11 - v01)
-    gyg = (1.0 - wx) * (v01 - v00) + wx * (v11 - v10)
-    m_lon = _M_PER_DEG_LAT * np.cos(np.radians(lat_v))
-    gx = gxg / (DEM_STEP * m_lon)
-    gy = gyg / (DEM_STEP * _M_PER_DEG_LAT)
-    slope_r = np.arctan(np.sqrt(gx * gx + gy * gy))
-    ar = np.arctan2(-gx, -gy)
-    aspect = np.degrees(ar)
-    aspect = np.where(aspect < 0.0, aspect + 360.0, aspect)
-    aspect = np.mod(aspect, 360.0)
-    aspect = np.where((gxg == 0.0) & (gyg == 0.0), np.nan, aspect)
-    zen = np.radians(90.0 - _HS_ALT_DEG)
-    azr = np.radians(_HS_AZ_DEG)
-    hs = 255.0 * (
-        np.cos(zen) * np.cos(slope_r)
-        + np.sin(zen) * np.sin(slope_r) * np.cos(azr - ar)
-    )
-    return np.degrees(slope_r), aspect, np.maximum(hs, 0.0)
+# ---------------------------------------------------------------------------
+# The join both operators share
+# ---------------------------------------------------------------------------
+
+def _sampler(names, kernel, resolve):
+    """Pandas UDF → struct of the double columns ``names``: ``resolve`` maps
+    a batch to the rows it can sample plus their corners, weights and
+    latitudes; ``kernel(corners, wx, wy, lat)`` returns one array per name.
+    Every other row is NaN."""
+    schema = StructType([StructField(n, DoubleType()) for n in names])
+
+    @F.pandas_udf(schema)
+    def _sample(*cols: pd.Series) -> pd.DataFrame:
+        rows, corners, wx, wy, lat_v = resolve(*cols)
+        out = {n: np.full(len(cols[0]), np.nan) for n in names}
+        for n, v in zip(names, kernel(corners, wx, wy, lat_v)):
+            out[n][rows] = v
+        return pd.DataFrame(out)
+
+    return _sample
+
+
+def _dem_join(
+    images: DataFrame,
+    dem_tiles: DataFrame,
+    meta: list,
+    names: tuple[str, ...],
+    kernel,
+    lon: str,
+    lat: str,
+    broadcast_dem: bool,
+    salt: int,
+) -> DataFrame:
+    """images ⟕ DEM on the tile key, + the ``meta`` columns of the DEM
+    table and the double columns ``names`` that ``kernel`` computes from
+    each probe's corners (NULL off-DEM, without GPS, or where NaN)."""
+    tx, ty = tile_key(F.col(lon), F.col(lat))
+    probe = images.withColumn("tile_x", tx).withColumn("tile_y", ty)
+    keys = ["tile_x", "tile_y"]
+    if broadcast_dem:
+        dem = dem_tiles.select(*keys, *meta, F.lit(True).alias("_on_dem"))
+        joined = probe.join(F.broadcast(dem), keys, "left")
+        sample = _sampler(names, kernel, _stack_resolver(dem_tiles))
+        v = F.when(F.col("_on_dem"), sample(lon, lat, *keys))
+    else:
+        dem = dem_tiles.select(*keys, "grid", *meta)
+        if salt > 1:
+            probe = with_salt(probe, images.columns, salt)
+            dem = replicate_build(dem, salt)
+            keys = [*keys, "_salt"]
+        # the merge hint keeps a DEM declared too big to broadcast from
+        # being broadcast; AQE's skew-join split divides a hot tile's
+        # probe partition once it passes spark.sql.adaptive.skewJoin.*
+        joined = (
+            probe.join(dem.hint("merge"), keys, "left")
+            .withColumn("_corners", _corner_words(lon, lat))
+            .drop("grid", "_salt")
+        )
+        sample = _sampler(names, kernel, _resolve_corners)
+        v = F.when(
+            F.col("_corners").isNotNull(),
+            sample(lon, lat, "tile_x", "tile_y", "_corners"),
+        )
+    out = joined.withColumn("_v", v)
+    for n in names:  # NaN → NULL, matching the SQL oracle's CASE WHEN
+        out = out.withColumn(n, F.when(~F.isnan(out["_v"][n]), out["_v"][n]))
+    return out.drop("_v", "_on_dem", "_corners")
 
 
 def elevation_join(
@@ -225,7 +330,7 @@ def elevation_join(
     lon: str = "lon",
     lat: str = "lat",
     broadcast_dem: bool = True,
-    salt: int = 8,
+    salt: int = 1,
 ) -> DataFrame:
     """images ⟕ DEM → + elevation (double, NULL off-DEM), elevation_source,
     elevation_accuracy_m.
@@ -233,288 +338,31 @@ def elevation_join(
     ``dem_tiles``: tile_x:int, tile_y:int, grid:binary (N*N float32 LE),
     accuracy_m:double, source:string.
 
-    The grid payloads ship to Python ONCE via a Spark broadcast variable
-    (not per-row through the join → Arrow — that costs |images|·4 KiB of
-    serialization); the UDF input is just (lon, lat, tx, ty). The tile
-    *metadata* (source, accuracy — no grid) still attaches via a broadcast
-    equi-join so Catalyst sees normal relational lineage. For a DEM too
-    large to broadcast, pre-partition both sides by tile key and use a
-    per-tile ``applyInPandas`` instead (grid crosses once per tile-group).
+    ``broadcast_dem=True``: the grids ship to Python ONCE via a Spark
+    broadcast variable (not per-row through the join → Arrow, which costs
+    |images|·4 KiB of serialization); the UDF input is (lon, lat, tile key),
+    and the tile metadata (source, accuracy — no grid) attaches via a
+    broadcast equi-join so Catalyst sees normal relational lineage.
+
+    ``broadcast_dem=False``, for a DEM too large to broadcast: one
+    sort-merge left join on the tile key, so each grid crosses the shuffle
+    once, and the JVM cuts the probe's 4 corner words (16 bytes) out of the
+    grid before the Python node. A hot tile's probe partition is split by
+    AQE's skew join once it passes Spark's skew thresholds
+    (``spark.sql.adaptive.skewJoin.*``: 256 MB and 5× the median by
+    default). ``salt > 1`` instead scatters each tile's probes over
+    ``salt`` join keys by a hash of the whole probe row, with the DEM side
+    replicated ×salt.
     """
-    if not broadcast_dem:
-        return _elevation_partitioned(
-            images, dem_tiles, lon=lon, lat=lat, salt=salt
-        )
-    bc = _broadcast_grid_stack(dem_tiles)
-
-    @F.pandas_udf(DoubleType())
-    def _sample(
-        it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        stack, map2d, tx0, ty0 = bc.value
-        for lon_s, lat_s, tx_s, ty_s in it:
-            lon_v, lat_v, tx_v, ty_v, rows, ti = _batch_tile_resolve(
-                lon_s, lat_s, tx_s, ty_s, map2d, tx0, ty0
-            )
-            out = np.full(len(lon_v), np.nan)
-            if len(rows):
-                out[rows] = _bilinear_gather(
-                    stack, ti, lon_v[rows], lat_v[rows], tx_v[rows],
-                    ty_v[rows],
-                )
-            yield pd.Series(out)
-
-    tx, ty = tile_key(F.col(lon), F.col(lat))
-    probe = images.withColumn("tile_x", tx).withColumn("tile_y", ty)
-    meta = dem_tiles.select(
-        "tile_x", "tile_y",
+    meta = [
         F.col("source").alias("elevation_source"),
         F.col("accuracy_m").alias("elevation_accuracy_m"),
-    )
-    joined = probe.join(F.broadcast(meta), ["tile_x", "tile_y"], "left")
-    return joined.withColumn(
-        "elevation",
-        F.when(
-            F.col("elevation_source").isNotNull(),
-            _sample(F.col(lon), F.col(lat), F.col("tile_x"), F.col("tile_y")),
-        ),
-    )
-
-
-def _partitioned_tile_apply(
-    images: DataFrame,
-    dem_tiles: DataFrame,
-    out_fields,
-    kernel,
-    empty_fill,
-    lon: str = "lon",
-    lat: str = "lat",
-    salt: int = 8,
-    tile_buckets: int | None = None,
-) -> DataFrame:
-    """Planetary-DEM strategy scaffold: co-partition probe and DEM on a
-    coarse tile-bucket key, cogrouped ``applyInPandas`` that loops the
-    bucket's tiles inside ONE Arrow call — shared by the elevation and
-    terrain operators.
-
-    The DEM never collects to the driver and never broadcasts — a global
-    30 m DEM is TBs (reference sources usgs_3dep/nasa_srtm,
-    scripts/init-db.sql:59,62). Instead both sides shuffle once on
-    ``(tile_x, tile_y, salt)``; each cogroup sees one tile's probes plus
-    that tile's single grid row, so the 4 KiB grid crosses to Python once
-    per (tile, salt) — never per probe row.
-
-    ``salt`` defuses probe-side hot tiles (the fixture pins 20% of images
-    into a ~0.02° cluster = ONE 0.1° tile): probes spread uniformly over
-    ``salt`` sub-groups via a hash of the coordinates; the DEM side
-    replicates each grid row ×salt (4 KiB × salt — negligible) so every
-    sub-group still pairs with its tile.
-
-    ``tile_buckets`` (VERDICT r5 #4): the r5 shape cogrouped on the RAW
-    tile key — |tiles|×salt pandas groups, and at ~10k groups the
-    per-group Arrow fixed cost (~1.5 ms each) dominated: 16 s vs ~1 s
-    broadcast at 300k probes. Tiles now hash into
-    ``tile_buckets`` coarse buckets (default 4×defaultParallelism/salt,
-    so ~4 tasks' worth of groups per core) and the UDF loops the
-    bucket's tiles inside one Arrow call — per-call cost amortizes over
-    |tiles|/buckets tiles while the shuffle still moves each probe row
-    and each 4 KiB grid exactly once. Skew behavior is unchanged: a hot
-    tile's probes still split across ``salt`` sub-groups (the bucket key
-    includes the salt), and bucket hashing spreads tiles uniformly.
-
-    ``kernel(grid, lon_v, lat_v, tx, ty, tile_row) -> dict[col, values]``
-    (values: arrays of the group length or broadcastable scalars);
-    ``empty_fill(n) -> dict[col, values]`` for GPS-less sub-groups;
-    ``out_fields``: the appended StructFields, in kernel-dict order.
-    """
-    from pyspark.sql.types import StructType
-
-    if tile_buckets is None:
-        par = images.sparkSession.sparkContext.defaultParallelism
-        tile_buckets = max(1, (4 * par) // max(1, salt))
-    tx, ty = tile_key(F.col(lon), F.col(lat))
-    keyed = images.withColumn("tile_x", tx).withColumn("tile_y", ty)
-    # off-DEM probes (worldwide points, null GPS) never enter the shuffle
-    # or the Python boundary: a broadcast semi/anti split on the (small)
-    # tile-key set routes them straight to NULL columns. Without this,
-    # every distinct off-DEM tile becomes its own empty-right cogroup —
-    # thousands of one-row Python calls (measured 23 s → 9 s at sf0.1).
-    dem_keys = dem_tiles.select("tile_x", "tile_y")
-    on_dem = keyed.join(F.broadcast(dem_keys), ["tile_x", "tile_y"], "left_semi")
-    off_dem = keyed.join(F.broadcast(dem_keys), ["tile_x", "tile_y"], "left_anti")
-    from tiff_enrichment_pipeline_spark.operators.skew import replicate_build
-
-    # probe salt from the coordinates (not skew.with_salt's single identity
-    # column — two coordinate columns ARE the row identity here); DEM side
-    # replicated ×salt by the shared helper so the convention stays single
-    bucket = F.pmod(
-        F.xxhash64(F.col("tile_x"), F.col("tile_y")), F.lit(tile_buckets)
-    ).cast("int")
-    probe = on_dem.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col(lon), F.col(lat)), F.lit(salt)).cast("int"),
-    ).withColumn("_bucket", bucket)
-    dem_s = replicate_build(dem_tiles, salt).withColumn("_bucket", bucket)
-
-    tmp_cols = ("_salt", "_bucket")
-    out_schema = StructType(
-        [f for f in probe.schema.fields if f.name not in tmp_cols]
-        + list(out_fields)
-    )
-    probe_cols = [
-        f.name for f in probe.schema.fields if f.name not in tmp_cols
     ]
-
-    def _apply_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        out = left[probe_cols].copy()
-        n = len(out)
-        # fill-first, then overwrite per tile: GPS-less rows keep the
-        # fill, and dtype-stable numpy buffers take per-tile slices
-        buf = {
-            name: pd.Series(vals).to_numpy()
-            for name, vals in empty_fill(n).items()
-        }
-        if not right.empty:
-            grids = {
-                (int(r["tile_x"]), int(r["tile_y"])): r
-                for _, r in right.iterrows()
-            }
-            lon_all = left[lon].to_numpy(np.float64, na_value=np.nan)
-            lat_all = left[lat].to_numpy(np.float64, na_value=np.nan)
-            for (txv, tyv), rows in left.groupby(
-                ["tile_x", "tile_y"], sort=False, dropna=False
-            ).indices.items():
-                r = grids.get((int(txv), int(tyv)))
-                if r is None:  # off-DEM rows are pre-routed; belt+braces
-                    continue
-                g = (
-                    np.frombuffer(r["grid"], dtype="<f4")
-                    .reshape(DEM_N, DEM_N)
-                    .astype(np.float64)
-                )
-                for name, vals in kernel(
-                    g, lon_all[rows], lat_all[rows], int(txv), int(tyv), r
-                ).items():
-                    buf[name][rows] = vals  # scalar kernels broadcast
-        for name in buf:
-            out[name] = buf[name]
-        return out
-
-    grouped = probe.groupBy("_bucket", "_salt").cogroup(
-        dem_s.groupBy("_bucket", "_salt")
+    return _dem_join(
+        images, dem_tiles, meta, ("elevation",),
+        lambda c, wx, wy, lat_v: (_bilinear(*c, wx, wy),),
+        lon, lat, broadcast_dem, salt,
     )
-    sampled = grouped.applyInPandas(_apply_group, out_schema)
-    off = off_dem.select(
-        *probe_cols,
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in out_fields],
-    )
-    return sampled.unionByName(off)
-
-
-def _elevation_partitioned(
-    images: DataFrame,
-    dem_tiles: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    salt: int = 8,
-) -> DataFrame:
-    """Planetary-DEM elevation via _partitioned_tile_apply. Output values
-    are bit-identical to the broadcast strategy (shared ``_bilinear_vec``,
-    pinned by the ``elevation_partitioned`` oracle row)."""
-    from pyspark.sql.types import DoubleType, StringType, StructField
-
-    def kernel(g, lon_v, lat_v, tx, ty, r):
-        return {
-            "elevation": _bilinear_vec(g, lon_v, lat_v, tx, ty),
-            "elevation_source": r["source"],
-            "elevation_accuracy_m": float(r["accuracy_m"]),
-        }
-
-    def empty_fill(n):
-        return {
-            "elevation": np.full(n, np.nan),
-            "elevation_source": pd.Series([None] * n, dtype="object"),
-            "elevation_accuracy_m": np.full(n, np.nan),
-        }
-
-    result = _partitioned_tile_apply(
-        images,
-        dem_tiles,
-        [
-            StructField("elevation", DoubleType()),
-            StructField("elevation_source", StringType()),
-            StructField("elevation_accuracy_m", DoubleType()),
-        ],
-        kernel,
-        empty_fill,
-        lon=lon,
-        lat=lat,
-        salt=salt,
-    )
-    # NaN → NULL off-DEM (and for GPS-less rows), matching the broadcast
-    # strategy's F.when(...) NULL semantics
-    return result.withColumn(
-        "elevation",
-        F.when(
-            F.col("elevation_source").isNotNull()
-            & ~F.isnan(F.col("elevation")),
-            F.col("elevation"),
-        ),
-    ).withColumn(
-        "elevation_accuracy_m",
-        F.when(
-            ~F.isnan(F.col("elevation_accuracy_m")),
-            F.col("elevation_accuracy_m"),
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Terrain derivatives: slope / aspect / hillshade
-# ---------------------------------------------------------------------------
-
-# sun position defaults shared with geotables.terrain_sql (GDAL defaults)
-_HS_AZ_DEG = 315.0
-_HS_ALT_DEG = 45.0
-_M_PER_DEG_LAT = 2.0 * 3.141592653589793 * 6371000.0 / 360.0
-
-
-def _terrain_vec(
-    g: np.ndarray, lon_v: np.ndarray, lat_v: np.ndarray, tx: int, ty: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(slope_deg, aspect_deg, hillshade) — the analytic gradient of the
-    SAME bilinear surface _bilinear_vec samples (identical corners, clamps
-    and weights; SQL twin: geotables.terrain_sql). Aspect is the azimuth
-    of the downslope direction, clockwise from north, NaN when flat."""
-    fx = (lon_v - tx * DEM_TILE_DEG) / DEM_STEP - 0.5
-    fy = (lat_v - ty * DEM_TILE_DEG) / DEM_STEP - 0.5
-    i0 = np.clip(np.floor(fx), 0, DEM_N - 2).astype(np.int64)
-    j0 = np.clip(np.floor(fy), 0, DEM_N - 2).astype(np.int64)
-    wx = np.clip(fx - i0, 0.0, 1.0)
-    wy = np.clip(fy - j0, 0.0, 1.0)
-    v00, v10 = g[j0, i0], g[j0, i0 + 1]
-    v01, v11 = g[j0 + 1, i0], g[j0 + 1, i0 + 1]
-    gxg = (1.0 - wy) * (v10 - v00) + wy * (v11 - v01)
-    gyg = (1.0 - wx) * (v01 - v00) + wx * (v11 - v10)
-    m_lon = _M_PER_DEG_LAT * np.cos(np.radians(lat_v))
-    gx = gxg / (DEM_STEP * m_lon)
-    gy = gyg / (DEM_STEP * _M_PER_DEG_LAT)
-    slope_r = np.arctan(np.sqrt(gx * gx + gy * gy))  # NOT hypot: SQL twin is SQRT
-    ar = np.arctan2(-gx, -gy)
-    aspect = np.degrees(ar)
-    aspect = np.where(aspect < 0.0, aspect + 360.0, aspect)
-    # an infinitesimally-negative azimuth + 360.0 rounds to EXACTLY 360.0
-    # (float spacing at 360 ≈ 5.7e-14) — the final mod closes the [0, 360)
-    # boundary; inputs are ≥ 0 here so numpy/floored and SQL/fmod agree
-    aspect = np.mod(aspect, 360.0)
-    aspect = np.where((gxg == 0.0) & (gyg == 0.0), np.nan, aspect)
-    zen = np.radians(90.0 - _HS_ALT_DEG)
-    azr = np.radians(_HS_AZ_DEG)
-    hs = 255.0 * (
-        np.cos(zen) * np.cos(slope_r)
-        + np.sin(zen) * np.sin(slope_r) * np.cos(azr - ar)
-    )
-    return np.degrees(slope_r), aspect, np.maximum(hs, 0.0)
 
 
 def terrain_join(
@@ -523,91 +371,14 @@ def terrain_join(
     lon: str = "lon",
     lat: str = "lat",
     broadcast_dem: bool = True,
-    salt: int = 8,
+    salt: int = 1,
 ) -> DataFrame:
     """images ⟕ DEM → + slope_deg / aspect_deg / hillshade (NULL off-DEM
-    or without GPS). ``broadcast_dem=True``: grids cross to Python once
-    via a broadcast variable, the UDF ships only (lon, lat, tile key) —
-    same data motion as elevation_join. ``broadcast_dem=False``: the
-    planetary-DEM cogroup strategy (shared _partitioned_tile_apply
-    scaffold), value-identical by the shared ``_terrain_vec``."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    if not broadcast_dem:
-        def kernel(g, lon_v, lat_v, tx, ty, r):
-            s, a, h = _terrain_vec(g, lon_v, lat_v, tx, ty)
-            return {"slope_deg": s, "aspect_deg": a, "hillshade": h}
-
-        def empty_fill(n):
-            return {
-                "slope_deg": np.full(n, np.nan),
-                "aspect_deg": np.full(n, np.nan),
-                "hillshade": np.full(n, np.nan),
-            }
-
-        result = _partitioned_tile_apply(
-            images,
-            dem_tiles,
-            [
-                StructField("slope_deg", DoubleType()),
-                StructField("aspect_deg", DoubleType()),
-                StructField("hillshade", DoubleType()),
-            ],
-            kernel,
-            empty_fill,
-            lon=lon,
-            lat=lat,
-            salt=salt,
-        )
-        for c in ("slope_deg", "aspect_deg", "hillshade"):
-            # NaN → NULL (flat aspect, GPS-less rows) like the broadcast path
-            result = result.withColumn(
-                c, F.when(~F.isnan(F.col(c)), F.col(c))
-            )
-        return result
-
-    bc = _broadcast_grid_stack(dem_tiles)
-    t_struct = StructType(
-        [
-            StructField("slope_deg", DoubleType()),
-            StructField("aspect_deg", DoubleType()),
-            StructField("hillshade", DoubleType()),
-        ]
+    or without GPS; aspect NULL when flat). Same two strategies, data
+    motion and ``salt`` as elevation_join, value-identical through the
+    shared ``_terrain`` corner kernel."""
+    return _dem_join(
+        images, dem_tiles, [], ("slope_deg", "aspect_deg", "hillshade"),
+        lambda c, wx, wy, lat_v: _terrain(*c, wx, wy, lat_v),
+        lon, lat, broadcast_dem, salt,
     )
-
-    @F.pandas_udf(t_struct)
-    def _terr(
-        lon_s: pd.Series, lat_s: pd.Series, tx_s: pd.Series, ty_s: pd.Series
-    ) -> pd.DataFrame:
-        stack, map2d, tx0, ty0 = bc.value
-        lon_v, lat_v, tx_v, ty_v, rows, ti = _batch_tile_resolve(
-            lon_s, lat_s, tx_s, ty_s, map2d, tx0, ty0
-        )
-        n = len(lon_v)
-        out = {
-            "slope_deg": np.full(n, np.nan),
-            "aspect_deg": np.full(n, np.nan),
-            "hillshade": np.full(n, np.nan),
-        }
-        if len(rows):
-            s, a, h = _terrain_gather(
-                stack, ti, lon_v[rows], lat_v[rows], tx_v[rows], ty_v[rows]
-            )
-            out["slope_deg"][rows] = s
-            out["aspect_deg"][rows] = a
-            out["hillshade"][rows] = h
-        return pd.DataFrame(out)
-
-    tx, ty = tile_key(F.col(lon), F.col(lat))
-    probe = images.withColumn("tile_x", tx).withColumn("tile_y", ty)
-    on_dem = dem_tiles.select("tile_x", "tile_y", F.lit(True).alias("_on_dem"))
-    joined = probe.join(F.broadcast(on_dem), ["tile_x", "tile_y"], "left")
-    t = _terr(F.col(lon), F.col(lat), F.col("tile_x"), F.col("tile_y"))
-    out = joined.withColumn("_t", F.when(F.col("_on_dem"), t))
-    # NaN → NULL (flat-aspect and off-DEM rows) so engine NULL semantics
-    # match the SQL oracle's CASE WHEN
-    for c in ("slope_deg", "aspect_deg", "hillshade"):
-        out = out.withColumn(
-            c, F.when(~F.isnan(F.col(f"_t.{c}")), F.col(f"_t.{c}"))
-        )
-    return out.drop("_t", "_on_dem")

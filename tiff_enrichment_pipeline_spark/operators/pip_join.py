@@ -64,7 +64,6 @@ def polygon_cell_cover(polygons: DataFrame, res: int = grid.RES8) -> DataFrame:
     )
 
 
-@F.pandas_udf(BooleanType())
 def _pip_even_odd(
     it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
 ) -> Iterator[pd.Series]:
@@ -124,8 +123,11 @@ def pip_refine_predicate(lon: Column, lat: Column) -> Column:
         (lon >= F.col("xmin")) & (lon < F.col("xmax"))
         & (lat >= F.col("ymin")) & (lat < F.col("ymax"))
     )
+    # the UDF is built per call: a module-level one would keep the first
+    # SparkContext's accumulator across a session restart (raster/udfs.py)
+    even_odd = F.pandas_udf(BooleanType())(_pip_even_odd)
     return F.when(F.col("is_rect"), bbox_ok).otherwise(
-        bbox_ok & _pip_even_odd(lon, lat, F.col("vertices"))
+        bbox_ok & even_odd(lon, lat, F.col("vertices"))
     )
 
 

@@ -10,13 +10,20 @@ Where that matters and what this engine does (SURVEY.md §4):
 2. **Per-cell aggregations** — Spark's partial (map-side) aggregation
    already absorbs algebraic-agg skew; no salting needed for
    count/sum/min/max per cell.
-3. **Shuffle joins on cell keys** (big probe × non-broadcastable build,
-   e.g. a planetary polygon cover) — the case that needs explicit salting:
-   ``salted_join`` replicates the build side ×N and scatters the probe by
-   ``pmod(hash(row-identity), N)``, turning one hot partition into N even
-   ones. AQE's skew-join splitting (enabled in session.py) is the runtime
-   backstop; explicit salting also covers the aggregation-after-join shape
-   AQE can't fix.
+3. **Shuffle joins on cell or tile keys** (big probe × non-broadcastable
+   build: a planetary polygon cover in ``within_distance_join``, a
+   planetary DEM in ``elevation_join``/``terrain_join`` with
+   ``broadcast_dem=False``) — plain sort-merge joins by default, with
+   AQE's skew-join splitting (enabled in session.py) dividing a hot key's
+   partition at run time once it passes ``spark.sql.adaptive.skewJoin.*``
+   (256 MB and 5× the median by default; below that a hot partition is
+   left whole). Explicit salting is opt-in (``salt=N``):
+   ``salted_join`` / ``with_salt`` + ``replicate_build`` replicate the
+   build side ×N and scatter the probe by ``pmod(hash(row identity), N)``,
+   turning one hot partition into N even ones; it also covers the
+   aggregation-after-join shape AQE can't fix. The identity must tell the
+   rows of a pileup apart (the DEM joins hash the whole probe row, not its
+   coordinates: an exact-point pileup shares them).
 4. **collect_list / windows per hot key** — avoided by construction (the
    kNN top-k is computed map-side; capture groupBy keys are uniform ids).
 """
@@ -27,11 +34,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, identity_col: str, n_salt: int) -> DataFrame:
-    """Deterministic salt in [0, n_salt) from the row identity (NOT rand():
-    resume/retry must reproduce the same salt — SURVEY.md §7.3)."""
+def with_salt(
+    df: DataFrame, identity_col: str | list[str], n_salt: int
+) -> DataFrame:
+    """Deterministic salt in [0, n_salt) from the row identity — one column
+    or several (NOT rand(): resume/retry must reproduce the same salt —
+    SURVEY.md §7.3)."""
+    cols = [identity_col] if isinstance(identity_col, str) else identity_col
     return df.withColumn(
-        "_salt", F.pmod(F.hash(F.col(identity_col)), F.lit(n_salt)).cast("int")
+        "_salt", F.pmod(F.hash(*map(F.col, cols)), F.lit(n_salt)).cast("int")
     )
 
 

@@ -42,7 +42,7 @@ def enrich(
     knn_res: int = 10,
     knn_ring: int = 2,
     broadcast_dem: bool = True,
-    dem_salt: int = 8,
+    dem_salt: int = 1,
     broadcast_obs: bool = True,
     packed_obs: DataFrame | None = None,
 ) -> DataFrame:
@@ -64,9 +64,9 @@ def enrich(
     ``res_low/mid/high``/``knn_res``/``knn_ring``: the EnrichConfig cell
     resolutions and kNN bucket parameters (values exact for any setting).
     ``broadcast_dem=False``: planetary-DEM plan — 1-NN stations via the
-    Arrow lookup, elevation via the salted co-partitioned cogroup
-    (operators/elevation.py) instead of the fused broadcast-grid UDF; use
-    when the DEM exceeds broadcast size.
+    Arrow lookup, elevation via the sort-merge tile-key join
+    (operators/elevation.py; ``dem_salt > 1`` salts it) instead of the
+    fused broadcast-grid UDF; use when the DEM exceeds broadcast size.
 
     ``broadcast_obs=False``: planetary observation dimension
     (|stations|×|days| can reach 1e9 rows — geotables.weather_observations

@@ -345,9 +345,10 @@ def q_elevation_sql() -> str:
 
 
 def q_elevation_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The planetary-DEM strategy (J7, broadcast_dem=False: co-partitioned
-    cogroup applyInPandas) against the SAME closed-form oracle as
-    `elevation` — proves the two strategies are value-identical."""
+    """The planetary-DEM strategy (J7, broadcast_dem=False: sort-merge
+    tile-key join, corner words cut in the JVM) against the SAME
+    closed-form oracle as `elevation` — proves the two strategies are
+    value-identical."""
     img = geotables.images_geo(spark, sf_dir).select("image_id", "lon", "lat")
     out = elevation_join(img, dem_tiles_df(spark), broadcast_dem=False)
     return out.select(

@@ -9,6 +9,12 @@ Three UDF shapes only (SURVEY.md §2.10, input_hint: no per-row Python):
    5-rows-in → 1-row-out grouped transform);
 3. (grouped-agg UDFs live with their queries.)
 
+The pandas UDFs are built on each call, never at import: a UDF object
+caches its JVM function, and with it the Python accumulator of the
+SparkContext it was first used in — after a session restart its workers
+would report to that context's closed socket ("Failed to update
+accumulator … Broken pipe").
+
 Scale notes: groupBy(capture_id) is one of the engine's two real shuffles
 (SURVEY.md §3.1). capture_id is high-cardinality and uniformly hashed, so
 geographic hot-cell skew does NOT skew this shuffle. Payload bytes ride the
@@ -22,7 +28,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
@@ -226,12 +232,15 @@ def capture_ndvi_rel(images: DataFrame) -> DataFrame:
     )
 
 
-@F.pandas_udf(DoubleType())
-def psnr_vs_q12(
-    it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
+def psnr_vs_q12(payload, w, h, fmt) -> Column:
     """Per-image PSNR of payload vs its 12-bit-quantized self — the lossy
     invariant column (input_hint: PSNR ≥ 40 dB for lossy fmt)."""
+    return F.pandas_udf(DoubleType())(_psnr_vs_q12)(payload, w, h, fmt)
+
+
+def _psnr_vs_q12(
+    it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
+) -> Iterator[pd.Series]:
     for payload, w, h, fmt in it:
         vals = np.full(len(payload), np.nan)
         for i in range(len(payload)):
@@ -243,10 +252,7 @@ def psnr_vs_q12(
         yield pd.Series(vals)
 
 
-@F.pandas_udf(StringType())
-def decode_status(
-    it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
+def decode_status(payload, w, h, fmt) -> Column:
     """'ok' | 'corrupt' | 'unsupported' | 'missing' — the quarantine gate.
 
     At 100 TB corrupt objects are a certainty (truncated uploads, bit
@@ -263,6 +269,12 @@ def decode_status(
     data that decodes elsewhere, the latter is damaged data — conflating
     them would make quarantine routing depend on the environment instead
     of data integrity."""
+    return F.pandas_udf(StringType())(_decode_status)(payload, w, h, fmt)
+
+
+def _decode_status(
+    it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
+) -> Iterator[pd.Series]:
     for payload, w, h, fmt in it:
         out = []
         for i in range(len(payload)):

@@ -22,6 +22,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# Spark's codegen cache (spark.sql.codegen.cache.maxEntries, default 100)
+# is an LRU over generated classes, static per JVM. One pass of the
+# engine_ops benchmark uses more than 100 distinct classes, so at 100 a
+# repeated pass misses on nearly every lookup: 130 Janino compiles per
+# pass (plus C2 re-JIT of the fresh classes) against 2 at 2000, measured
+# on a 4-core host. 2000 holds that working set with room to spare.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -58,6 +65,7 @@ def get_spark(
     builder = (
         builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -23,7 +23,10 @@ SF = "/root/testdata/sf0.001"
 def main() -> None:
     from tiff_enrichment_pipeline_spark import geotables
     from tiff_enrichment_pipeline_spark.fixtures import dem_tiles_df
-    from tiff_enrichment_pipeline_spark.operators.elevation import terrain_join
+    from tiff_enrichment_pipeline_spark.operators.elevation import (
+        elevation_join,
+        terrain_join,
+    )
     from tiff_enrichment_pipeline_spark.plans.enrich import enrich
     from tiff_enrichment_pipeline_spark.queries import QUERIES
     from tiff_enrichment_pipeline_spark.session import get_spark
@@ -59,6 +62,25 @@ def main() -> None:
             "Same data motion as elevation: broadcast tile metadata, "
             "one ArrowEvalPython, zero probe shuffles.",
             fmt(terrain_join(geotables.images_geo(spark, SF), dem_tiles_df(spark))),
+        )
+    )
+    sections.append(
+        (
+            "Partitioned DEM sampling (operators/elevation.elevation_join, broadcast_dem=False)",
+            "The planetary-DEM path: ONE sort-merge left join on the tile key "
+            "(merge hint — the DEM never broadcasts), so each grid crosses the "
+            "shuffle once; the Project under the ArrowEvalPython cuts the "
+            "probe's 4 float32 corner words (16 bytes) out of `grid` and drops "
+            "it, so no grid reaches Python. Hot tiles: AQE's skew-join split, once "
+            "a tile's partition passes `spark.sql.adaptive.skewJoin.*` (256 MB "
+            "and 5× the median by default).",
+            fmt(
+                elevation_join(
+                    geotables.images_geo(spark, SF).select("image_id", "lon", "lat"),
+                    dem_tiles_df(spark),
+                    broadcast_dem=False,
+                )
+            ),
         )
     )
     for name, why in [
