@@ -19,8 +19,8 @@ Evidence modes (each appends its table to BENCH.md):
               efficiency (the BASELINE.json two-cluster-size criterion,
               evidenced via two parallelism levels per the sandbox rule)
 --skew        flagship + cell aggregation, uniform vs 50%-on-one-point
---skew-joins  the shuffle-strategy spatial joins (salted + unsalted
-              control) on the same hot fixture
+--skew-joins  the shuffle-strategy spatial joins (the within join salted
+              + unsalted, the DEM join unsalted) on the same hot fixture
 --dedup-scale MinHash-LSH→pairs→CC chain at ≥1M docs, CC round counts
               (label-prop vs star) incl. a high-diameter chain arm
 --ann-scale   IVF write + partition-pruned probe vs exact brute force
@@ -604,8 +604,9 @@ def run_skew_join_worker(
 ) -> None:
     """One pinned measurement of the SHUFFLE-strategy spatial joins whose
     key IS geographic — the jobs the r4 skew table could not stress
-    (flagship is broadcast-only; cell_agg absorbs skew map-side). The
-    salted paths are the claim under test (SURVEY §7.3)."""
+    (flagship is broadcast-only; cell_agg absorbs skew map-side). Both
+    are sort-merge joins with AQE's skew-join split (session.py); the
+    within join's opt-in salt is measured against its unsalted control."""
     from tiff_enrichment_pipeline_spark.fixtures import dem_tiles_df
     from tiff_enrichment_pipeline_spark.operators.distance_join import (
         within_distance_join,
@@ -637,10 +638,9 @@ def run_skew_join_worker(
             25_000.0,
             broadcast_build=False,
         ),
-        # partitioned-cogroup DEM strategy: probe and DEM co-partitioned
-        # on (tile, salt) — probe-side hot tiles split by coordinate hash
+        # partitioned DEM strategy: sort-merge join keyed by the DEM TILE
         "elevation_part": elevation_join(
-            images, dem_tiles_df(spark), broadcast_dem=False, salt=8
+            images, dem_tiles_df(spark), broadcast_dem=False
         ),
     }
     out = {"shape": shape, "cores": cores, "n_images": n_images}
@@ -657,14 +657,14 @@ def run_skew_join_worker(
 
 
 def run_skew_joins() -> None:
-    """Skew stress for the SALTED shuffle-strategy spatial joins
-    (VERDICT r4 #4): uniform vs 50%-of-images-on-ONE-point, same pinned
-    cores; claim = salting keeps hot/uniform within ~1.3×."""
+    """Skew stress for the shuffle-strategy spatial joins (VERDICT r4 #4):
+    uniform vs 50%-of-images-on-ONE-point, same pinned cores; claim =
+    hot/uniform stays within ~1.3× (AQE's skew-join split for the DEM
+    join; the within join salted and unsalted)."""
     import subprocess
 
-    # elevation_part's cost is group-count-bound (|DEM tiles| × salt
-    # cogroups), so a big probe mult only pads wall time without changing
-    # the hot/uniform ratio under test — keep the arm quick
+    # a big probe mult only pads wall time without changing the
+    # hot/uniform ratio under test — keep the arm quick
     mult = int(os.environ.get("SPARK_GRAFT_SKEWJOIN_MULT", "2"))
     cores = os.environ.get("SPARK_GRAFT_SKEW_CORES", "8")
     results = {}
@@ -686,7 +686,7 @@ def run_skew_joins() -> None:
             )
         results[shape] = json.loads(lines[-1])
     rec = {
-        "metric": f"salted_join_skew_slowdown_{cores}_cores",
+        "metric": f"shuffle_join_skew_slowdown_{cores}_cores",
         "unit": "ratio (hot/uniform wall time; 1.0 = skew-immune)",
         "sf": SF_DIR,
         "n_images": results["uniform"]["n_images"],
@@ -700,7 +700,7 @@ def run_skew_joins() -> None:
     print(json.dumps(rec))
     with open(REPO / "BENCH.md", "a") as f:
         f.write(
-            f"\n## Salted shuffle-join skew stress "
+            f"\n## Shuffle-join skew stress "
             f"({time.strftime('%Y-%m-%d %H:%M:%S')}, {SF_DIR}, "
             f"{rec['n_images']} images, taskset {cores} cores, "
             f"50% of images on ONE point)\n\n"
@@ -714,8 +714,9 @@ def run_skew_joins() -> None:
             )
             + "\nThese are the two joins whose shuffle key IS geographic "
             "(probe cell / DEM tile) — the arm the r4 skew table could "
-            "not cover; the salted paths are the SURVEY §7.3 defense "
-            "under test.\n"
+            "not cover; both are sort-merge joins with AQE's skew-join "
+            "split, the within join also salted ×8 against its unsalted "
+            "control.\n"
         )
 
 

@@ -59,7 +59,6 @@ def main() -> None:
         knn_res=cfg.knn_res,
         knn_ring=cfg.knn_ring,
         broadcast_dem=cfg.broadcast_dem,
-        dem_salt=cfg.dem_salt,
         observations=(
             geotables.weather_observations(spark, sf_dir)
             if cfg.use_observations

@@ -30,8 +30,11 @@ def test_resolution_ordering_enforced():
 
 
 def test_from_dict_rejects_unknown_keys():
+    # removed fields = unknown keys
     with pytest.raises(ConfigError, match="unknown config keys: knn_k"):
-        EnrichConfig.from_dict({"knn_k": 3})  # removed field = unknown key
+        EnrichConfig.from_dict({"knn_k": 3})
+    with pytest.raises(ConfigError, match="unknown config keys: dem_salt"):
+        EnrichConfig.from_dict({"dem_salt": 8})
 
 
 def test_from_dict_roundtrip():
@@ -42,8 +45,8 @@ def test_from_dict_roundtrip():
 def test_wrong_types_rejected():
     with pytest.raises(ConfigError, match="broadcast_dem"):
         EnrichConfig(broadcast_dem="yes").validate()
-    with pytest.raises(ConfigError, match="dem_salt"):
-        EnrichConfig(dem_salt=0).validate()
+    with pytest.raises(ConfigError, match="partition_buckets"):
+        EnrichConfig(partition_buckets=0).validate()
 
 
 def test_module_cli_batch(spark, tmp_path):

@@ -323,6 +323,97 @@ def test_geotiff_tags_roundtrip_and_guards():
             codec.decode(bytes(t), 48, 32, "tiff")
 
 
+def _set_tiff_tags(payload: bytes, values: dict[int, int]) -> bytes:
+    """Rewrite single-valued SHORT/LONG tags of a little-endian classic
+    TIFF in place."""
+    import struct
+
+    t = bytearray(payload)
+    (ifd,) = struct.unpack("<I", t[4:8])
+    (n,) = struct.unpack("<H", t[ifd : ifd + 2])
+    for k in range(n):
+        off = ifd + 2 + 12 * k
+        tag, typ, _ = struct.unpack("<HHI", t[off : off + 8])
+        if tag in values:
+            fmt = "<H" if typ == 3 else "<I"
+            t[off + 8 : off + 8 + struct.calcsize(fmt)] = struct.pack(
+                fmt, values[tag]
+            )
+    return bytes(t)
+
+
+def _lzw_pack(codes) -> bytes:
+    """MSB-first LZW bit packing at the 9..12-bit widths the TIFF decoder
+    reads (width grows when its table reaches 510/1022/2046 entries)."""
+    acc = n = 0
+    out = bytearray()
+    w, size, first = 9, 258, True
+    for c in codes:
+        acc = (acc << w) | c
+        n += w
+        while n >= 8:
+            n -= 8
+            out.append((acc >> n) & 0xFF)
+            acc &= (1 << n) - 1
+        if c == 256:
+            w, size, first = 9, 258, True
+            continue
+        if first:
+            first = False  # the first code after Clear adds no entry
+        else:
+            size += 1
+        if size == (1 << w) - 2 and w < 12:
+            w += 1
+    if n:
+        out.append((acc << (8 - n)) & 0xFF)
+    return bytes(out)
+
+
+def test_tiff_dims_bounded_by_compression_ratio():
+    """A header may not claim more decoded bytes than its payload could
+    expand to under the declared compression (worst case 1:1 none, 64:1
+    PackBits, 1032:1 Deflate, 2560:1 LZW), so a corrupt dim field can't
+    drive a huge allocation; a payload near its worst case still decodes."""
+    rng = np.random.default_rng(17)
+    # ~256 KiB of incompressible Deflate claiming 16384×12800 u16
+    # (210 MP = 420 MB decoded, ~1600:1 — beyond Deflate's 1032:1)
+    noise = rng.integers(0, 65536, (256, 512)).astype(np.uint16)
+    enc = codec.encode_tiff_u16(noise, compression="deflate", predictor=1)
+    assert 250_000 < len(enc) < 300_000
+    with pytest.raises(ValueError, match="TIFF dimensions implausible"):
+        codec.decode_tiff_u16(_set_tiff_tags(enc, {256: 16384, 257: 12800}))
+    # uncompressed: 8 KiB of samples can't hold a 1024×1024 u16 plane
+    enc = codec.encode_tiff_u16(noise[:64, :64], compression="none")
+    with pytest.raises(ValueError, match="TIFF dimensions implausible"):
+        codec.decode_tiff_u16(_set_tiff_tags(enc, {256: 1024, 257: 1024}))
+
+    # LZW's worst case: after Clear, codes 0, 258, 259, … 4095 each name a
+    # run one byte longer than the last (KwKwK), then every further 12-bit
+    # code 4095 emits its 3839-byte run again — 3839·8/12 ≈ 2559 bytes
+    # per payload byte, far past Deflate's 1032
+    codes = [256, 0, *range(258, 4096), *[4095] * 5000, 257]
+    strip = _lzw_pack(codes)
+    n_out = 3839 * 3840 // 2 + 5000 * 3839
+    assert codec._lzw_decode(strip) == bytes(n_out)
+    base = codec.encode_tiff_u16(
+        np.zeros((1, 1), np.uint16), compression="lzw", predictor=1
+    )
+    w = 2048
+    h = n_out // (2 * w)
+
+    def tiff(rows):
+        return _set_tiff_tags(base + strip, {
+            256: w, 257: rows, 278: rows, 273: len(base), 279: len(strip),
+        })
+
+    assert w * h * 2 / len(tiff(h)) > 2000
+    assert np.array_equal(codec.decode_tiff_u16(tiff(h)),
+                          np.zeros((h, w), np.uint16))
+    over = len(tiff(h)) * 2560 // (2 * w) + 1  # one row past 2560:1
+    with pytest.raises(ValueError, match="TIFF dimensions implausible"):
+        codec.decode_tiff_u16(tiff(over))
+
+
 def test_png_nonbaseline_routes_to_pillow_gate():
     """decode() for fmt='png' mirrors the tiff branch (ADVICE r3): a
     non-baseline profile (here: interlace flag set) raises
@@ -724,21 +815,7 @@ def test_tiff_lzw_tiled_bigtiff_roundtrips():
 
     # TIFF6 §13 worked example: input 7 7 7 8 8 7 7 6 6 must encode to
     # exactly Clear,7,258,8,8,258,6,6,EOI at 9 bits MSB-first
-    def pack(codes):
-        acc = n = 0
-        out = bytearray()
-        for c in codes:
-            acc = (acc << 9) | c
-            n += 9
-            while n >= 8:
-                n -= 8
-                out.append((acc >> n) & 0xFF)
-                acc &= (1 << n) - 1
-        if n:
-            out.append((acc << (8 - n)) & 0xFF)
-        return bytes(out)
-
-    vec = pack([256, 7, 258, 8, 8, 258, 6, 6, 257])
+    vec = _lzw_pack([256, 7, 258, 8, 8, 258, 6, 6, 257])
     src = bytes([7, 7, 7, 8, 8, 7, 7, 6, 6])
     assert codec._lzw_encode(src) == vec
     assert codec._lzw_decode(vec) == src

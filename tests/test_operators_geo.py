@@ -169,7 +169,7 @@ def _dem_probes(spark):
 def test_elevation_partitioned_matches_broadcast(spark):
     """broadcast_dem=False (sort-merge join, corner words cut in the JVM —
     the planetary-DEM path) must agree with the broadcast strategy
-    value-for-value on every probe of _dem_probes, salted or not. Its plan
+    value-for-value on every probe of _dem_probes. Its plan
     has no cogroup and no broadcast, and the grid never reaches the
     Python node: only the 16-byte corner words do."""
     img = _dem_probes(spark)
@@ -182,7 +182,6 @@ def test_elevation_partitioned_matches_broadcast(spark):
 
     a = vals(elevation_join(img, dem, broadcast_dem=True))
     assert a == vals(elevation_join(img, dem, broadcast_dem=False))
-    assert a == vals(elevation_join(img, dem, broadcast_dem=False, salt=4))
     assert sum(v[0] is not None for v in a.values()) > 100
     gps_less = sorted(a)[:5]  # the NULL/NaN GPS probes
     assert all(a[iid] == (None, None, None) for iid in gps_less)
@@ -251,16 +250,10 @@ def test_asof_join_semantics(spark):
     assert out[103] == (dt.date(2020, 6, 1), 9.0)   # different key
 
 
-def test_within_distance_join_exact_vs_numpy(spark):
-    """ST_DWithin replacement: pairs must match the numpy brute force
-    exactly, INCLUDING probes/builds straddling the antimeridian and a
-    polar-cap build point whose lon bbox spans the full circle."""
-    import numpy as np
-
-    from tiff_enrichment_pipeline_spark.operators.distance_join import (
-        within_distance_join,
-    )
-
+def _radius_case(spark):
+    """Probes/builds for the within-distance join, incl. probes/builds
+    straddling the antimeridian and a polar-cap build point whose lon bbox
+    spans the full circle; returns (probe, build, radius, numpy pairs)."""
     rng = np.random.default_rng(31)
     p_lon = np.concatenate([rng.uniform(-180, 180, 150),
                             [179.98, -179.97, 0.5, 12.0]])
@@ -290,7 +283,17 @@ def test_within_distance_join_exact_vs_numpy(spark):
     radius = 150_000.0
     D = hav(p_lat[:, None], p_lon[:, None], b_lat[None, :], b_lon[None, :])
     want = {(i, j) for i, j in zip(*np.nonzero(D <= radius))}
+    return probe, build, radius, want
 
+
+def test_within_distance_join_exact_vs_numpy(spark):
+    """ST_DWithin replacement: pairs must match the numpy brute force
+    exactly on both strategies (see _radius_case)."""
+    from tiff_enrichment_pipeline_spark.operators.distance_join import (
+        within_distance_join,
+    )
+
+    probe, build, radius, want = _radius_case(spark)
     for bcast in (True, False):
         got = {
             (r["pid"], r["bid"])
@@ -316,6 +319,46 @@ def test_within_distance_join_exact_vs_numpy(spark):
         ).collect()
     }
     assert salted == want
+
+
+def test_within_distance_shuffle_hot_cell_split_by_aqe(spark):
+    """broadcast_build=False keys the shuffle by the probe cell, so an
+    unsalted geotag pileup lands in one partition for AQE's skew-join
+    split to divide. The cover is tiny, yet the join stays a sort-merge
+    join (merge hint); with the skew thresholds lowered (Spark's defaults
+    are 256 MB and 5× the median) its final plan is skew-split, and the
+    pair set still equals the broadcast path's."""
+    from tiff_enrichment_pipeline_spark.operators.distance_join import (
+        within_distance_join,
+    )
+
+    probe, build, radius, want = _radius_case(spark)
+    # 4000 probes in ONE res-8 cell, within radius of build point 3.0/-89.0
+    pile = spark.range(10**9, 10**9 + 4000, numPartitions=8).select(
+        F.col("id").alias("pid"),
+        (F.lit(3.01) + F.col("id") % 7 * 1e-4).alias("lon"),
+        F.lit(-88.99).alias("lat"),
+    )
+    img = pile.unionByName(probe)
+    conf = {
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "4k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        out = within_distance_join(img, build, radius, res=8,
+                                   broadcast_build=False)
+        got = {(r["pid"], r["bid"]) for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert "SortMergeJoin(skew=true)" in plan
+    bcast = within_distance_join(img, build, radius, res=8)
+    assert got == {(r["pid"], r["bid"]) for r in bcast.collect()}
+    assert want <= got and len(got - want) >= 4000
 
 
 def test_interval_lookup_join_strategies(spark):
@@ -451,32 +494,12 @@ def test_terrain_partitioned_matches_broadcast(spark):
 
     a = vals()
     assert a == vals(broadcast_dem=False)
-    assert a == vals(broadcast_dem=False, salt=4)
     assert any(v[0] is not None for v in a.values())
     assert any(v[0] is None for v in a.values())
 
 
-def test_partitioned_dem_salt_scatters_a_one_point_pileup(spark):
-    """salt > 1 hashes the whole probe row: probes piled on ONE exact
-    point (the --skew-joins "hot" shape) spread over several join
-    partitions instead of sharing one salt value."""
-    pile = spark.range(400).select(
-        F.col("id").alias("image_id"),
-        F.lit(5.123456).alias("lon"),
-        F.lit(52.345678).alias("lat"),
-    )
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    spark.conf.set(key, "false")
-    try:
-        out = elevation_join(pile, dem_tiles_df(spark), broadcast_dem=False, salt=8)
-        parts = out.select(F.spark_partition_id().alias("p")).distinct().count()
-    finally:
-        spark.conf.set(key, "true")
-    assert parts >= 3
-
-
 def test_partitioned_dem_hot_tile_split_by_aqe(spark):
-    """Unsalted, a hot tile is AQE's to split: once its probe partition
+    """A hot tile is AQE's to split: once its probe partition
     passes the skew thresholds (lowered here — Spark's defaults are 256 MB
     and 5× the median), the final plan of the partitioned DEM join is a
     skew-split sort-merge join, and the values still match the broadcast

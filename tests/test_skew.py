@@ -1,11 +1,11 @@
-"""Hot-cell skew: fixture really is skewed; salted join ≡ plain join."""
+"""Hot-cell skew: the fixture really is skewed."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tiff_enrichment_pipeline_spark import geotables, grid
-from tiff_enrichment_pipeline_spark.operators.skew import hot_cells, salted_join
+from tiff_enrichment_pipeline_spark.operators.skew import hot_cells
 
 
 def test_fixture_has_hot_cells(spark):
@@ -18,20 +18,3 @@ def test_fixture_has_hot_cells(spark):
     assert len(hot) >= 1
     assert sum(r["n"] for r in hot) >= 0.15 * cells.count()
 
-
-def test_salted_join_equivalence(spark):
-    img = geotables.images_geo(spark, "/root/testdata/sf0.001")
-    probe = img.withColumn(
-        "cell_r8", grid.cell_of(F.col("lon"), F.col("lat"), grid.RES8)
-    ).select("image_id", "cell_r8")
-    build = (
-        probe.groupBy("cell_r8").agg(F.count("*").alias("cell_pop"))
-    )
-    plain = probe.join(build, ["cell_r8"], "inner")
-    salted = salted_join(
-        probe, build, on=["cell_r8"], identity_col="image_id", n_salt=4
-    )
-    assert salted.count() == plain.count()
-    a = {(r["image_id"], r["cell_pop"]) for r in plain.collect()}
-    b = {(r["image_id"], r["cell_pop"]) for r in salted.collect()}
-    assert a == b

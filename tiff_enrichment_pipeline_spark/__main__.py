@@ -119,7 +119,7 @@ def main(argv: list[str] | None = None) -> int:
                 observations=obs, res_low=cfg.cell_res_low,
                 res_mid=cfg.cell_res_mid, res_high=cfg.cell_res_high,
                 knn_res=cfg.knn_res, knn_ring=cfg.knn_ring,
-                broadcast_dem=cfg.broadcast_dem, dem_salt=cfg.dem_salt,
+                broadcast_dem=cfg.broadcast_dem,
                 broadcast_obs=cfg.broadcast_obs,
             )
 
@@ -144,7 +144,7 @@ def main(argv: list[str] | None = None) -> int:
             observations=obs, res_low=cfg.cell_res_low,
             res_mid=cfg.cell_res_mid, res_high=cfg.cell_res_high,
             knn_res=cfg.knn_res, knn_ring=cfg.knn_ring,
-            broadcast_dem=cfg.broadcast_dem, dem_salt=cfg.dem_salt,
+            broadcast_dem=cfg.broadcast_dem,
             broadcast_obs=cfg.broadcast_obs,
         )
         from tiff_enrichment_pipeline_spark.sources.images import (

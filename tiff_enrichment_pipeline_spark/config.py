@@ -48,12 +48,9 @@ class EnrichConfig:
     # enrich(knn_res/knn_ring)
     knn_ring: int = 2
     knn_res: int = 10
-    # DEM strategy: broadcast grids vs a sort-merge join on the tile key;
-    # dem_salt > 1 adds explicit salting to the latter (1: AQE's skew-join
-    # split alone, past Spark's skew thresholds) —
-    # enrich(broadcast_dem/dem_salt)
+    # DEM strategy: broadcast grids vs a sort-merge join on the tile key
+    # (hot tiles: AQE's skew-join split) — enrich(broadcast_dem)
     broadcast_dem: bool = True
-    dem_salt: int = 1
     # dated weather dimension — enrich(observations=...); broadcast_obs
     # False = planetary |stations|×|days| dim too big to broadcast — let
     # AQE plan the (station_id, date) equi-join — enrich(broadcast_obs=...)
@@ -89,10 +86,10 @@ class EnrichConfig:
             )
         if not isinstance(self.knn_ring, int) or self.knn_ring < 1:
             errs.append(f"knn_ring={self.knn_ring!r}: must be an int >= 1")
-        for name in ("dem_salt", "partition_buckets"):
-            v = getattr(self, name)
-            if not isinstance(v, int) or v < 1:
-                errs.append(f"{name}={v!r}: must be an int >= 1")
+        if not isinstance(self.partition_buckets, int) or self.partition_buckets < 1:
+            errs.append(
+                f"partition_buckets={self.partition_buckets!r}: must be an int >= 1"
+            )
         for name in ("sf_dir", "output_dir"):
             v = getattr(self, name)
             if not isinstance(v, str) or not v:

@@ -8,7 +8,6 @@ expressions (reference implements these per-file in Python):
 - gsd                reference: src/pipeline/micasense/core/processor.py:98-101
 - pixel size (deg)   reference: src/pipeline/micasense/core/processor.py:113-115
 - affine transform   reference: src/pipeline/micasense/core/processor.py:117-133
-- corner coords      reference: src/pipeline/micasense/core/validation.py:74-82
 - bbox predicate     reference: src/pipeline/main.py:476-517 (NL bounds)
 - GPS validity       reference: src/pipeline/utils/gps_utils.py:87-94
 - georef validity    reference: src/pipeline/micasense/core/processor.py:643-656
@@ -96,19 +95,6 @@ def affine_from_center(
         (-py_deg).alias("e"),
         (lat + half_h_deg).alias("f"),
     )
-
-
-def corner_coords(transform: Column, w: Column, h: Column) -> Column:
-    """array<struct<x,y>> of the 4 raster corners (0,0),(w,0),(w,h),(0,h)
-    (reference: core/validation.py:74-82)."""
-    def apply(col: Column, row: Column) -> Column:
-        x = transform["a"] * col + transform["b"] * row + transform["c"]
-        y = transform["d"] * col + transform["e"] * row + transform["f"]
-        return F.struct(x.alias("x"), y.alias("y"))
-
-    zero = F.lit(0.0)
-    wd, hd = w.cast("double"), h.cast("double")
-    return F.array(apply(zero, zero), apply(wd, zero), apply(wd, hd), apply(zero, hd))
 
 
 def surface_area_m2(transform: Column, w: Column, h: Column, lat: Column) -> Column:

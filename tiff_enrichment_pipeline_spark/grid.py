@@ -73,10 +73,6 @@ def cell_of(lon: Column, lat: Column, k: int) -> Column:
     return F.when(ok, cell)
 
 
-def cell_res(cell: Column) -> Column:
-    return F.floor(cell / F.lit(_K_SHIFT)).cast("int")
-
-
 def cell_ix(cell: Column) -> Column:
     return F.floor((cell % F.lit(_K_SHIFT)) / F.lit(_IX_SHIFT)).cast("long")
 
@@ -423,32 +419,4 @@ def cell_of_np(lon: np.ndarray, lat: np.ndarray, k: int) -> np.ndarray:
         np.int64(k) * np.int64(_K_SHIFT)
         + ix.astype(np.int64) * np.int64(_IX_SHIFT)
         + iy.astype(np.int64)
-    )
-
-
-def cover_bbox_np(
-    lon_min: float, lat_min: float, lon_max: float, lat_max: float, k: int
-) -> np.ndarray:
-    """All cells at res k whose bbox intersects [lon_min,lon_max)x[lat_min,lat_max).
-
-    Used to pre-cover land-cover polygons into the broadcastable
-    ``cells_rK`` array (SURVEY.md J5 build side). A bbox cover is a superset
-    of the exact polygon cover; the exact winding-number refinement step
-    removes false positives, so superset-ness is safe.
-    """
-    nx, ny = 2**k, 2 ** (k - 1)
-    w = cell_width_deg(k)
-    ix0 = int(np.clip(np.floor((lon_min + 180.0) / w), 0, nx - 1))
-    ix1 = int(np.clip(np.floor((lon_max + 180.0) / w - 1e-12), 0, nx - 1))
-    iy0 = int(np.clip(np.floor((lat_min + 90.0) / w), 0, ny - 1))
-    iy1 = int(np.clip(np.floor((lat_max + 90.0) / w - 1e-12), 0, ny - 1))
-    ixs, iys = np.meshgrid(
-        np.arange(ix0, ix1 + 1, dtype=np.int64),
-        np.arange(iy0, iy1 + 1, dtype=np.int64),
-        indexing="ij",
-    )
-    return (
-        np.int64(k) * np.int64(_K_SHIFT)
-        + ixs.ravel() * np.int64(_IX_SHIFT)
-        + iys.ravel()
     )

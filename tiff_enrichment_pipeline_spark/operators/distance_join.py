@@ -15,10 +15,10 @@ This is the Spark-native equivalent (SURVEY.md J8's general form):
    (center-distance test ≤ radius + max-center-to-point bound — r8), so
    the cover tracks the disk, not its bbox.
 2. **Cell equi-join**: probe rows join on their own cell id — broadcast
-   when the build side is a dimension (stations), or a shuffle equi-join
-   on uniformly-hashed cells for build tables beyond broadcast size
-   (``broadcast_build=False``); geographic probe hot-cells never become
-   shuffle keys on the broadcast path.
+   when the build side is a dimension (stations), or a sort-merge join on
+   the hashed cell for build tables beyond broadcast size
+   (``broadcast_build=False``; hot cells: operators/skew.py); geographic
+   probe hot-cells never become shuffle keys on the broadcast path.
 3. **Refine**: exact haversine ≤ radius (pure codegen, wrap-safe — sin² of
    the half longitude difference is 360°-periodic).
 
@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from tiff_enrichment_pipeline_spark import grid
 from tiff_enrichment_pipeline_spark.functions.geo import haversine_m
+from tiff_enrichment_pipeline_spark.operators.skew import replicate_build, with_salt
 
 M_PER_DEG = 2.0 * math.pi * 6371000.0 / 360.0
 # longitude bbox safety: the exact cap-bounding Δλ = asin(sin(r/R)/cos φ)
@@ -71,13 +72,15 @@ def within_distance_join(
     rows with NULL/NaN GPS emit no pairs (cell_of yields NULL and NULL
     keys don't equi-join — matching ST_DWithin's NULL semantics).
 
-    ``broadcast_build=False`` is the only join in the engine whose shuffle
-    key is GEOGRAPHIC (the probe cell), so urban geotag pileups land on it
-    directly — pass ``salt`` (with ``probe_id`` naming a probe identity
-    column) to scatter each hot cell across ``salt`` shuffle partitions
+    ``broadcast_build=False`` is a sort-merge join (merge hint: a cover
+    declared too big to broadcast is never broadcast, however small it
+    looks) whose shuffle key is GEOGRAPHIC (the probe cell), so urban
+    geotag pileups land on it directly. AQE's skew-join split divides a
+    hot cell's partition once it passes ``spark.sql.adaptive.skewJoin.*``;
+    below that, pass ``salt`` (with ``probe_id`` naming a probe identity
+    column) to scatter each cell across ``salt`` shuffle partitions
     (deterministic identity-hash salt, cover side replicated ×salt; values
-    identical by construction). AQE skew-join splitting is the runtime
-    backstop when unsalted.
+    identical by construction; operators/skew.py).
     """
     dlat = F.lit(radius_m / M_PER_DEG)
     blat = F.col(build_lat)
@@ -137,20 +140,16 @@ def within_distance_join(
     d = haversine_m(
         F.col(probe_lat), F.col(probe_lon), F.col(build_lat), F.col(build_lon)
     )
-    refine = d <= F.lit(radius_m)
+    keys = ["_cell"]
     if salt is not None and not broadcast_build:
         if probe_id is None:
             raise ValueError("salted within_distance_join needs probe_id")
-        from tiff_enrichment_pipeline_spark.operators.skew import (
-            replicate_build,
-            with_salt,
-        )
-
         probed = with_salt(probed, probe_id, salt)
         cover = replicate_build(cover, salt)
-        joined = probed.join(cover, ["_cell", "_salt"]).filter(refine)
-    else:
-        joined = probed.join(cover, "_cell").filter(refine)
+        keys.append("_salt")
+    if not broadcast_build:
+        cover = cover.hint("merge")
+    joined = probed.join(cover, keys).filter(d <= F.lit(radius_m))
     return joined.select(
         *[probed[c] for c in probe.columns],
         *[cover[c] for c in build.columns],

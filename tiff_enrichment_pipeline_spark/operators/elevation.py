@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from tiff_enrichment_pipeline_spark.geotables import DEM_N, DEM_STEP, DEM_TILE_DEG
-from tiff_enrichment_pipeline_spark.operators.skew import replicate_build, with_salt
 
 
 def bilinear_sample_np(
@@ -286,7 +285,6 @@ def _dem_join(
     lon: str,
     lat: str,
     broadcast_dem: bool,
-    salt: int,
 ) -> DataFrame:
     """images ⟕ DEM on the tile key, + the ``meta`` columns of the DEM
     table and the double columns ``names`` that ``kernel`` computes from
@@ -301,22 +299,18 @@ def _dem_join(
         v = F.when(F.col("_on_dem"), sample(lon, lat, *keys))
     else:
         dem = dem_tiles.select(*keys, "grid", *meta)
-        if salt > 1:
-            probe = with_salt(probe, images.columns, salt)
-            dem = replicate_build(dem, salt)
-            keys = [*keys, "_salt"]
         # the merge hint keeps a DEM declared too big to broadcast from
         # being broadcast; AQE's skew-join split divides a hot tile's
         # probe partition once it passes spark.sql.adaptive.skewJoin.*
         joined = (
             probe.join(dem.hint("merge"), keys, "left")
             .withColumn("_corners", _corner_words(lon, lat))
-            .drop("grid", "_salt")
+            .drop("grid")
         )
         sample = _sampler(names, kernel, _resolve_corners)
         v = F.when(
             F.col("_corners").isNotNull(),
-            sample(lon, lat, "tile_x", "tile_y", "_corners"),
+            sample(lon, lat, *keys, "_corners"),
         )
     out = joined.withColumn("_v", v)
     for n in names:  # NaN → NULL, matching the SQL oracle's CASE WHEN
@@ -330,7 +324,6 @@ def elevation_join(
     lon: str = "lon",
     lat: str = "lat",
     broadcast_dem: bool = True,
-    salt: int = 1,
 ) -> DataFrame:
     """images ⟕ DEM → + elevation (double, NULL off-DEM), elevation_source,
     elevation_accuracy_m.
@@ -350,9 +343,7 @@ def elevation_join(
     grid before the Python node. A hot tile's probe partition is split by
     AQE's skew join once it passes Spark's skew thresholds
     (``spark.sql.adaptive.skewJoin.*``: 256 MB and 5× the median by
-    default). ``salt > 1`` instead scatters each tile's probes over
-    ``salt`` join keys by a hash of the whole probe row, with the DEM side
-    replicated ×salt.
+    default); there is no explicit salting (operators/skew.py).
     """
     meta = [
         F.col("source").alias("elevation_source"),
@@ -361,7 +352,7 @@ def elevation_join(
     return _dem_join(
         images, dem_tiles, meta, ("elevation",),
         lambda c, wx, wy, lat_v: (_bilinear(*c, wx, wy),),
-        lon, lat, broadcast_dem, salt,
+        lon, lat, broadcast_dem,
     )
 
 
@@ -371,14 +362,13 @@ def terrain_join(
     lon: str = "lon",
     lat: str = "lat",
     broadcast_dem: bool = True,
-    salt: int = 1,
 ) -> DataFrame:
     """images ⟕ DEM → + slope_deg / aspect_deg / hillshade (NULL off-DEM
-    or without GPS; aspect NULL when flat). Same two strategies, data
-    motion and ``salt`` as elevation_join, value-identical through the
-    shared ``_terrain`` corner kernel."""
+    or without GPS; aspect NULL when flat). Same two strategies and data
+    motion as elevation_join, value-identical through the shared
+    ``_terrain`` corner kernel."""
     return _dem_join(
         images, dem_tiles, [], ("slope_deg", "aspect_deg", "hillshade"),
         lambda c, wx, wy, lat_v: _terrain(*c, wx, wy, lat_v),
-        lon, lat, broadcast_dem, salt,
+        lon, lat, broadcast_dem,
     )

@@ -19,6 +19,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from tiff_enrichment_pipeline_spark.geotables import DEM_TILE_DEG
+from tiff_enrichment_pipeline_spark.operators.elevation import (
+    _bilinear_gather,
+    _broadcast_grid_stack,
+    _tile_indices,
+    tile_key,
+)
 from tiff_enrichment_pipeline_spark.operators.knn_join import (
     _chord2_to_m,
     _indexed_payload_df,
@@ -56,12 +62,6 @@ def fused_station_dem_lookup(
     )
     knn_index, knn_res_f = build_knn_index(
         s_lat, s_lon, s_xyz, 1, knn_res, knn_ring
-    )
-
-    from tiff_enrichment_pipeline_spark.operators.elevation import (
-        _bilinear_gather,
-        _broadcast_grid_stack,
-        _tile_indices,
     )
 
     sc = images.sparkSession.sparkContext
@@ -110,13 +110,7 @@ def fused_station_dem_lookup(
         F.col("source").alias("elevation_source"),
         F.col("accuracy_m").alias("elevation_accuracy_m"),
     )
-    # NaN-gated (ANSI cast of NaN→int throws; NULL floor is already NULL)
-    tx = F.when(
-        ~F.isnan(F.col(lon)), F.floor(F.col(lon) / F.lit(DEM_TILE_DEG))
-    ).cast("int")
-    ty = F.when(
-        ~F.isnan(F.col(lat)), F.floor(F.col(lat) / F.lit(DEM_TILE_DEG))
-    ).cast("int")
+    tx, ty = tile_key(F.col(lon), F.col(lat))
     out = (
         images.withColumn("_geo", _lookup(F.col(lat), F.col(lon)))
         .withColumn("_st_idx", _safe_idx(F.col("_geo")["st_idx"]))

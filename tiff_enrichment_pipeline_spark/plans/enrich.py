@@ -42,7 +42,6 @@ def enrich(
     knn_res: int = 10,
     knn_ring: int = 2,
     broadcast_dem: bool = True,
-    dem_salt: int = 1,
     broadcast_obs: bool = True,
     packed_obs: DataFrame | None = None,
 ) -> DataFrame:
@@ -65,8 +64,8 @@ def enrich(
     resolutions and kNN bucket parameters (values exact for any setting).
     ``broadcast_dem=False``: planetary-DEM plan — 1-NN stations via the
     Arrow lookup, elevation via the sort-merge tile-key join
-    (operators/elevation.py; ``dem_salt > 1`` salts it) instead of the
-    fused broadcast-grid UDF; use when the DEM exceeds broadcast size.
+    (operators/elevation.py; AQE splits a hot tile) instead of the fused
+    broadcast-grid UDF; use when the DEM exceeds broadcast size.
 
     ``broadcast_obs=False``: planetary observation dimension
     (|stations|×|days| can reach 1e9 rows — geotables.weather_observations
@@ -114,7 +113,6 @@ def enrich(
             knn_nearest(lc, stations, res=knn_res, ring=knn_ring),
             dem_tiles,
             broadcast_dem=False,
-            salt=dem_salt,
         )
     # weather as a STRUCT, not map<string,double>: the reference's JSONB
     # payload (create-tables.sql:129) is schemaless, but per-row string map

@@ -32,7 +32,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiff_enrichment_pipeline_spark import geotables, grid
-from tiff_enrichment_pipeline_spark.functions.geo import haversine_m, haversine_m_sql
+from tiff_enrichment_pipeline_spark.functions.geo import (
+    gps_valid,
+    haversine_m,
+    haversine_m_sql,
+    in_nl_bounds,
+)
 from tiff_enrichment_pipeline_spark.operators.elevation import elevation_join
 from tiff_enrichment_pipeline_spark.operators.knn_join import knn_station_join
 from tiff_enrichment_pipeline_spark.operators.pip_join import landcover_pip_join
@@ -393,13 +398,12 @@ def q_haversine_station_pairs_sql() -> str:
 def q_cell_crowding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image hot-cell crowding feature (how many images share my res-8
     cell — the curation signal that finds geotag pileups), computed as a
-    partial-agg groupBy + a SALTED join back to the probe
-    (operators/skew.salted_join): the one join shape where the fixture's
-    20%-in-one-cell skew would otherwise pile a whole hot cell into one
-    shuffle partition. Values identical to the unsalted join by
-    construction; the oracle is a plain window count."""
-    from tiff_enrichment_pipeline_spark.operators.skew import salted_join
-
+    partial-agg groupBy + a join back to the probe. The counts side is one
+    row per cell, so AQE turns the join into a broadcast once it sees that
+    size, and the fixture's 20%-in-one-cell skew never reaches a join
+    partition; a counts side too big to broadcast is left to AQE's
+    skew-join split (operators/skew.py). The oracle is a plain window
+    count."""
     img = geotables.images_geo(spark, sf_dir).select("image_id", "lon", "lat")
     # join on a null-safe key (cell_of yields NULL for null/NaN GPS; an
     # equi-join on the raw cell would drop those rows, while the oracle's
@@ -412,10 +416,7 @@ def q_cell_crowding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "image_id", "cell_r8", F.coalesce("cell_r8", F.lit(-1)).alias("_ck")
     )
     counts = cells.groupBy("_ck").agg(F.count("*").alias("n_in_cell"))
-    out = salted_join(
-        cells, counts, on=["_ck"], identity_col="image_id", n_salt=8
-    )
-    return out.select("image_id", "cell_r8", "n_in_cell")
+    return cells.join(counts, "_ck").select("image_id", "cell_r8", "n_in_cell")
 
 
 def q_cell_crowding_sql() -> str:
@@ -430,15 +431,11 @@ def q_bbox_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NL bounding-box predicate (P8, main.py:476-517) + GPS validity (P7)
     — pushdown-friendly conjunctive ranges; counts by bucket."""
     img = geotables.images_geo(spark, sf_dir)
+    lon, lat = F.col("lon"), F.col("lat")
+    # when() treats a NULL predicate as false: NULL/NaN GPS lands in 'invalid'
     bucket = (
-        F.when(
-            F.col("lon").between(3.0, 7.3) & F.col("lat").between(50.7, 53.6),
-            "netherlands",
-        )
-        .when(
-            F.col("lat").between(-90.0, 90.0) & F.col("lon").between(-180.0, 180.0),
-            "world",
-        )
+        F.when(in_nl_bounds(lon, lat), "netherlands")
+        .when(gps_valid(lat, lon), "world")
         .otherwise("invalid")
     )
     return img.groupBy(bucket.alias("gps_bucket")).agg(

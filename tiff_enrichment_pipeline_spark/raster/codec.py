@@ -198,6 +198,21 @@ _TIFF_TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4,
 _TIFF_TYPE_FMT = {1: "B", 3: "H", 4: "I", 6: "b", 8: "h", 9: "i", 11: "f",
                   12: "d", 16: "Q", 17: "q"}  # 16/17 = BigTIFF LONG8/SLONG8
 _T_SHORT, _T_LONG, _T_DOUBLE = 3, 4, 12
+# Worst-case expansion (decoded bytes per payload byte) of each TIFF
+# Compression, so a header can't claim more pixels than its payload could
+# ever decode to:
+# - 1 none: one byte per byte;
+# - 32773 PackBits: a 2-byte replicate packet repeats one byte 128×;
+# - 8 Deflate: a 258-byte match costs ≥ 2 bits (length + distance codes),
+#   so 258·8/2 = 1032;
+# - 5 LZW: a code of width w (9..12 bits) names a table entry < 2^w, and
+#   entry i ≥ 258 holds at most i − 256 bytes (each entry extends an
+#   earlier one by one byte); bytes per code bit peak at w = 12:
+#   (4095 − 256)·8/12 = 2559.3 → 2560, not Deflate's 1032;
+# - anything else (JPEG-in-TIFF: progressive EOB runs code thousands of
+#   blocks in one symbol) keeps the generic 4096.
+_TIFF_MAX_RATIO = {1: 1, 32773: 64, 8: 1032, 5: 2560}
+_TIFF_OTHER_RATIO = 4096
 
 # GeoTIFF GeoKey ids (GeoTIFF 1.1 / OGC 19-008r4 — public spec)
 _GK_MODEL_TYPE = 1024       # 2 = geographic lat/lon
@@ -967,21 +982,24 @@ def decode_geotiff(payload: bytes) -> tuple[np.ndarray, dict]:
             tags[tag] = list(struct.unpack(e + fmt * int(cnt), src))
 
     tiled = 322 in tags or 324 in tags  # TileWidth/TileOffsets
+    bits_v = tags.get(258, [1])
+    bits = bits_v[0]
+    comp = tags.get(259, [1])[0]
+    spp = tags.get(277, [1])[0]
     try:
         w, h = tags[256][0], tags[257][0]
         # dimension sanity (r7 fuzz; r8 per ADVICE): a corrupt dim field
-        # must not drive a planet-sized allocation, but a FIXED 2^26-px
-        # cap also rejected legitimate large GeoTIFFs (a USGS 3DEP
-        # 1/3-arcsec DEM is 10812² ≈ 117 MP). Bound the pixel count
-        # against the actual payload instead: deflate/LZW top out near
-        # ~1032:1, so 4096 px per payload byte (u16 → ratio 8192:1) can
-        # only be exceeded by a corrupt header; tiny fuzzed payloads
-        # still reject giant dims, real compressed rasters of any size
-        # pass. 2^30 px (2 GiB u16) stays the absolute allocation
+        # must not drive a planet-sized allocation, but a FIXED pixel cap
+        # also rejects legitimate large GeoTIFFs (a USGS 3DEP 1/3-arcsec
+        # DEM is 10812² ≈ 117 MP). Bound the decoded size against the
+        # actual payload instead, by the declared compression's
+        # worst-case ratio (_TIFF_MAX_RATIO): only a corrupt header can
+        # exceed it. 2^30 px (2 GiB u16) stays the absolute allocation
         # ceiling.
-        px_cap = max(1 << 26, min(len(payload) * 4096, 1 << 30))
+        raw_cap = len(payload) * _TIFF_MAX_RATIO.get(comp, _TIFF_OTHER_RATIO)
         if not (0 < w <= (1 << 20) and 0 < h <= (1 << 20)
-                and w * h <= px_cap):
+                and w * h <= (1 << 30)
+                and w * h * spp * (-(-bits // 8)) <= raw_cap):
             raise ValueError(f"TIFF dimensions implausible ({w}x{h})")
         if tiled:
             offs, cnts = tags[324], tags[325]
@@ -997,10 +1015,6 @@ def decode_geotiff(payload: bytes) -> tuple[np.ndarray, dict]:
         raise NotImplementedError(
             "TIFF missing baseline tags the stdlib path requires"
         ) from exc
-    bits_v = tags.get(258, [1])
-    bits = bits_v[0]
-    comp = tags.get(259, [1])[0]
-    spp = tags.get(277, [1])[0]
     rps = tags.get(278, [h])[0] or h
     pred = tags.get(317, [1])[0]
     sfmt = tags.get(339, [1])[0]
