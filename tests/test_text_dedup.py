@@ -124,8 +124,8 @@ def test_star_cc_matches_label_propagation_and_is_faster(spark):
             for a, b in rng.integers(0, n, (m, 2))
             if a != b
         ]
-        if not edges:
-            continue
+        # self-pairs, one of them a node with no other pair
+        edges += [(n + trial, n + trial), (edges[0][0], edges[0][0])]
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
         lab = {
             (r["node"], r["comp"])
@@ -170,12 +170,6 @@ def test_brute_force_topk_guards_big_corpus(spark):
         brute_force_topk(df, df, k=3, max_corpus=10)
     # and still works when the cap is explicitly raised
     assert brute_force_topk(df, df, k=1, max_corpus=20).count() == 20
-    # known_corpus_size drops the guard's count() job for pre-counted
-    # corpora but still goes through the max_corpus check (ADVICE r4)
-    got = brute_force_topk(df, df, k=1, max_corpus=25, known_corpus_size=20)
-    assert got.count() == 20
-    with pytest.raises(ValueError, match="ivf_probe_pruned"):
-        brute_force_topk(df, df, k=1, max_corpus=10, known_corpus_size=20)
 
 
 def test_lsh_topk_recall(spark):

@@ -1,21 +1,38 @@
-"""Similarity search over embedding columns (array<float>).
+"""Cosine top-k similarity search over embedding columns (array<float>).
 
-Two strategies per the training-data-pipeline brief:
+Four operators, one form each:
 
-- **Brute-force cosine top-k** (the exactness baseline): Arrow-batched GEMM
-  — normalize the corpus once (driver-side for a broadcastable corpus),
-  ``P @ C.T`` per batch, ``argpartition`` top-k. Exact, a pure map stage
-  over the query side.
-- **LSH-bucketed variant** (the scale path): sign-random-projection buckets
-  (B hyperplanes → B-bit key); queries probe their own bucket (+optionally
-  neighbors by Hamming distance 1). Approximate; recall grows with fewer
-  bits / more probes. Bucketing is an equi-join on uniformly distributed
-  keys — shuffle-friendly, no skew.
+- ``brute_force_topk`` — exact, the exactness baseline. The corpus is
+  collected (bounded, default 1 M rows), L2-normalised and broadcast; each
+  query Arrow batch is one ``Q @ C.T`` GEMM plus an ``argpartition`` top-k.
+- ``lsh_topk`` — approximate. Sign-random-projection buckets (B hyperplanes
+  → B-bit key); queries and corpus equi-join on the bucket, a uniformly
+  distributed key, so the shuffle has no skew.
+- ``ivf_topk`` — approximate. A k-means coarse quantizer trained on a
+  bounded deterministic sample assigns every corpus row to a list; each
+  query probes its ``nprobe`` nearest lists. recall → 1 as nprobe → n_lists.
+- ``ivf_probe_pruned`` — the same probe against an index persisted by
+  ``write_ivf_index`` (parquet partitioned by list, maintained by
+  ``append_to_ivf_index``): the probed lists reach the index scan as
+  PartitionFilters, so only nprobe/n_lists of the index is read. Exact at
+  nprobe = n_lists.
 
-The corpus here is the driver's ``embeddings`` table; at 100 TB the corpus
-side would be IVF-sharded (cell = coarse centroid id) with the same probe
-pattern — bucket id plays the role the quad-cell id plays for the
-geospatial joins.
+Two ranking forms remain, because the query sides differ:
+
+- a BOUNDED query side (``ivf_probe_pruned``): the query matrix is collected
+  under the same row bound as the brute-force corpus and broadcast. The
+  corpus streams through ``mapInPandas``; per Arrow batch and list, one BLAS
+  GEMM against only the queries probing that list, a partial top-k, and one
+  window merges the partials. A batched kernel beats per-element evaluation
+  even at dimension-table scale.
+- an UNBOUNDED query side (``lsh_topk``, ``ivf_topk``): nothing query-sized
+  may reach the driver, so candidate pairs from the equi-join on bucket or
+  list are ranked inside Catalyst with higher-order functions
+  (``_rank_in_lists``).
+
+Every operator drops self matches and breaks cosine ties by ascending
+neighbour id; all return (query id, rank int, neighbor_id long, cosine
+double), ``brute_force_topk`` keeping every query column.
 """
 
 from __future__ import annotations
@@ -23,18 +40,60 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
+# Row bound of every driver-side collect of a corpus or query matrix.
+_MAX_DRIVER_ROWS = 1_000_000
 
-def _corpus_matrix(corpus: DataFrame, id_col: str, vec_col: str):
-    rows = corpus.select(id_col, vec_col).collect()
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    M = np.array([r[vec_col] for r in rows], dtype=np.float64)
+
+def _as_matrix(vecs) -> np.ndarray:
+    """A column of equal-length vectors → float64 rows."""
+    return np.array([np.asarray(v, dtype=np.float64) for v in vecs])
+
+
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    """L2-normalise each row; a zero row stays zero."""
     norms = np.linalg.norm(M, axis=1)
     norms[norms == 0] = 1.0
-    return ids, M / norms[:, None]
+    return M / norms[:, None]
+
+
+def _collect_unit_rows(
+    df: DataFrame, id_col: str, vec_col: str, max_rows: int, refusal: str
+):
+    """(ids, L2-normalised matrix) of ``df``, collected to the driver only
+    if it has at most ``max_rows`` rows; otherwise raise ``refusal``.
+
+    ``limit(max_rows + 1).count()`` bounds the guard's own scan: it never
+    reads past the threshold, instead of paying a full count per call."""
+    if df.limit(max_rows + 1).count() > max_rows:
+        raise ValueError(refusal)
+    rows = df.select(id_col, vec_col).collect()
+    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    if not rows:
+        return ids, np.empty((0, 0))
+    return ids, _unit_rows(
+        np.array([r[vec_col] for r in rows], dtype=np.float64)
+    )
+
+
+def _top_k(pairs: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Top-k per query over (qid, cid, cosine) candidate rows: self matches
+    dropped, descending cosine, ties → ascending neighbour id."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
+    return (
+        pairs.filter(F.col("qid") != F.col("cid"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("qid").alias(id_col),
+            F.col("rank").cast("int").alias("rank"),
+            F.col("cid").alias("neighbor_id"),
+            "cosine",
+        )
+    )
 
 
 def brute_force_topk(
@@ -43,9 +102,7 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
-    max_corpus: int = 1_000_000,
-    known_corpus_size: int | None = None,
+    max_corpus: int = _MAX_DRIVER_ROWS,
 ) -> DataFrame:
     """query rows + (rank, neighbor_id, cosine) — exact cosine top-k.
 
@@ -56,45 +113,27 @@ def brute_force_topk(
     corpus, valid only for broadcastable corpora. ``max_corpus`` guards
     against misuse — beyond it the corpus-proportional collect would OOM
     the driver, so we raise and point at the scale paths instead.
-    Callers that already counted the corpus (e.g. a loop re-querying the
-    same one) pass ``known_corpus_size`` to skip the guard's count() job —
-    the declared size still goes through the max_corpus check, so the
-    guard cannot be silently disabled (ADVICE r4: the old bare
-    ``skip_guard`` flag allowed an unbounded driver collect).
     """
-    # limit(max+1).count() bounds the guard's own scan: it never reads
-    # past the threshold, instead of paying a full corpus count per call
-    n_corpus = (
-        known_corpus_size
-        if known_corpus_size is not None
-        else corpus.limit(max_corpus + 1).count()
+    ids, C = _collect_unit_rows(
+        corpus, id_col, vec_col, max_corpus,
+        f"brute_force_topk: corpus has > max_corpus={max_corpus}; the "
+        "full-corpus collect+broadcast is the exactness baseline for "
+        "broadcastable corpora only — use ivf_probe_pruned (persisted "
+        "partition-pruned IVF index) or lsh_topk for corpora beyond "
+        "broadcast size, or raise max_corpus explicitly if the driver can "
+        "hold it",
     )
-    if n_corpus > max_corpus:
-        raise ValueError(
-            f"brute_force_topk: corpus has > max_corpus="
-            f"{max_corpus}; the full-corpus collect+broadcast is the "
-            "exactness baseline for broadcastable corpora only — use "
-            "ivf_probe_pruned (persisted partition-pruned IVF index) or "
-            "lsh_topk for corpora beyond broadcast size, or raise "
-            "max_corpus explicitly if the driver can hold it"
-        )
-    ids, C = _corpus_matrix(corpus, id_col, vec_col)
     sc = queries.sparkSession.sparkContext
     bc_ids, bc_C = sc.broadcast(ids), sc.broadcast(C)
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _topk(qid: pd.Series, vec: pd.Series) -> pd.Series:
         Cm, cid = bc_C.value, bc_ids.value
-        Q = np.array([np.asarray(v, dtype=np.float64) for v in vec])
-        qn = np.linalg.norm(Q, axis=1)
-        qn[qn == 0] = 1.0
-        Q = Q / qn[:, None]
+        Q = _unit_rows(_as_matrix(vec))
         sims = Q @ Cm.T  # (B, S)
-        if exclude_self:
-            qid_np = qid.to_numpy(np.int64)
-            mask = cid[None, :] == qid_np[:, None]
-            sims = np.where(mask, -np.inf, sims)
-        kk = min(k, sims.shape[1] - (1 if exclude_self else 0))
+        qid_np = qid.to_numpy(np.int64)
+        sims = np.where(cid[None, :] == qid_np[:, None], -np.inf, sims)
+        kk = min(k, sims.shape[1] - 1)
         part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
         ps = np.take_along_axis(sims, part, axis=1)
         # exact ordering: descending cosine, ascending id tie-break
@@ -125,6 +164,38 @@ def brute_force_topk(
     )
 
 
+def _rank_in_lists(
+    qp: DataFrame, corpus_a: DataFrame, key: str, k: int, id_col: str
+) -> DataFrame:
+    """Ranking tail for an unbounded query side: equi-join query rows
+    (qid, qv, key) to corpus rows (cid, cv, key) on ``key`` (LSH bucket or
+    IVF list), exact cosine per candidate pair, top-k window.
+
+    No forced broadcast — the key is uniform-ish and low-cardinality;
+    Catalyst/AQE picks broadcast when the corpus side fits and a
+    skew-aware shuffle join otherwise.
+
+    Norms are computed per ROW before the join (identical float ops:
+    sqrt of the same left-to-right sum), not per candidate PAIR, which
+    would re-evaluate each interpreted HOF norm once per candidate."""
+
+    def _norm(col: str) -> F.Column:
+        return F.sqrt(F.aggregate(
+            F.transform(col, lambda a: a.cast("double") * a.cast("double")),
+            F.lit(0.0), lambda acc, x: acc + x))
+
+    qp = qp.withColumn("_nq", _norm("qv"))
+    corpus_a = corpus_a.withColumn("_nc", _norm("cv"))
+    dot = F.aggregate(
+        F.zip_with("qv", "cv", lambda a, b: a.cast("double") * b.cast("double")),
+        F.lit(0.0), lambda acc, x: acc + x,
+    )
+    pairs = qp.join(corpus_a, key).withColumn(
+        "cosine", dot / (F.col("_nq") * F.col("_nc"))
+    )
+    return _top_k(pairs, k, id_col)
+
+
 # ---------------------------------------------------------------------------
 # LSH (sign random projection) bucketing — the scale path
 # ---------------------------------------------------------------------------
@@ -151,8 +222,7 @@ def srp_bucket_df(
     @F.pandas_udf("long")
     def _bucket(vec: pd.Series) -> pd.Series:
         Hm = bc_H.value
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vec])
-        signs = (V @ Hm.T) > 0  # (B, bits)
+        signs = (_as_matrix(vec) @ Hm.T) > 0  # (B, bits)
         weights = (2 ** np.arange(Hm.shape[0])).astype(np.int64)
         return pd.Series(signs @ weights)
 
@@ -169,45 +239,13 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: bucket equi-join then exact cosine rank within
     bucket. Output: query id, rank, neighbor_id, cosine."""
-    from pyspark.sql import Window
-
     qb = srp_bucket_df(queries, bits, id_col, vec_col).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"), "bucket"
     )
     cb = srp_bucket_df(corpus, bits, id_col, vec_col).select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"), "bucket"
     )
-    dot = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_q = F.sqrt(
-        F.aggregate(
-            F.transform("qv", lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-    )
-    norm_c = F.sqrt(
-        F.aggregate(
-            F.transform("cv", lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        qb.join(cb, "bucket")
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn("cosine", dot / (norm_q * norm_c))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("rank").cast("int").alias("rank"),
-            F.col("cid").alias("neighbor_id"),
-            "cosine",
-        )
-    )
+    return _rank_in_lists(qb, cb, "bucket", k, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -233,9 +271,13 @@ def _kmeans_np(X: np.ndarray, k: int, iters: int = 10) -> np.ndarray:
             members = X[assign == j]
             if len(members):
                 C[j] = members.mean(axis=0)
-    norms = np.linalg.norm(C, axis=1)
-    norms[norms == 0] = 1.0
-    return C / norms[:, None]
+    return _unit_rows(C)
+
+
+def _nearest_lists(Vn: np.ndarray, C: np.ndarray, nprobe: int) -> np.ndarray:
+    """Per normalised row of ``Vn``, the ids of its ``nprobe`` nearest
+    centroids (max cosine first)."""
+    return np.argsort(-(Vn @ C.T), axis=1)[:, :nprobe]
 
 
 def ivf_assign_df(
@@ -253,12 +295,8 @@ def ivf_assign_df(
 
     @F.pandas_udf("int")
     def _assign(vec: pd.Series) -> pd.Series:
-        C = bc.value
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vec])
-        n = np.linalg.norm(V, axis=1)
-        n[n == 0] = 1.0
-        V = V / n[:, None]
-        return pd.Series((V @ C.T).argmax(axis=1).astype(np.int32))
+        V = _unit_rows(_as_matrix(vec))
+        return pd.Series((V @ bc.value.T).argmax(axis=1).astype(np.int32))
 
     return vectors.withColumn("ivf_list", _assign(F.col(vec_col)))
 
@@ -285,9 +323,7 @@ def train_centroids(
         .collect()
     )
     M = np.array([r[vec_col] for r in sampled], dtype=np.float64)
-    norms = np.linalg.norm(M, axis=1)
-    norms[norms == 0] = 1.0
-    return _kmeans_np(M / norms[:, None], n_lists)
+    return _kmeans_np(_unit_rows(M), n_lists)
 
 
 def kmeans_refine(
@@ -350,9 +386,7 @@ def kmeans_refine(
         newC = C.copy()
         nz = counts > 0
         newC[nz] = S[nz] / counts[nz, None]
-        norms = np.linalg.norm(newC, axis=1)
-        norms[norms == 0] = 1.0
-        newC = newC / norms[:, None]
+        newC = _unit_rows(newC)
         shift = float(np.sqrt(((newC - C) ** 2).sum(axis=1)).max())
         C = newC
         shifts.append(shift)
@@ -363,62 +397,15 @@ def kmeans_refine(
 
 def _make_probes_udf(cents: np.ndarray, nprobe: int, spark_context):
     """Build the pandas UDF mapping a query vector to its ``nprobe``
-    nearest-centroid list ids (renamed from ``_probes_udf``: the old name
-    read like the UDF itself rather than its factory)."""
+    nearest-centroid list ids."""
     bc = spark_context.broadcast(cents)
 
     @F.pandas_udf("array<int>")
     def _probes(vec: pd.Series) -> pd.Series:
-        C = bc.value
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vec])
-        n = np.linalg.norm(V, axis=1)
-        n[n == 0] = 1.0
-        V = V / n[:, None]
-        sims = V @ C.T
-        order = np.argsort(-sims, axis=1)[:, :nprobe].astype(np.int32)
-        return pd.Series(list(order))
+        order = _nearest_lists(_unit_rows(_as_matrix(vec)), bc.value, nprobe)
+        return pd.Series(list(order.astype(np.int32)))
 
     return _probes
-
-
-def _ivf_rank(qp: DataFrame, corpus_a: DataFrame, k: int, id_col: str) -> DataFrame:
-    """Shared tail: equi-join probes<->lists, exact cosine rank within lists.
-
-    No forced broadcast — ``ivf_list`` is a uniform-ish low-cardinality
-    key; Catalyst/AQE picks broadcast when the (pruned) corpus side fits
-    and a skew-aware shuffle join otherwise.
-
-    Norms are precomputed per ROW before the join (identical float ops:
-    sqrt of the same left-to-right sum), not per candidate PAIR — at
-    nprobe×|list| pairs per query the per-pair form re-evaluates each
-    interpreted HOF norm O(candidates) times."""
-    from pyspark.sql import Window
-
-    def _norm(col: str) -> F.Column:
-        return F.sqrt(F.aggregate(
-            F.transform(col, lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x))
-
-    qp = qp.withColumn("_nq", _norm("qv"))
-    corpus_a = corpus_a.withColumn("_nc", _norm("cv"))
-    dot = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        qp.join(corpus_a, "ivf_list")
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn("cosine", dot / (F.col("_nq") * F.col("_nc")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("rank").cast("int").alias("rank"),
-            F.col("cid").alias("neighbor_id"),
-            "cosine",
-        )
-    )
 
 
 def ivf_topk(
@@ -432,7 +419,7 @@ def ivf_topk(
     sample_n: int = 4096,
 ) -> DataFrame:
     """Approximate top-k: probe the ``nprobe`` nearest IVF lists, exact
-    cosine rank within them (GEMM per batch). recall->1 as nprobe->n_lists.
+    cosine rank within them. recall->1 as nprobe->n_lists.
 
     The quantizer trains on a bounded deterministic sample
     (``train_centroids``) — NO full-corpus driver collect — and list
@@ -446,7 +433,7 @@ def ivf_topk(
     qp = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
     ).withColumn("ivf_list", F.explode(probes(F.col("qv"))))
-    return _ivf_rank(qp, corpus_a, k, id_col)
+    return _rank_in_lists(qp, corpus_a, "ivf_list", k, id_col)
 
 
 def write_ivf_index(
@@ -498,6 +485,15 @@ def write_ivf_index(
     return cents
 
 
+def _read_centroids(spark, path: str) -> np.ndarray:
+    """The centroid matrix ``write_ivf_index`` persisted, row i = list i."""
+    rows = spark.read.parquet(f"{path}/centroids").collect()
+    return np.array(
+        [r["centroid"] for r in sorted(rows, key=lambda r: r["ivf_list"])],
+        dtype=np.float64,
+    )
+
+
 def append_to_ivf_index(
     new_vectors: DataFrame,
     path: str,
@@ -513,15 +509,34 @@ def append_to_ivf_index(
     before; list balance degrades only as far as the data distribution
     drifts from the training sample, at which point a full
     ``write_ivf_index`` rebuild is the (offline) remedy."""
-    spark = new_vectors.sparkSession
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["ivf_list"])],
-        dtype=np.float64,
-    )
+    cents = _read_centroids(new_vectors.sparkSession, path)
     assigned = ivf_assign_df(new_vectors, cents, id_col, vec_col)
     assigned.write.mode("append").partitionBy("ivf_list").parquet(
         f"{path}/index"
+    )
+
+
+_PARTIAL_SCHEMA = "qid long, cid long, cosine double"
+
+
+def _partial_topk(
+    qids: np.ndarray, cids: np.ndarray, cos: np.ndarray, k: int
+) -> pd.DataFrame:
+    """Per-query partial top-k of one (queries × corpus-slice) cosine block
+    ``cos`` of shape (len(qids), len(cids)) → long-form (qid, cid, cosine)
+    rows, k + 1 per query because the self match is dropped later."""
+    n = cos.shape[1]
+    kk = min(k + 1, n)
+    if kk < n:
+        part = np.argpartition(-cos, kk - 1, axis=1)[:, :kk]
+    else:
+        part = np.broadcast_to(np.arange(n), cos.shape).copy()
+    return pd.DataFrame(
+        {
+            "qid": np.repeat(qids, part.shape[1]),
+            "cid": cids[part].ravel(),
+            "cosine": np.take_along_axis(cos, part, axis=1).ravel(),
+        }
     )
 
 
@@ -533,203 +548,51 @@ def ivf_probe_pruned(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k against a persisted IVF index with PARTITION PRUNING: the
-    probe set of this query batch (<= n_lists ints — a driver action bounded
-    by n_lists, never by |corpus|) becomes an ``ivf_list IN (...)`` filter
-    that Spark turns into PartitionFilters on the scan, so only the probed
-    list directories are read."""
+    """Top-k against a persisted IVF index with PARTITION PRUNING.
+
+    The query batch is BOUNDED: its normalised matrix is collected to the
+    driver (refused beyond ``_MAX_DRIVER_ROWS`` rows) and each query's
+    ``nprobe`` nearest lists are computed there. The union of probed lists
+    becomes an ``ivf_list IN (...)`` filter that Spark turns into
+    PartitionFilters on the index scan, so only the probed list
+    directories are read. The query matrix and the list → probing-queries
+    map are broadcast; per Arrow batch of the index scan and per list in
+    it, one GEMM of only the queries probing that list against the list's
+    rows yields a partial top-k, and one window merges the partials.
+    Corpus-side memory is O(batch), driver memory O(|Q|·dim)."""
     spark = queries.sparkSession
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["ivf_list"])],
-        dtype=np.float64,
+    cents = _read_centroids(spark, path)
+    qids, Qn = _collect_unit_rows(
+        queries, id_col, vec_col, _MAX_DRIVER_ROWS,
+        f"ivf_probe_pruned: query batch has > {_MAX_DRIVER_ROWS} rows; the "
+        "probe ranks against a driver-collected query matrix — split the "
+        "batch, or use ivf_topk, whose query side is never collected",
     )
-    probes = _make_probes_udf(cents, nprobe, spark.sparkContext)
-    qp = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("ivf_list", F.explode(probes(F.col("qv"))))
-    # materialize the probe assignment once (query batches are bounded by
-    # assumption) — otherwise the centroid-GEMM UDF would run twice: once
-    # for the pruning list, again inside the ranking join
-    qp = qp.localCheckpoint()
-    lists = sorted(
-        r["ivf_list"] for r in qp.select("ivf_list").distinct().collect()
+    probe = (
+        _nearest_lists(Qn, cents, nprobe) if len(qids)
+        else np.empty((0, 0), np.int64)
     )
-    corpus_a = (
-        spark.read.parquet(f"{path}/index")
-        .filter(F.col("ivf_list").isin(lists))
-        .select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cv"),
-            F.col("ivf_list").cast("int").alias("ivf_list"),
-        )
-    )
-    return _ivf_rank(qp, corpus_a, k, id_col)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-GEMM ranking (r7) — the ranking path that survives 10M+ corpora
-# ---------------------------------------------------------------------------
-#
-# _ivf_rank above ranks candidate PAIRS with Catalyst higher-order
-# functions: ideal at dim-table scale (pure JVM, no Python), but the
-# interpreted zip_with costs ~µs/element, and a scaled probe (1000
-# queries × 10M-vector corpus) forms billions of pair·dim elements — the
-# r6 memory's "HOF in the hot loop" trap. The Arrow form inverts the
-# dataflow: the BOUNDED query batch (≤ a few thousand rows) broadcasts as
-# a dense matrix, the UNBOUNDED corpus streams through mapInPandas, and
-# each Arrow batch contributes one BLAS GEMM + per-query partial top-k;
-# a final k-row-per-(query,batch) shuffle merges partials. Corpus-side
-# memory is O(batch), driver memory O(|Q|·dim + |Q|·k·n_batches).
-
-
-def _query_matrix(queries: DataFrame, id_col: str, vec_col: str):
-    """Bounded query batch → (ids, L2-normalized matrix)."""
-    rows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    Q = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    nq = np.linalg.norm(Q, axis=1)
-    nq[nq == 0] = 1.0
-    return qids, Q / nq[:, None]
-
-
-def _partial_topk_emit(
-    qids: np.ndarray,
-    sub_ids: np.ndarray,
-    cos: np.ndarray,
-    k: int,
-    q_index: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Per-query partial top-k of one (queries × batch-slice) cosine
-    block → long-form (qid, cid, cosine) rows. ``cos`` is (|Q'|, n)."""
-    n = cos.shape[1]
-    kk = min(k + 1, n)  # +1: self-match dropped later
-    if kk < n:
-        part = np.argpartition(-cos, kk - 1, axis=1)[:, :kk]
-    else:
-        part = np.broadcast_to(np.arange(n), cos.shape).copy()
-    qcol = np.repeat(
-        qids if q_index is None else qids[q_index], part.shape[1]
-    )
-    return pd.DataFrame(
-        {
-            "qid": qcol,
-            "cid": sub_ids[part].ravel(),
-            "cosine": np.take_along_axis(cos, part, axis=1).ravel(),
-        }
-    )
-
-
-def _merge_topk(partials: DataFrame, k: int, id_col: str) -> DataFrame:
-    """Global top-k per query from per-batch partials (tie-break:
-    ascending neighbor id, the brute_force_topk convention)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        partials.filter(F.col("qid") != F.col("cid"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("rank").cast("int").alias("rank"),
-            F.col("cid").alias("neighbor_id"),
-            "cosine",
-        )
-    )
-
-
-_PARTIAL_SCHEMA = "qid long, cid long, cosine double"
-
-
-def brute_force_topk_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """EXACT cosine top-k with the corpus distributed (the scale form of
-    ``brute_force_topk``, which broadcasts the corpus and is guarded to
-    1M rows): query matrix broadcast, one GEMM per corpus Arrow batch,
-    partial top-k per batch, global merge. Same output contract as
-    ``brute_force_topk`` (rank int, neighbor_id, cosine; self-matches
-    excluded; ties → ascending neighbor id)."""
-    qids, Qn = _query_matrix(queries, id_col, vec_col)
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast((qids, Qn))
-
-    def _scan(it):
-        bqids, bQ = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            M = np.array(list(pdf[vec_col]), dtype=np.float64)
-            nm = np.linalg.norm(M, axis=1)
-            nm[nm == 0] = 1.0
-            cos = bQ @ (M / nm[:, None]).T
-            yield _partial_topk_emit(
-                bqids, pdf[id_col].to_numpy(np.int64), cos, k
-            )
-
-    partials = corpus.select(id_col, vec_col).mapInPandas(
-        _scan, schema=_PARTIAL_SCHEMA
-    )
-    return _merge_topk(partials, k, id_col)
-
-
-def ivf_probe_pruned_arrow(
-    queries: DataFrame,
-    path: str,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``ivf_probe_pruned`` with Arrow-GEMM ranking: the probe-list
-    filter still reaches the partitioned index scan as PartitionFilters
-    (only nprobe/n_lists of the data is read), but candidate ranking is
-    a GEMM restricted per Arrow batch to the queries that actually probe
-    each list (probe map broadcast with the query matrix)."""
-    spark = queries.sparkSession
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["ivf_list"])],
-        dtype=np.float64,
-    )
-    qids, Qn = _query_matrix(queries, id_col, vec_col)
-    # probe assignment for the bounded batch, driver-side: |Q| × n_lists
-    # — the EXACT float ops + tie order of _make_probes_udf, so the two
-    # probe paths choose identical list sets
-    sims = Qn @ cents.T
-    npb = min(nprobe, len(cents))
-    probe = np.argsort(-sims, axis=1)[:, :npb]
     probed_lists = sorted({int(x) for x in probe.ravel()})
     # list id → indices of the queries probing it
-    by_list: dict[int, np.ndarray] = {
+    by_list = {
         li: np.flatnonzero((probe == li).any(axis=1)) for li in probed_lists
     }
-    sc = spark.sparkContext
-    bc = sc.broadcast((qids, Qn, by_list))
+    bc = spark.sparkContext.broadcast((qids, Qn, by_list))
 
     def _scan(it):
         bqids, bQ, bmap = bc.value
         for pdf in it:
             if not len(pdf):
                 continue
-            M = np.array(list(pdf[vec_col]), dtype=np.float64)
-            nm = np.linalg.norm(M, axis=1)
-            nm[nm == 0] = 1.0
-            Mn = M / nm[:, None]
+            Mn = _unit_rows(_as_matrix(pdf[vec_col]))
             ids = pdf[id_col].to_numpy(np.int64)
             lists = pdf["ivf_list"].to_numpy(np.int64)
             for li in np.unique(lists):
                 qi = bmap.get(int(li))
-                if qi is None or not len(qi):
+                if qi is None:
                     continue
                 sel = lists == li
-                cos = bQ[qi] @ Mn[sel].T
-                yield _partial_topk_emit(bqids, ids[sel], cos, k, q_index=qi)
+                yield _partial_topk(bqids[qi], ids[sel], bQ[qi] @ Mn[sel].T, k)
 
     corpus_a = (
         spark.read.parquet(f"{path}/index")
@@ -737,4 +600,4 @@ def ivf_probe_pruned_arrow(
         .select(id_col, vec_col, F.col("ivf_list").cast("long"))
     )
     partials = corpus_a.mapInPandas(_scan, schema=_PARTIAL_SCHEMA)
-    return _merge_topk(partials, k, id_col)
+    return _top_k(partials, k, id_col)

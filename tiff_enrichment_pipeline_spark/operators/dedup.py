@@ -376,23 +376,23 @@ def connected_components_star(
     min). Exhausting ``max_iter`` RAISES (same contract as the label-prop
     variant: silent partial clusters are never returned).
     """
-    e0 = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
     # canonical directed form: (larger, smaller)
-    edges = (
-        e0.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
+    canon = (
+        pairs.select(
+            F.greatest(src, dst).alias("a"), F.least(src, dst).alias("b")
         )
         .distinct()
         .localCheckpoint()
     )
+    # nodes come from every pair, self-pairs included: a node whose only
+    # pair is (n, n) is its own component, as in label propagation
     all_nodes = (
-        edges.select(F.col("a").alias("node"))
-        .union(edges.select(F.col("b").alias("node")))
+        canon.select(F.col("a").alias("node"))
+        .union(canon.select(F.col("b").alias("node")))
         .distinct()
         .localCheckpoint()
     )
+    edges = canon.filter(F.col("a") != F.col("b"))
 
     def large_star(directed: DataFrame) -> DataFrame:
         sym = directed.union(
@@ -420,14 +420,14 @@ def connected_components_star(
             .distinct()
         )
 
+    n_edges = edges.count()
     for _round in range(max_iter):
         nxt = small_star(large_star(edges)).localCheckpoint()
-        # fixpoint test: identical DISTINCT edge sets (two cheap counts)
-        same = (
-            nxt.count() == edges.count()
-            and nxt.exceptAll(edges).count() == 0
-        )
-        edges = nxt
+        # fixpoint test: identical DISTINCT edge sets; each round counts
+        # only its new edge set and carries that count into the next
+        n_nxt = nxt.count()
+        same = n_nxt == n_edges and nxt.exceptAll(edges).count() == 0
+        edges, n_edges = nxt, n_nxt
         if same:
             if rounds_out is not None:
                 rounds_out.append(_round + 1)

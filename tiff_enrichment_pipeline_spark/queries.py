@@ -2179,6 +2179,7 @@ def q_ivf_ann_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_list, probe via partition pruning (the 100 TB shape — only
     nprobe/n_lists of the index directories are scanned). Rows-only;
     in-memory/index parity + PartitionFilters pinned in pytest."""
+    import shutil
     import tempfile
 
     from tiff_enrichment_pipeline_spark.operators.ann import (
@@ -2188,9 +2189,16 @@ def q_ivf_ann_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     path = tempfile.mkdtemp(prefix="ivf_idx_")
-    write_ivf_index(emb, path, n_lists=16)
-    q = emb.filter(F.col("vec_id") < 20)
-    return ivf_probe_pruned(q, path, k=5, nprobe=4)
+    try:
+        write_ivf_index(emb, path, n_lists=16)
+        q = emb.filter(F.col("vec_id") < 20)
+        # materialize before dropping the scratch index dir (the driver
+        # collects lazily, after this function returns)
+        return ivf_probe_pruned(q, path, k=5, nprobe=4).localCheckpoint(
+            eager=True
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 QUERIES.update({"ivf_ann": q_ivf_ann, "ivf_ann_pruned": q_ivf_ann_pruned})
