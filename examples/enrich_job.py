@@ -53,11 +53,6 @@ def main() -> None:
         landcover=geotables.landcover_polygons(spark),
         stations=geotables.stations(spark, sf_dir),
         dem_tiles=dem_tiles_df(spark),
-        res_low=cfg.cell_res_low,
-        res_mid=cfg.cell_res_mid,
-        res_high=cfg.cell_res_high,
-        knn_res=cfg.knn_res,
-        knn_ring=cfg.knn_ring,
         broadcast_dem=cfg.broadcast_dem,
         observations=(
             geotables.weather_observations(spark, sf_dir)

@@ -11,35 +11,38 @@ from tiff_enrichment_pipeline_spark.config import ConfigError, EnrichConfig
 
 def test_defaults_are_valid():
     cfg = EnrichConfig().validate()
-    assert cfg.knn_ring == 2 and cfg.cell_res_mid == 15
+    assert cfg.partition_buckets == 16 and cfg.broadcast_dem is True
 
 
 def test_invalid_values_all_reported_at_once():
     with pytest.raises(ConfigError) as e:
-        EnrichConfig(cell_res_low=99, knn_ring=0, sf_dir="").validate()
+        EnrichConfig(
+            partition_buckets=0, broadcast_obs="no", sf_dir=""
+        ).validate()
     msg = str(e.value)
     # every violation listed, not just the first
-    assert "cell_res_low=99" in msg
-    assert "knn_ring=0" in msg
+    assert "partition_buckets=0" in msg
+    assert "broadcast_obs='no'" in msg
     assert "sf_dir=''" in msg
-
-
-def test_resolution_ordering_enforced():
-    with pytest.raises(ConfigError, match="ordered"):
-        EnrichConfig(cell_res_low=9, cell_res_mid=8, cell_res_high=7).validate()
 
 
 def test_from_dict_rejects_unknown_keys():
     # removed fields = unknown keys
-    with pytest.raises(ConfigError, match="unknown config keys: knn_k"):
-        EnrichConfig.from_dict({"knn_k": 3})
-    with pytest.raises(ConfigError, match="unknown config keys: dem_salt"):
-        EnrichConfig.from_dict({"dem_salt": 8})
+    for key in ("knn_k", "dem_salt", "knn_res", "knn_ring", "cell_res_low",
+                "cell_res_mid", "cell_res_high"):
+        with pytest.raises(ConfigError, match=f"unknown config keys: {key}"):
+            EnrichConfig.from_dict({key: 3})
 
 
 def test_from_dict_roundtrip():
-    cfg = EnrichConfig.from_dict({"knn_ring": 3, "broadcast_dem": False})
-    assert cfg.knn_ring == 3 and cfg.broadcast_dem is False
+    cfg = EnrichConfig.from_dict({"partition_buckets": 3, "broadcast_dem": False})
+    assert cfg.partition_buckets == 3 and cfg.broadcast_dem is False
+
+
+def test_from_dict_rejects_bool_for_int():
+    # bool is an int subclass; a JSON `true` is no bucket count
+    with pytest.raises(ConfigError, match="partition_buckets=True"):
+        EnrichConfig.from_dict({"partition_buckets": True})
 
 
 def test_wrong_types_rejected():
@@ -76,8 +79,8 @@ def test_module_cli_rejects_bad_config(tmp_path):
     from tiff_enrichment_pipeline_spark.config import ConfigError
 
     cfgf = tmp_path / "cfg.json"
-    cfgf.write_text(json.dumps({"knn_ring": 0}))
-    with _pytest.raises(ConfigError, match="knn_ring"):
+    cfgf.write_text(json.dumps({"partition_buckets": 0}))
+    with _pytest.raises(ConfigError, match="partition_buckets"):
         main(["/root/testdata/sf0.001", str(tmp_path / "o"), "--config", str(cfgf)])
 
 
@@ -208,3 +211,46 @@ def test_module_cli_compact(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["mode"] == "compact"
     assert out["files_after"] < out["files_before"]
+
+
+def test_workers_import_package_without_pythonpath(tmp_path):
+    """A driver that finds the package through ``sys.path`` alone, run
+    from another working directory with no ``PYTHONPATH``, must still run
+    a UDF that calls package code: ``get_spark`` hands the package root
+    to the executors' ``PYTHONPATH`` for the masters it sets."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    driver = tmp_path / "driver.py"
+    driver.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(repo)!r})
+        from tiff_enrichment_pipeline_spark.operators.knn_join import knn_nearest
+        from tiff_enrichment_pipeline_spark.session import get_spark
+
+        spark = get_spark("worker-path", master="local[2]", shuffle_partitions=2)
+        img = spark.createDataFrame(
+            [(1, 4.9, 52.4), (2, 5.3, 52.0), (3, None, None)],
+            "image_id long, lon double, lat double",
+        )
+        st = spark.createDataFrame(
+            [(10, 4.8, 52.3, 1.0, 2.0, 3.0), (11, 5.2, 52.0, 4.0, 5.0, 6.0)],
+            "station_id long, st_lon double, st_lat double, temp_c double, "
+            "wind_ms double, precip_mm double",
+        )
+        rows = knn_nearest(img, st).orderBy("image_id").collect()
+        print("NEAREST", [r["station_id"] for r in rows])
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    r = subprocess.run(
+        [sys.executable, str(driver)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "NEAREST [10, 11, None]" in r.stdout

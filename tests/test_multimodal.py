@@ -11,11 +11,10 @@ from pyspark.sql import functions as F
 from tiff_enrichment_pipeline_spark.raster import codec
 from tiff_enrichment_pipeline_spark.raster.multimodal import (
     extract_audio_features,
-    extract_image_features,
     frame_sample,
     image_features_np,
+    resize_and_extract,
     resize_bilinear_np,
-    resize_images,
 )
 
 
@@ -34,25 +33,31 @@ def images(spark):
     )
 
 
+def _features(df) -> dict:
+    return {
+        r["image_id"]: (r["px_mean"], r["px_std"], r["px_p95"], r["edge_energy"])
+        for r in df.collect()
+    }
+
+
 def test_resize_matches_numpy_oracle(spark, images):
-    out = {r["image_id"]: r for r in resize_images(images, 16, 12).collect()}
+    """Features of the resized images equal the per-image numpy resize +
+    features, bit for bit."""
+    out = _features(resize_and_extract(images, 16, 12))
     assert len(out) == 12
     for i in range(12):
-        r = out[i]
-        assert (r["w"], r["h"], r["fmt"]) == (16, 12, "raw-u16")
-        got = codec.decode_raw_u16(bytes(r["bytes"]), 16, 12)
-        want = resize_bilinear_np(_img(i), 16, 12)
-        assert np.array_equal(got, want)
+        assert out[i] == image_features_np(resize_bilinear_np(_img(i), 16, 12))
 
 
 def test_image_features_match_numpy(spark, images):
-    out = {r["image_id"]: r for r in extract_image_features(images).collect()}
+    # native size: no resize
+    out = _features(resize_and_extract(images, 32, 24))
     for i in range(12):
         m, s, p95, e = image_features_np(_img(i))
-        assert out[i]["px_mean"] == pytest.approx(m)
-        assert out[i]["px_std"] == pytest.approx(s)
-        assert out[i]["px_p95"] == pytest.approx(p95)
-        assert out[i]["edge_energy"] == pytest.approx(e)
+        assert out[i][0] == pytest.approx(m)
+        assert out[i][1] == pytest.approx(s)
+        assert out[i][2] == pytest.approx(p95)
+        assert out[i][3] == pytest.approx(e)
 
 
 def test_frame_sample_every_n(spark):
@@ -174,31 +179,23 @@ def test_batch_kernels_bit_identical_to_per_image():
 
 
 def test_multimodal_is_single_map_stage(spark, images):
-    """No shuffle: resize+features chained is still exchanges-free."""
-    out = extract_image_features(resize_images(images, 16, 12))
+    """No shuffle: resize+features is one exchange-free map stage."""
+    out = resize_and_extract(images, 16, 12)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan or "BroadcastExchange" in plan
     assert out.count() == 12
 
 
-def test_fused_resize_extract_matches_chained(spark, images):
+def test_fused_resize_extract_matches_numpy(spark, images):
     """resize_and_extract (ONE Arrow crossing) must be bit-identical to
-    the two chained stages (raw-u16 intermediate is lossless) and its plan
-    must contain exactly one Python map operator."""
-    from tiff_enrichment_pipeline_spark.raster.multimodal import (
-        resize_and_extract,
-    )
-
-    chained = {
-        r["image_id"]: (r["px_mean"], r["px_std"], r["px_p95"], r["edge_energy"])
-        for r in extract_image_features(resize_images(images, 16, 12)).collect()
-    }
+    the per-image numpy resize + features, and its plan must contain
+    exactly one Python map operator."""
     fused_df = resize_and_extract(images, 16, 12)
-    fused = {
-        r["image_id"]: (r["px_mean"], r["px_std"], r["px_p95"], r["edge_energy"])
-        for r in fused_df.collect()
+    want = {
+        i: image_features_np(resize_bilinear_np(_img(i), 16, 12))
+        for i in range(12)
     }
-    assert fused == chained
+    assert _features(fused_df) == want
     plan = fused_df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
 
@@ -233,13 +230,14 @@ def test_jpeg_payloads_flow_through_multimodal(spark):
     df = spark.createDataFrame(
         rows, "image_id long, bytes binary, w int, h int, fmt string"
     )
-    out = {r["image_id"]: r for r in extract_image_features(df).collect()}
+    # native size: no resize
+    out = _features(resize_and_extract(df, 32, 24))
     assert len(out) == 6
     for i in range(6):
         decoded = jpeg.decode_jpeg_gray(encoders[i](smooth(i)))
         m, s, p95, e = image_features_np(decoded)
-        assert out[i]["px_mean"] == pytest.approx(m)
-        assert out[i]["px_std"] == pytest.approx(s)
+        assert out[i][0] == pytest.approx(m)
+        assert out[i][1] == pytest.approx(s)
 
 
 def test_audio_flac_container(spark):

@@ -102,6 +102,44 @@ def test_knn_exact_vs_bruteforce(spark):
             )
 
 
+def test_knn_index_cap_takes_full_scan(spark, monkeypatch):
+    """An index past MAX_INDEX_ENTRIES is dropped with one warning and
+    every probe takes the exact full scan: winners equal the default
+    index's and a brute force, distances agree to float rounding."""
+    from tiff_enrichment_pipeline_spark.operators import knn_join
+
+    sf = "/root/testdata/sf0.001"
+    img = geotables.images_geo(spark, sf).select("image_id", "lon", "lat").limit(200)
+    st = geotables.stations(spark, sf)
+
+    def run():
+        return {
+            (r["image_id"], r["rank"]): (r["station_id"], r["dist_m"])
+            for r in knn_station_join(img, st, k=3).collect()
+        }
+
+    want = run()
+    monkeypatch.setattr(knn_join, "MAX_INDEX_ENTRIES", 10)
+    with pytest.warns(UserWarning, match="full-scan") as caught:
+        got = run()
+    # one warning per index build (pytest.warns also records unrelated
+    # ResourceWarnings from the Py4J sockets)
+    assert sum("kNN index" in str(w.message) for w in caught) == 1
+    assert got.keys() == want.keys() and len(got) == 600
+    for key, (sid, dist) in want.items():
+        assert got[key][0] == sid, key
+        assert got[key][1] == pytest.approx(dist, rel=1e-9, abs=1e-6), key
+    stations = st.collect()
+    for r in img.collect():
+        ref = sorted(
+            (_haversine(r["lat"], r["lon"], s["st_lat"], s["st_lon"]),
+             s["station_id"])
+            for s in stations
+        )
+        for rank in (1, 2, 3):
+            assert got[(r["image_id"], rank)][0] == ref[rank - 1][1]
+
+
 def test_knn_uses_fallback_for_sparse_regions(spark):
     """Images far from all stations must still get exact answers."""
     img = spark.createDataFrame(

@@ -625,7 +625,7 @@ def test_pack_observations_empty_payload_and_enrich_arg_guard(spark):
         map(tuple, probe.collect())
     )
 
-    with pytest.raises(ValueError, match="at most one"):
+    with pytest.raises(ValueError, match="exactly one"):
         enrich(
             geotables.images_geo(spark, sf),
             landcover=geotables.landcover_polygons(spark),

@@ -109,19 +109,17 @@ def main(argv: list[str] | None = None) -> int:
         else None
     )
 
+    def enrich_images(df, batch_id=None):
+        # one call for both modes; batch_id: the watcher's micro-batch id
+        return enrich(
+            df, landcover=landcover, stations=stations, dem_tiles=dem,
+            observations=obs, broadcast_dem=cfg.broadcast_dem,
+            broadcast_obs=cfg.broadcast_obs,
+        )
+
     counters = None  # batch mode: observed in the enrichment write
     if args.watch:
         from tiff_enrichment_pipeline_spark.streaming.watcher import watch_images
-
-        def enrich_batch(df, batch_id):
-            return enrich(
-                df, landcover=landcover, stations=stations, dem_tiles=dem,
-                observations=obs, res_low=cfg.cell_res_low,
-                res_mid=cfg.cell_res_mid, res_high=cfg.cell_res_high,
-                knn_res=cfg.knn_res, knn_ring=cfg.knn_ring,
-                broadcast_dem=cfg.broadcast_dem,
-                broadcast_obs=cfg.broadcast_obs,
-            )
 
         schema = (
             "image_id long, lon double, lat double, alt double, "
@@ -129,7 +127,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         q = watch_images(
             spark, f"{cfg.sf_dir}/stream_in", f"{cfg.output_dir}/enriched",
-            f"{cfg.output_dir}/_checkpoint", enrich_batch, schema=schema,
+            f"{cfg.output_dir}/_checkpoint", enrich_images, schema=schema,
         )
         q.awaitTermination()
         try:
@@ -138,15 +136,7 @@ def main(argv: list[str] | None = None) -> int:
             n = 0  # drained stream produced zero micro-batches
     else:
         rec = RunRecorder("RUN_CLI")
-        images = geotables.images_geo(spark, cfg.sf_dir)
-        result = enrich(
-            images, landcover=landcover, stations=stations, dem_tiles=dem,
-            observations=obs, res_low=cfg.cell_res_low,
-            res_mid=cfg.cell_res_mid, res_high=cfg.cell_res_high,
-            knn_res=cfg.knn_res, knn_ring=cfg.knn_ring,
-            broadcast_dem=cfg.broadcast_dem,
-            broadcast_obs=cfg.broadcast_obs,
-        )
+        result = enrich_images(geotables.images_geo(spark, cfg.sf_dir))
         from tiff_enrichment_pipeline_spark.sources.images import (
             read_images,
             write_images,

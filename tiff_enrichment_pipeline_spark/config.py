@@ -21,11 +21,6 @@ class ConfigError(ValueError):
     """All submit-time config violations, one per line."""
 
 
-# resolutions supported by grid.cell_of's int64 layout
-# (cell = k·2^56 + ix·2^28 + iy → ix needs k bits < 2^28)
-_MIN_RES, _MAX_RES = 1, 28
-
-
 @dataclass(frozen=True)
 class EnrichConfig:
     """Everything the flagship enrichment plan parameterizes on.
@@ -38,16 +33,6 @@ class EnrichConfig:
     # inputs
     sf_dir: str = "/root/testdata/sf0.001"
     output_dir: str = "/tmp/enriched_out"
-    # quad-cell resolutions (reference H3 res 7-9 analogue → k 13/15/17);
-    # consumed by enrich(res_low/mid/high)
-    cell_res_low: int = 13
-    cell_res_mid: int = 15
-    cell_res_high: int = 17
-    # kNN candidate buckets: resolution + Chebyshev ring (exact for any
-    # setting; trades candidate-set size vs fallback frequency) —
-    # enrich(knn_res/knn_ring)
-    knn_ring: int = 2
-    knn_res: int = 10
     # DEM strategy: broadcast grids vs a sort-merge join on the tile key
     # (hot tiles: AQE's skew-join split) — enrich(broadcast_dem)
     broadcast_dem: bool = True
@@ -65,31 +50,10 @@ class EnrichConfig:
 
     def validate(self) -> "EnrichConfig":
         errs: list[str] = []
-        for name in ("cell_res_low", "cell_res_mid", "cell_res_high", "knn_res"):
-            v = getattr(self, name)
-            if not isinstance(v, int) or not (_MIN_RES <= v <= _MAX_RES):
-                errs.append(
-                    f"{name}={v!r}: must be an int in [{_MIN_RES}, {_MAX_RES}]"
-                )
-        res_ok = all(
-            isinstance(getattr(self, n), int)
-            for n in ("cell_res_low", "cell_res_mid", "cell_res_high")
-        )
-        if res_ok and not (
-            self.cell_res_low <= self.cell_res_mid <= self.cell_res_high
-        ):
-            errs.append(
-                "cell resolutions must be ordered: "
-                f"cell_res_low({self.cell_res_low}) <= "
-                f"cell_res_mid({self.cell_res_mid}) <= "
-                f"cell_res_high({self.cell_res_high})"
-            )
-        if not isinstance(self.knn_ring, int) or self.knn_ring < 1:
-            errs.append(f"knn_ring={self.knn_ring!r}: must be an int >= 1")
-        if not isinstance(self.partition_buckets, int) or self.partition_buckets < 1:
-            errs.append(
-                f"partition_buckets={self.partition_buckets!r}: must be an int >= 1"
-            )
+        # bool is an int subclass: True must not pass as a bucket count
+        pb = self.partition_buckets
+        if isinstance(pb, bool) or not isinstance(pb, int) or pb < 1:
+            errs.append(f"partition_buckets={pb!r}: must be an int >= 1")
         for name in ("sf_dir", "output_dir"):
             v = getattr(self, name)
             if not isinstance(v, str) or not v:

@@ -23,7 +23,7 @@ partial aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tiff_enrichment_pipeline_spark.functions.text import (
@@ -50,16 +50,6 @@ MINHASH_AB = [
 N_BANDS, ROWS_PER_BAND = 4, 2
 
 
-def minhash_sigs(text: Column) -> list[Column]:
-    """8 minhash values over 3-word shingles (null for <3-token docs)."""
-    sh = word_shingles(text, 3)
-    hashes = F.transform(sh, lambda s: md5_prefix_long(s))
-    return [
-        F.array_min(F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P))
-        for (a, b) in MINHASH_AB
-    ]
-
-
 def minhash_sigs_sql(text: str) -> list[str]:
     sh = word_shingles_sql(text, 3)
     h = md5_prefix_long_sql("s")
@@ -74,7 +64,7 @@ def minhash_signature_df(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Implementation: explode shingles → md5-prefix hash per shingle → ONE
     hash aggregate computing all 8 permutation minima. Same values as the
-    closed-form `minhash_sigs` expression (and its SQL twin), but the hot
+    closed-form `minhash_sigs_sql` expression the oracle runs, but the hot
     loop is whole-stage-codegen partial aggregation instead of interpreted
     higher-order-function lambdas — measured ~9× faster at 5k docs
     (sig materialization 8 s → <1 s at sf0.1). The groupBy shuffles on the

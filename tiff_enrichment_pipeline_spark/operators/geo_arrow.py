@@ -26,10 +26,8 @@ from tiff_enrichment_pipeline_spark.operators.elevation import (
     tile_key,
 )
 from tiff_enrichment_pipeline_spark.operators.knn_join import (
-    _chord2_to_m,
-    _indexed_payload_df,
-    _safe_idx,
-    build_knn_index,
+    _station_index,
+    _with_station,
     topk_indexed_np,
 )
 
@@ -40,32 +38,10 @@ def fused_station_dem_lookup(
     dem_tiles: DataFrame,
     lon: str = "lon",
     lat: str = "lat",
-    knn_res: int = 10,
-    knn_ring: int = 2,
 ) -> DataFrame:
-    """images + ``_geo`` struct<st_idx,d2,elevation> + station payload +
-    dist_m + elevation columns. Exact 1-NN + bilinear DEM, one Arrow pass.
-
-    ``knn_res``/``knn_ring``: candidate-bucket resolution and Chebyshev
-    ring of the certified-exact 1-NN (EnrichConfig.knn_res/knn_ring) —
-    results are exact for ANY setting; they only trade candidate-set size
-    against fallback frequency."""
-    st_rows = stations.collect()
-    # id-ascending layout: the kernel's tie rule requires it (knn_join.py)
-    st_rows.sort(key=lambda r: r["station_id"])
-    s_lat = np.array([r["st_lat"] for r in st_rows], dtype=np.float64)
-    s_lon = np.array([r["st_lon"] for r in st_rows], dtype=np.float64)
-    s_ids = np.array([r["station_id"] for r in st_rows], dtype=np.int64)
-    rp, rl = np.radians(s_lat), np.radians(s_lon)
-    s_xyz = np.stack(
-        [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)], axis=1
-    )
-    knn_index, knn_res_f = build_knn_index(
-        s_lat, s_lon, s_xyz, 1, knn_res, knn_ring
-    )
-
-    sc = images.sparkSession.sparkContext
-    bc_s = sc.broadcast((s_xyz, s_ids, knn_index, knn_res_f))
+    """images + station payload + dist_m + elevation columns. Exact 1-NN
+    (the station index of ``knn_join``) + bilinear DEM, one Arrow pass."""
+    bc_s, st_indexed, _ = _station_index(stations, 1)
     bc_g = _broadcast_grid_stack(dem_tiles)
 
     out_t = StructType(
@@ -103,24 +79,14 @@ def fused_station_dem_lookup(
                 )
         return pd.DataFrame({"st_idx": st_idx, "d2": d2_out, "elevation": elev})
 
-    spark = images.sparkSession
-    st_indexed = _indexed_payload_df(spark, stations, st_rows)
     dem_meta = dem_tiles.select(
         "tile_x", "tile_y",
         F.col("source").alias("elevation_source"),
         F.col("accuracy_m").alias("elevation_accuracy_m"),
     )
     tx, ty = tile_key(F.col(lon), F.col(lat))
-    out = (
-        images.withColumn("_geo", _lookup(F.col(lat), F.col(lon)))
-        .withColumn("_st_idx", _safe_idx(F.col("_geo")["st_idx"]))
-        .withColumn("dist_m", _chord2_to_m(F.col("_geo")["d2"]))
-        .withColumn("elevation", F.col("_geo")["elevation"])
-        .withColumn("tile_x", tx)
-        .withColumn("tile_y", ty)
-        .drop("_geo")
-        .join(F.broadcast(st_indexed), "_st_idx", "left")
-        .join(F.broadcast(dem_meta), ["tile_x", "tile_y"], "left")
-        .drop("_st_idx")
-    )
-    return out
+    geo = images.withColumn("_geo", _lookup(F.col(lat), F.col(lon)))
+    return _with_station(
+        geo, st_indexed, "_geo", "st_idx", "d2",
+        elevation=F.col("_geo")["elevation"], tile_x=tx, tile_y=ty,
+    ).join(F.broadcast(dem_meta), ["tile_x", "tile_y"], "left")

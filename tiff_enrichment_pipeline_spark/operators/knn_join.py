@@ -7,10 +7,13 @@ provably-exact kNN join (SURVEY.md J6, W5). Design:
 
 - **Build-certified per-cell index** (:func:`build_knn_index`). The
   station dimension is collected once, sorted by station_id and indexed
-  on a fine lat/lon grid: every cell near a station maps to the station
+  on a fine lat/lon grid (:func:`_station_index`, shared with the fused
+  lookup in ``geo_arrow``): every cell near a station maps to the station
   positions whose list provably contains the exact top-k for EVERY point
   of the cell (triangle-inequality prune from the cell center). Index,
-  unit-sphere station coordinates and ids ride one broadcast.
+  unit-sphere station coordinates and ids ride one broadcast. An index
+  past ``MAX_INDEX_ENTRIES`` is dropped and every probe takes the
+  fallback scan.
 - **Trig-free GEMM kernel** (:func:`topk_indexed_np`, inside a pandas
   UDF). The ranking key is the squared 3-D chord ``2 − 2·p·s`` of unit
   vectors, strictly monotonic in great-circle distance, so ordering is
@@ -22,20 +25,23 @@ provably-exact kNN join (SURVEY.md J6, W5). Design:
   (:func:`_fallback_f32_scan`): an fp32 GEMM against every station keeps
   the candidates within a margin of the fp32 k-th best, re-ranked in fp64
   — exact, at half the memory traffic of an fp64 scan.
-- **Winner payloads re-attached by a broadcast join on ``_st_idx``**: the
-  UDF returns only (station position, chord²) per rank; the station
-  columns come back from a broadcast ``(_st_idx, station cols…)`` table.
+- **Winner payloads re-attached by a broadcast join on ``_st_idx``**
+  (:func:`_with_station`): the UDF returns only (station position,
+  chord²) per rank; the station columns come back from a broadcast
+  ``(_st_idx, station cols…)`` table.
   No exchange is keyed by anything geographic, so hot cells cannot skew a
   stage, and plan size is independent of |stations|.
 - **Null-GPS gated.** Missing/NaN coordinates yield NULL payloads
   (:func:`knn_nearest`) or no rows (:func:`knn_station_join`) — never a
   fabricated match.
 
-Dated weather (:func:`nearest_station_dated`) adds the capture date: the
+Dated weather (:func:`nearest_station_dated`, and ``plans.enrich``) adds
+the capture date through one attach (:func:`attach_observations`): the
 (station_id, date) observation dimension is packed into one row per
 station with one primitive array per payload column
 (:func:`pack_observations_columnar`), broadcast, and read by day offset
-(:func:`packed_obs_lookup`).
+(:func:`packed_obs_lookup`) — or, for dimensions too big to broadcast,
+joined row by row on the composite key.
 """
 
 from __future__ import annotations
@@ -45,7 +51,20 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tiff_enrichment_pipeline_spark.session import BROADCAST_THRESHOLD_BYTES
+
 EARTH_R = 6371000.0  # reference: core/validation.py:88
+
+#: coverage of every station index the operators build: grid resolution
+#: (the index's fine grid has ``2**(INDEX_RES + 2)`` columns) and
+#: Chebyshev ring (see :func:`build_knn_index`). Results are exact for any
+#: pair; this one trades candidate-list size against fallback frequency.
+INDEX_RES, INDEX_RING = 10, 2
+
+#: cap on an index's total entries (int32 station positions): the
+#: session's broadcast budget at 4 bytes per entry. Past it the index is
+#: dropped and every probe takes the exact full scan.
+MAX_INDEX_ENTRIES = BROADCAST_THRESHOLD_BYTES // 4
 
 #: fp32-prefilter exclusion margin (see _fallback_f32_scan): worst-case
 #: |fp32−fp64| of 2−2·dot3 on unit vectors is < 2e-6; 1e-4 is a 50×
@@ -66,6 +85,14 @@ def _chord2_to_m(d2: Column) -> Column:
         ~F.isnan(d2),
         F.lit(2.0 * EARTH_R)
         * F.asin(F.least(F.sqrt(d2) / F.lit(2.0), F.lit(1.0))),
+    )
+
+
+def _unit_xyz(lat: "np.ndarray", lon: "np.ndarray") -> "np.ndarray":
+    """(n, 3) unit-sphere coordinates of lat/lon degrees."""
+    rp, rl = np.radians(lat), np.radians(lon)
+    return np.stack(
+        [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)], axis=1
     )
 
 
@@ -104,8 +131,11 @@ def build_knn_index(
 
     Median list size at the 10k-station fixture: 344 stations (a plain
     (res=10, ring=2) neighbourhood holds a median 1031). Returns
-    (index, res_f)."""
+    (index, res_f). The entry total is checked as the lists are built:
+    past ``MAX_INDEX_ENTRIES`` a warning is emitted and the index comes
+    back empty, so every probe takes the exact full scan."""
     import math
+    import warnings
 
     res_f = res + 2
     ring_f = 4 * ring
@@ -124,10 +154,7 @@ def build_knn_index(
     gx, gy = cells >> 28, cells & (2**28 - 1)
     clon = (gx + 0.5) * w - 180.0
     clat = (gy + 0.5) * w - 90.0
-    rp, rl = np.radians(clat), np.radians(clon)
-    C = np.stack(
-        [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)], axis=1
-    ).astype(np.float32)
+    C = _unit_xyz(clat, clon).astype(np.float32)
     # D(c): max chord center→cell point via the meridian-then-parallel
     # path bound h/2 + cos(φ_min)·w/2 (path length ≥ great circle ≥ chord)
     m_per_deg = 2.0 * math.pi * EARTH_R / 360.0
@@ -140,6 +167,7 @@ def build_knn_index(
     out: dict[int, np.ndarray] = {}
     eps2 = np.float32(1e-5)  # ≥5× the worst-case fp32 chord² error
     CH = 4096  # bound the (cells × stations) build matrix to ~160 MB fp32
+    entries = 0
     for c0 in range(0, len(cells), CH):
         cc = C[c0 : c0 + CH]
         d2 = 2.0 - 2.0 * (cc @ S32)  # fp32 chord², (chunk, S)
@@ -151,6 +179,15 @@ def build_knn_index(
         thr = kth + 2.0 * d_ch[c0 : c0 + CH].astype(np.float32)
         mask = d2 <= (thr * thr + eps2)[:, None]
         rows, cols = np.nonzero(mask)
+        entries += len(rows)
+        if entries > MAX_INDEX_ENTRIES:
+            warnings.warn(
+                f"kNN index passed {MAX_INDEX_ENTRIES} entries "
+                f"({len(s_xyz)} stations, k={k}); using the full-scan "
+                "kernel for every probe",
+                stacklevel=2,
+            )
+            return {}, res_f
         starts = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
         bnds = np.r_[starts, len(rows)]
         for i in range(len(starts)):
@@ -235,11 +272,7 @@ def topk_indexed_np(
     valid = ~np.isnan(lat_v) & ~np.isnan(lon_v)
     if not valid.any():
         return out_idx, out_d2
-    rp = np.radians(lat_v)
-    rl = np.radians(lon_v)
-    P = np.stack(
-        [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)], axis=1
-    )
+    P = _unit_xyz(lat_v, lon_v)
     nx, ny = 2**res_f, 2 ** (res_f - 1)
     w = 360.0 / nx
     ix = np.clip(np.nan_to_num((lon_v + 180.0) / w), 0, nx - 1)
@@ -375,10 +408,65 @@ def _fallback_f32_scan(rows, P, S_xyz, kk, out_idx, out_d2):
         out_d2[r[mr[keep]], rank[keep]] = np.maximum(d2e[order][keep], 0.0)
 
 
-
 def _safe_idx(i: Column) -> Column:
     """NaN-safe winner-index cast: NaN (no GPS) → NULL int (ANSI-proof)."""
     return F.when(~F.isnan(i), i).cast("int")
+
+
+def _station_index(stations: DataFrame, k: int):
+    """Collect the station dimension once and broadcast its kNN index.
+
+    Returns (a broadcast of ``(s_xyz, s_ids, index, res_f)`` for
+    :func:`topk_indexed_np`, the ``(_st_idx, station cols…)`` payload
+    table for :func:`_with_station`, kk = min(k, |stations|)). Stations
+    are sorted by id: the kernel's argmin tie rule (first occurrence ==
+    smallest id) requires it, and the payload table enumerates the same
+    order so ``_st_idx`` stays consistent.
+
+    The payload table is built via a pandas DataFrame so createDataFrame
+    takes the Arrow path — the row-tuple path re-serializes every row
+    through the Python RDD pickler and measured 0.47-0.72 s per query at
+    1000 stations vs 0.16-0.23 s via Arrow (r7 kNN-core attribution)."""
+    spark = stations.sparkSession
+    st_rows = stations.collect()  # dim-table collect == broadcast data motion
+    st_rows.sort(key=lambda r: r["station_id"])
+    s_lat = np.array([r["st_lat"] for r in st_rows], dtype=np.float64)
+    s_lon = np.array([r["st_lon"] for r in st_rows], dtype=np.float64)
+    s_ids = np.array([r["station_id"] for r in st_rows], dtype=np.int64)
+    s_xyz = _unit_xyz(s_lat, s_lon)  # (S, 3)
+    index, res_f = build_knn_index(
+        s_lat, s_lon, s_xyz, k, INDEX_RES, INDEX_RING
+    )
+    bc = spark.sparkContext.broadcast((s_xyz, s_ids, index, res_f))
+    pdf = pd.DataFrame([tuple(r) for r in st_rows], columns=stations.columns)
+    pdf.insert(0, "_st_idx", np.arange(len(pdf), dtype=np.int32))
+    payload = spark.createDataFrame(
+        pdf,
+        schema=(
+            "_st_idx int, "
+            + ", ".join(f"{c} {t}" for c, t in stations.dtypes)
+        ),
+    )
+    return bc, payload, min(k, len(st_rows))
+
+
+def _with_station(
+    df: DataFrame, payload: DataFrame, winner: str, i: str, d: str, **cols
+) -> DataFrame:
+    """``df`` + ``dist_m`` (+ ``cols``) + the station payload of one
+    winner: field ``i`` of struct column ``winner`` is its station
+    position, field ``d`` its chord². ``winner`` is dropped; the payload
+    comes back through one broadcast equi-join on ``_st_idx`` (no winner
+    → NULL payload)."""
+    w = F.col(winner)
+    return (
+        df.withColumns(
+            {"_st_idx": _safe_idx(w[i]), "dist_m": _chord2_to_m(w[d]), **cols}
+        )
+        .drop(winner)
+        .join(F.broadcast(payload), "_st_idx", "left")
+        .drop("_st_idx")
+    )
 
 
 def _knn_arrow_idx(
@@ -387,30 +475,13 @@ def _knn_arrow_idx(
     k: int,
     lon: str,
     lat: str,
-    res: int = 10,
-    ring: int = 2,
 ) -> tuple[DataFrame, DataFrame, int]:
     """(images + ``_knn_i`` struct<i0,d0,i1,d1,…> of winner positions and
     chord², the ``_st_idx``→station payload table (broadcastable, same
     ordering as the positions), kk = min(k, |stations|))."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    st_rows = stations.collect()  # dim-table collect == broadcast data motion
-    # id-ascending layout: the kernel's argmin tie rule (first occurrence
-    # == smallest id) requires it; st_indexed enumerates the same sorted
-    # list so _st_idx stays consistent
-    st_rows.sort(key=lambda r: r["station_id"])
-    s_lat = np.array([r["st_lat"] for r in st_rows], dtype=np.float64)
-    s_lon = np.array([r["st_lon"] for r in st_rows], dtype=np.float64)
-    s_ids = np.array([r["station_id"] for r in st_rows], dtype=np.int64)
-    rp, rl = np.radians(s_lat), np.radians(s_lon)
-    s_xyz = np.stack(
-        [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)], axis=1
-    )  # (S, 3)
-    knn_index, res_f = build_knn_index(s_lat, s_lon, s_xyz, k, res, ring)
-    sc = images.sparkSession.sparkContext
-    bc = sc.broadcast((s_xyz, s_ids, knn_index, res_f))
-    kk = min(k, len(st_rows))
+    bc, payload, kk = _station_index(stations, k)
 
     # fixed-width struct i0,d0,i1,d1,… — returned as a pd.DataFrame of flat
     # float64 columns, the fastest Arrow path (per-row Python lists are
@@ -438,28 +509,8 @@ def _knn_arrow_idx(
             cols[f"d{j}"] = d2v[:, j]
         return pd.DataFrame(cols)
 
-    spark = images.sparkSession
-    st_indexed = _indexed_payload_df(spark, stations, st_rows)
     with_idx = images.withColumn("_knn_i", _topk_idx(F.col(lat), F.col(lon)))
-    return with_idx, st_indexed, kk
-
-
-def _indexed_payload_df(spark, stations: DataFrame, st_rows) -> DataFrame:
-    """``(_st_idx, station cols…)`` broadcast payload table from already-
-    collected rows. Built via a pandas DataFrame so createDataFrame takes
-    the Arrow path — the row-tuple path re-serializes every row through
-    the Python RDD pickler and measured 0.47-0.72 s per query at 1000
-    stations vs 0.16-0.23 s via Arrow (r7 kNN-core attribution); at dim
-    scale the payload is broadcast either way."""
-    pdf = pd.DataFrame([tuple(r) for r in st_rows], columns=stations.columns)
-    pdf.insert(0, "_st_idx", np.arange(len(pdf), dtype=np.int32))
-    return spark.createDataFrame(
-        pdf,
-        schema=(
-            "_st_idx int, "
-            + ", ".join(f"{c} {t}" for c, t in stations.dtypes)
-        ),
-    )
+    return with_idx, payload, kk
 
 
 def knn_nearest(
@@ -467,24 +518,12 @@ def knn_nearest(
     stations: DataFrame,
     lon: str = "lon",
     lat: str = "lat",
-    res: int = 10,
-    ring: int = 2,
 ) -> DataFrame:
     """images + nearest station payload columns + ``dist_m`` — the 1-NN
     shape the enrichment plan consumes. One Arrow map stage + one broadcast
-    equi-join (codegen); nothing shuffles. ``res``/``ring``: index
-    coverage (see :func:`build_knn_index`; exact for any setting)."""
-    with_idx, st_indexed, _ = _knn_arrow_idx(
-        images, stations, k=1, lon=lon, lat=lat, res=res, ring=ring
-    )
-    out = (
-        with_idx.withColumn("_st_idx", _safe_idx(F.col("_knn_i")["i0"]))
-        .withColumn("dist_m", _chord2_to_m(F.col("_knn_i")["d0"]))
-        .drop("_knn_i")
-        .join(F.broadcast(st_indexed), "_st_idx", "left")
-        .drop("_st_idx")
-    )
-    return out
+    equi-join (codegen); nothing shuffles."""
+    with_idx, payload, _ = _knn_arrow_idx(images, stations, 1, lon, lat)
+    return _with_station(with_idx, payload, "_knn_i", "i0", "d0")
 
 
 #: fixed columns of the packed observation dimension (struct-of-arrays);
@@ -598,8 +637,6 @@ def nearest_station_dated(
     lat: str = "lat",
     ts: str = "captured_at",
     broadcast_obs: bool = True,
-    res: int = 10,
-    ring: int = 2,
     packed_obs: DataFrame | None = None,
 ) -> DataFrame:
     """Composite spatio-temporal weather join: nearest station *spatially*,
@@ -608,24 +645,58 @@ def nearest_station_dated(
     scripts/create-tables.sql:129-132).
 
     images + nearest-station payload + dist_m + weather_historical_date +
-    obs_* columns. Plan: one Arrow 1-NN map stage (:func:`knn_nearest`;
-    ``res``/``ring`` set its index coverage, results are exact for any
-    setting), then the observation lookup. Give exactly one of:
+    obs_* columns. Plan: one Arrow 1-NN map stage (:func:`knn_nearest`),
+    then :func:`attach_observations` with exactly one of
+    ``observations``/``packed_obs`` (strategies and ``broadcast_obs``
+    there).
 
-    - ``observations``: the row-level (station_id, obs_date) dimension.
-      It is first cut to the probe's [min, max] capture-date span — dates
-      outside it can never match the LEFT join key, so the cut is exact
-      while shrinking the build side by the temporal-span ratio. The span
-      is attached LAZILY (a broadcast 1-row (min, max) aggregate of the
-      probe's ts column, crossJoined and filtered per obs row), so
-      building the DataFrame runs NO job and the cost stays inside the
-      query's own execution. An empty probe yields NULL bounds → an empty
-      build side, which the LEFT join absorbs.
+    ``observations`` are first cut to the probe's [min, max] capture-date
+    span — dates outside it can never match the LEFT join key, so the cut
+    is exact while shrinking the build side by the temporal-span ratio.
+    The span is attached LAZILY (a broadcast 1-row (min, max) aggregate
+    of the probe's ts column, crossJoined and filtered per obs row), so
+    building the DataFrame runs NO job and the cost stays inside the
+    query's own execution. An empty probe yields NULL bounds → an empty
+    build side, which the LEFT join absorbs."""
+    if observations is not None:
+        span = images.select(
+            F.min(F.to_date(F.col(ts))).alias("_span_lo"),
+            F.max(F.to_date(F.col(ts))).alias("_span_hi"),
+        )
+        observations = (
+            observations.withColumnRenamed("obs_date", "weather_historical_date")
+            .crossJoin(F.broadcast(span))
+            .filter(
+                F.col("weather_historical_date").between(
+                    F.col("_span_lo"), F.col("_span_hi")
+                )
+            )
+            .drop("_span_lo", "_span_hi")
+        )
+    probe = knn_nearest(images, stations, lon=lon, lat=lat).withColumn(
+        "weather_historical_date", F.to_date(F.col(ts))
+    )
+    return attach_observations(probe, observations, packed_obs, broadcast_obs)
+
+
+def attach_observations(
+    probe: DataFrame,
+    observations: DataFrame | None = None,
+    packed_obs: DataFrame | None = None,
+    broadcast_obs: bool = True,
+) -> DataFrame:
+    """LEFT-attach the dated observation payload to a ``probe`` that has
+    ``station_id`` and ``weather_historical_date`` — the one place the
+    dated-weather strategy is chosen (``plans.enrich`` and
+    :func:`nearest_station_dated` both call it). Give exactly one of:
+
+    - ``observations``: the row-level dimension, its date column renamed
+      to the probe's key: (station_id, weather_historical_date, payload…).
     - ``packed_obs``: a pre-built :func:`pack_observations_columnar` dim.
       The pack build is a full shuffle + agg of the observation table; a
-      pipeline running several dated consumers (flagship enrich, this
-      join, any rollup) builds it once, persists it and passes it here,
-      so each consumer starts at the broadcast.
+      pipeline running several dated consumers (flagship enrich, the
+      dated join, any rollup) builds it once, persists it and passes it
+      here, so each consumer starts at the broadcast.
 
     ``broadcast_obs=True`` (default): the observations are packed into
     one row per station (inline from ``observations`` when no
@@ -636,18 +707,19 @@ def nearest_station_dated(
     one divergence from a row-level join is duplicate (station_id, date)
     keys: the row join emits one output row per duplicate, the pack the
     first in (date, payload) sort order — a violation of the reference's
-    PK either way.
+    PK either way; hence the two sources are never mixed.
 
-    ``broadcast_obs=False`` (planetary observation dims): a row-level
-    equi-join on the composite (station_id, date) key, left to AQE. Dates
-    and station ids are both uniform, so that shuffle is skew-free; a
-    station-keyed packed shuffle would co-locate all of a hot station's
-    probes on one task, hence ``packed_obs`` requires the broadcast."""
+    ``broadcast_obs=False`` (planetary observation dims, |stations|×|days|
+    up to 1e9 rows): a row-level equi-join on the composite (station_id,
+    date) key, left to AQE. Dates and station ids are both uniform, so
+    that shuffle is skew-free; a station-keyed packed shuffle would
+    co-locate all of a hot station's probes on one task, hence
+    ``packed_obs`` requires the broadcast."""
     if (observations is None) == (packed_obs is None):
         raise ValueError(
-            "nearest_station_dated needs exactly one of observations= "
-            "(row-level dim) or packed_obs= (pre-built "
-            "pack_observations_columnar output)"
+            "dated weather needs exactly one of observations= (row-level "
+            "dim) or packed_obs= (pre-built pack_observations_columnar "
+            "output)"
         )
     if packed_obs is not None and not broadcast_obs:
         raise ValueError(
@@ -655,27 +727,13 @@ def nearest_station_dated(
             "joins on the skew-free (station_id, date) composite key and "
             "must not co-locate a station's whole history on one task"
         )
-    nn = knn_nearest(images, stations, lon=lon, lat=lat, res=res, ring=ring)
-    probe = nn.withColumn("weather_historical_date", F.to_date(F.col(ts)))
     if packed_obs is not None:
         return packed_obs_lookup(probe, packed_obs)
-    span = images.select(
-        F.min(F.to_date(F.col(ts))).alias("_span_lo"),
-        F.max(F.to_date(F.col(ts))).alias("_span_hi"),
-    )
-    obs = (
-        observations.withColumnRenamed("obs_date", "weather_historical_date")
-        .crossJoin(F.broadcast(span))
-        .filter(
-            F.col("weather_historical_date").between(
-                F.col("_span_lo"), F.col("_span_hi")
-            )
-        )
-        .drop("_span_lo", "_span_hi")
-    )
     if broadcast_obs:
-        return packed_obs_lookup(probe, pack_observations_columnar(obs))
-    return probe.join(obs, ["station_id", "weather_historical_date"], "left")
+        return packed_obs_lookup(probe, pack_observations_columnar(observations))
+    return probe.join(
+        observations, ["station_id", "weather_historical_date"], "left"
+    )
 
 
 def packed_obs_lookup(
@@ -687,9 +745,9 @@ def packed_obs_lookup(
     ``probe[date_col]``: a broadcast hash join on station_id (|stations|
     keys — NOT |stations|×|days|) followed by an O(1) array-index lookup
     when the station's dates are dense, or an array_position over its
-    date offsets otherwise. Shared by ``nearest_station_dated`` and
-    ``plans.enrich`` so one persisted :func:`pack_observations_columnar`
-    dim serves every dated consumer.
+    date offsets otherwise. :func:`attach_observations` calls it for every
+    broadcast dated consumer, so one persisted
+    :func:`pack_observations_columnar` dim serves them all.
 
     Returns probe columns + one column per ``_obsv_<name>`` array, named
     ``<name>``; any other column of ``packed`` is projected away before
@@ -749,7 +807,7 @@ def knn_station_join(
     + dist_m + rank; probes without GPS emit no rows. Arrow top-k →
     explode → broadcast payload join on ``_st_idx`` — all map stages, no
     probe shuffle."""
-    with_idx, st_indexed, kk = _knn_arrow_idx(images, stations, k=k, lon=lon, lat=lat)
+    with_idx, payload, kk = _knn_arrow_idx(images, stations, k, lon, lat)
     # fixed-width struct → one row per rank (JVM-side unpack, pure codegen)
     pairs = F.array(
         *[
@@ -762,20 +820,14 @@ def knn_station_join(
         ]
     )
     exploded = with_idx.select(
-        *[c for c in images.columns],
-        F.explode(pairs).alias("_p"),
-    ).select(
-        *[c for c in images.columns],
-        F.col("_p")["rank"].cast("int").alias("rank"),
-        _safe_idx(F.col("_p")["i"]).alias("_st_idx"),
-        _chord2_to_m(F.col("_p")["d"]).alias("dist_m"),
+        *images.columns, F.explode(pairs).alias("_p")
     ).filter(
         # GPS-less probes have no winners — they emit no rows
-        F.col("_st_idx").isNotNull()
-    )
-    joined = exploded.join(F.broadcast(st_indexed), "_st_idx", "left").drop("_st_idx")
+        _safe_idx(F.col("_p")["i"]).isNotNull()
+    ).withColumn("rank", F.col("_p")["rank"].cast("int"))
+    joined = _with_station(exploded, payload, "_p", "i", "d")
     return joined.select(
-        *[c for c in images.columns],
+        *images.columns,
         "rank",
         "station_id",
         *[c for c in stations.columns if c != "station_id"],

@@ -23,8 +23,13 @@ from pyspark.sql import functions as F
 
 from tiff_enrichment_pipeline_spark import grid
 from tiff_enrichment_pipeline_spark.functions.geo import gps_valid
+from tiff_enrichment_pipeline_spark.operators.elevation import elevation_join
 from tiff_enrichment_pipeline_spark.operators.geo_arrow import (
     fused_station_dem_lookup,
+)
+from tiff_enrichment_pipeline_spark.operators.knn_join import (
+    attach_observations,
+    knn_nearest,
 )
 from tiff_enrichment_pipeline_spark.operators.pip_join import landcover_pip_join
 
@@ -36,11 +41,6 @@ def enrich(
     dem_tiles: DataFrame,
     observations: DataFrame | None = None,
     ts: str = "captured_at",
-    res_low: int = grid.RES7,
-    res_mid: int = grid.RES8,
-    res_high: int = grid.RES9,
-    knn_res: int = 10,
-    knn_ring: int = 2,
     broadcast_dem: bool = True,
     broadcast_obs: bool = True,
     packed_obs: DataFrame | None = None,
@@ -50,111 +50,57 @@ def enrich(
     Output: input columns + cell_r7/9 (+ the PIP join's res-mid cell),
     polygon_id, land_cover_class, land_cover_confidence, weather struct,
     weather_station_id, elevation, elevation_source, elevation_accuracy_m,
-    enrich_status.
+    enrich_status. Cells are at ``grid.RES7/RES8/RES9``.
 
-    ``observations``: optional (station_id, obs_date)-keyed historical
-    weather dimension (reference's `weather_historical_date DATE` + JSONB
-    payload, scripts/create-tables.sql:129-132). When given, the weather
-    struct carries the observation for to_date(``ts``) at the nearest
-    station (composite spatio-temporal join, broadcast at dim scale) and a
-    ``weather_historical_date`` column is added; when None, the station's
-    static values are used (round-1 behavior).
+    ``observations`` / ``packed_obs``: optional dated weather — the
+    row-level (station_id, obs_date) dimension (reference's
+    `weather_historical_date DATE` + JSONB payload,
+    scripts/create-tables.sql:129-132) or its pre-built
+    ``knn_join.pack_observations_columnar`` pack, at most one. When given,
+    the weather struct carries the observation for to_date(``ts``) at the
+    nearest station and a ``weather_historical_date`` column is added;
+    when neither is, the station's static values are used.
+    ``knn_join.attach_observations`` does the attach and documents both
+    sources and ``broadcast_obs`` (False = a planetary dimension: a
+    row-level composite-key join left to AQE instead of the broadcast
+    pack).
 
-    ``res_low/mid/high``/``knn_res``/``knn_ring``: the EnrichConfig cell
-    resolutions and kNN bucket parameters (values exact for any setting).
     ``broadcast_dem=False``: planetary-DEM plan — 1-NN stations via the
     Arrow lookup, elevation via the sort-merge tile-key join
     (operators/elevation.py; AQE splits a hot tile) instead of the fused
     broadcast-grid UDF; use when the DEM exceeds broadcast size.
-
-    ``broadcast_obs=False``: planetary observation dimension
-    (|stations|×|days| can reach 1e9 rows — geotables.weather_observations
-    docstring) — drop the forced broadcast of the obs join and let AQE pick
-    the strategy; the composite (station_id, date) key is uniform, so the
-    shuffle is skew-free.
-
-    ``packed_obs``: pre-built per-station packed observation dimension
-    (operators.knn_join.pack_observations_columnar schema). On the
-    broadcast path the obs lookup (knn_join.packed_obs_lookup) broadcasts
-    |stations| rows of per-column payload arrays instead of a
-    |stations|×|days| row-keyed hash relation — and a pipeline running
-    this flagship alongside the standalone dated join reuses ONE
-    persisted pack for both. When ``observations`` is given instead, the
-    pack is built inline from it (same plan, plus the pack's one
-    dim-side shuffle). Requires
-    ``broadcast_obs=True``; the shuffle path keeps the row-level
-    composite-key join (a station-keyed packed shuffle would co-locate a
-    hot station's probes).
     """
     valid = gps_valid(F.col("lat"), F.col("lon"))
     with_gps = images.filter(valid)
     no_gps = images.filter(~F.coalesce(valid, F.lit(False)))
 
     cells = (
-        with_gps.withColumn("cell_r7", grid.cell_of(F.col("lon"), F.col("lat"), res_low))
-        .withColumn("cell_r9", grid.cell_of(F.col("lon"), F.col("lat"), res_high))
+        with_gps.withColumn("cell_r7", grid.cell_of(F.col("lon"), F.col("lat"), grid.RES7))
+        .withColumn("cell_r9", grid.cell_of(F.col("lon"), F.col("lat"), grid.RES9))
     )
 
-    lc = landcover_pip_join(cells, landcover, res=res_mid)
+    lc = landcover_pip_join(cells, landcover, res=grid.RES8)
 
     if broadcast_dem:
-        geo = fused_station_dem_lookup(
-            lc, stations, dem_tiles, knn_res=knn_res, knn_ring=knn_ring
-        )
+        geo = fused_station_dem_lookup(lc, stations, dem_tiles)
     else:
-        from tiff_enrichment_pipeline_spark.operators.elevation import (
-            elevation_join,
-        )
-        from tiff_enrichment_pipeline_spark.operators.knn_join import (
-            knn_nearest,
-        )
-
         geo = elevation_join(
-            knn_nearest(lc, stations, res=knn_res, ring=knn_ring),
-            dem_tiles,
-            broadcast_dem=False,
+            knn_nearest(lc, stations), dem_tiles, broadcast_dem=False
         )
     # weather as a STRUCT, not map<string,double>: the reference's JSONB
     # payload (create-tables.sql:129) is schemaless, but per-row string map
     # keys cost real allocation bandwidth at 10^8 rows; a typed struct
     # serializes as 4 doubles (to_json on it reproduces the JSONB shape)
     drop_cols = ["st_lon", "st_lat", "temp_c", "wind_ms", "precip_mm", "dist_m"]
-    if packed_obs is not None and not broadcast_obs:
-        raise ValueError("packed_obs requires broadcast_obs=True")
-    if packed_obs is not None and observations is not None:
-        # same contract as nearest_station_dated: silently preferring the
-        # pack would swap duplicate-key semantics (one row per dup under
-        # the row join, first-in-sorted-order under packing) without the
-        # caller noticing (r6 review)
-        raise ValueError(
-            "enrich() needs at most one of observations= (row-level dim) "
-            "or packed_obs= (pre-built pack_observations_columnar output)"
-        )
     if observations is not None or packed_obs is not None:
-        geo = geo.withColumn("weather_historical_date", F.to_date(F.col(ts)))
-        if broadcast_obs:
-            from tiff_enrichment_pipeline_spark.operators.knn_join import (
-                pack_observations_columnar,
-                packed_obs_lookup,
-            )
-
-            packed = (
-                packed_obs
-                if packed_obs is not None
-                else pack_observations_columnar(
-                    observations.withColumnRenamed(
-                        "obs_date", "weather_historical_date"
-                    )
-                )
-            )
-            geo = packed_obs_lookup(geo, packed)
-        else:
-            obs = observations.withColumnRenamed(
+        if observations is not None:
+            observations = observations.withColumnRenamed(
                 "obs_date", "weather_historical_date"
             )
-            geo = geo.join(
-                obs, ["station_id", "weather_historical_date"], "left"
-            )
+        geo = attach_observations(
+            geo.withColumn("weather_historical_date", F.to_date(F.col(ts))),
+            observations, packed_obs, broadcast_obs,
+        )
         weather = F.struct(
             F.col("obs_temp_c").alias("temp_c"),
             F.col("obs_wind_ms").alias("wind_ms"),

@@ -1,5 +1,5 @@
-"""Multimodal binary-column operators: resize / feature-extract /
-frame-sample / audio features over ``mapInPandas``.
+"""Multimodal binary-column operators: resize + feature-extract (one
+stage) / frame-sample / audio features over ``mapInPandas``.
 
 The build brief's multimodal contract: image/audio/video travel as opaque
 ``binary`` columns with typed metadata columns beside them; every pixel/
@@ -290,73 +290,21 @@ def _decode_audio(payload: bytes, fmt: str) -> tuple[np.ndarray, int | None]:
 # mapInPandas operators
 # ---------------------------------------------------------------------------
 
-RESIZE_SCHEMA = "image_id long, bytes binary, w int, h int, fmt string"
-
-
-def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """(image_id, bytes, w, h, fmt) → same shape at (out_w, out_h),
-    re-encoded raw-u16. One Arrow crossing; map-only."""
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_bytes: list = [None] * len(pdf)
-            for ix, stack in _decode_shape_groups(pdf):
-                resized = resize_bilinear_batch(stack, out_w, out_h)
-                for k, idx in enumerate(ix):
-                    out_bytes[idx] = codec.encode_raw_u16(resized[k])
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "bytes": out_bytes,
-                    "w": out_w,
-                    "h": out_h,
-                    "fmt": "raw-u16",
-                }
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        run, RESIZE_SCHEMA
-    )
-
-
 FEATURES_SCHEMA = (
     "image_id long, px_mean double, px_std double, px_p95 double, "
     "edge_energy double"
 )
 
 
-def extract_image_features(images: DataFrame) -> DataFrame:
-    """Typed feature columns per image — the feature-extract stage of a
-    training-data pipeline (dedup scoring / quality filtering inputs)."""
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            a = np.empty((len(pdf), 4), dtype=np.float64)
-            for ix, stack in _decode_shape_groups(pdf):
-                a[ix] = image_features_batch(stack)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "px_mean": a[:, 0],
-                    "px_std": a[:, 1],
-                    "px_p95": a[:, 2],
-                    "edge_energy": a[:, 3],
-                }
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        run, FEATURES_SCHEMA
-    )
-
-
 def resize_and_extract(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """FUSED resize→features: ONE Arrow crossing instead of two chained
-    mapInPandas stages, and no intermediate raw-u16 encode/decode
-    round-trip (raw-u16 is lossless, so values are bit-identical to
-    ``extract_image_features(resize_images(...))`` — pinned in
-    tests/test_multimodal.py). Use the separate stages when the resized
-    payloads themselves are a needed output; use this when only features
-    are."""
+    """Typed feature columns per image after a bilinear resize to
+    (out_w, out_h) — the resize + feature-extract stage of a
+    training-data pipeline (dedup scoring / quality filtering inputs).
+    ONE Arrow crossing, map-only, no intermediate re-encode; values are
+    bit-identical to ``image_features_np(resize_bilinear_np(...))`` per
+    image (pinned in tests/test_multimodal.py). Resizing to the native
+    size is the identity, so that gives the features of the image as
+    stored."""
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

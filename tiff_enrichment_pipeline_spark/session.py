@@ -29,6 +29,13 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # pass (plus C2 re-JIT of the fresh classes) against 2 at 2000, measured
 # on a 4-core host. 2000 holds that working set with room to spare.
 CODEGEN_CACHE_ENTRIES = 2000
+# spark.sql.autoBroadcastJoinThreshold; also the budget the kNN station
+# index is held to (operators/knn_join.MAX_INDEX_ENTRIES)
+BROADCAST_THRESHOLD_BYTES = 64 * 1024 * 1024
+# the directory holding the package: Python workers import it too (UDF
+# bodies call package functions), and a driver that found it through
+# sys.path alone does not pass that on to the workers it starts
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -41,7 +48,12 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
     the bench harness can run the identical job at two parallelism levels
-    (local[8] vs local[32]) for the scaling-efficiency evidence.
+    (local[8] vs local[32]) for the scaling-efficiency evidence. For the
+    masters it sets itself, the executors' ``PYTHONPATH`` gets the
+    package's root directory (Spark appends the driver's own
+    ``PYTHONPATH``), so workers import the package from any working
+    directory; ``master="inherit"`` leaves the executor environment to
+    the submitter.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -55,7 +67,9 @@ def get_spark(
     if master != "inherit":
         # "inherit": spark-submit / an existing session decides the master
         # (forcing local[N] would override a submitted cluster master)
-        builder = builder.master(master)
+        builder = builder.master(master).config(
+            "spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT
+        )
     # Scan split size stays at the 128 MB default: the sandbox testdata
     # ships one file per table with few row groups (lineitem 131 MB / 6
     # groups), so scans get 1-2 tasks — but an 8 MB split A/B at sf1.0
@@ -74,7 +88,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
         # Binary pixel payloads live in their own column; keep scans lean.
         .config("spark.sql.parquet.enableVectorizedReader", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.autoBroadcastJoinThreshold", str(BROADCAST_THRESHOLD_BYTES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
